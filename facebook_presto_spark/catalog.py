@@ -12,6 +12,8 @@ column pruning for free.
 from __future__ import annotations
 
 import os
+import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -90,8 +92,6 @@ def register_schema(spark: SparkSession, schema: str, sf_dir: str = DEFAULT_SF_D
     ConnectorMetadata.java:56 — Spark's session catalog provides the
     schema level; the catalog level is a name prefix).
     """
-    import re
-
     if not re.fullmatch(r"[A-Za-z_]\w*", schema):
         raise ValueError(f"invalid schema name: {schema}")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema}")
@@ -151,3 +151,105 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
         df.createOrReplaceTempView(name)
     _REGISTERED[key] = dfs
     return dfs
+
+
+# -- catalog listing ----------------------------------------------------------
+#
+# The reference's metadata listings (ConnectorMetadata.listSchemaNames /
+# listTables / getColumnHandles) answer from the metastore without touching a
+# worker.  PySpark's ``spark.catalog.listDatabases/listTables/listColumns``
+# run a JVM ``toLocalIterator`` (one Spark job each) and then one py4j round
+# trip per field of every listed object; a ``SHOW DATABASES`` / ``SHOW
+# TABLES`` command runs no job but still costs 15-40 ms of parsing, planning
+# and result transfer.  These read the session catalog directly, a handful of
+# round trips per call: names, and each relation's stored schema with its
+# partition/bucket column names (what ``listColumns`` reports), without
+# re-analyzing a view (a view over a parquet path would infer its schema
+# with a Spark job).
+
+
+class Relation(NamedTuple):
+    """One listed table or view; ``database`` is '' for a temp view."""
+
+    database: str
+    name: str
+
+    @property
+    def is_temp(self) -> bool:
+        return not self.database
+
+
+class ColumnInfo(NamedTuple):
+    name: str
+    data_type: str          # Spark simpleString ("decimal(12,2)", …)
+    nullable: bool
+    is_partition: bool
+    is_bucket: bool
+
+
+def list_databases(spark: SparkSession) -> list[str]:
+    """Names of the session catalog's databases."""
+    return _strings(_session_catalog(spark).listDatabases())
+
+
+def list_tables(spark: SparkSession, database: str | None = None) -> list[Relation]:
+    """What ``SHOW TABLES IN database`` reports (default: the current
+    database): the database's tables and views, then the session's temp
+    views."""
+    cat = _session_catalog(spark)
+    db = database or cat.getCurrentDatabase()
+    return [
+        Relation(db, name) for name in _names(cat.listTables(db, "*", False))
+    ] + [Relation("", name) for name in _names(cat.listLocalTempViews("*"))]
+
+
+def list_columns(spark: SparkSession, table: str | Relation) -> list[ColumnInfo]:
+    """Columns of ``table`` (a SQL name, or a listed ``Relation``) in
+    schema order, from the session catalog's metadata."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    if isinstance(table, Relation):
+        table = ".".join(_quote(p) for p in table if p)
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(table)
+    meta = state.catalog().getTempViewOrPermanentTableMetadata(ident)
+    schema = StructType.fromJson(json.loads(meta.schema().json()))
+    parts = set(_strings(meta.partitionColumnNames()))
+    bucket_spec = meta.bucketSpec()
+    buckets = (
+        set(_strings(bucket_spec.get().bucketColumnNames()))
+        if bucket_spec.isDefined() else set()
+    )
+    return [
+        ColumnInfo(f.name, f.dataType.simpleString(), f.nullable,
+                   f.name in parts, f.name in buckets)
+        for f in schema.fields
+    ]
+
+
+def _session_catalog(spark: SparkSession):
+    return spark._jsparkSession.sessionState().catalog()
+
+
+def _strings(jseq) -> list[str]:
+    text = jseq.mkString("\n")
+    return text.split("\n") if text else []
+
+
+# one backquoted part of a TableIdentifier's quoted form, "`db`.`t`"
+_QUOTED_PART = re.compile(r"`((?:[^`]|``)*)`(\.?)")
+
+
+def _names(jidentifiers) -> list[str]:
+    """The table names of a JVM Seq of TableIdentifiers."""
+    return [
+        m.group(1).replace("``", "`")
+        for m in _QUOTED_PART.finditer(jidentifiers.mkString("\n"))
+        if not m.group(2)
+    ]
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"

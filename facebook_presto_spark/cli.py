@@ -18,10 +18,13 @@ Interactive mode reads statements until ``;`` (continuation prompt
 prints aligned tables.  Errors print and the loop continues — same
 contract as Console.java's error handling.
 
-Scale note: batch output streams through ``toLocalIterator`` so a
-large SELECT never materializes on the driver (the same fix the
-protocol server got in round 3); interactive mode pages the first
-``--max-rows`` (default 1000) rows like the reference's pager.
+Scale note: rows come from ``server.result_rows``, the protocol
+server's rule.  A plan whose rows already sit in the driver (VALUES,
+SHOW/DESCRIBE commands, driver-built metadata results) is collected
+without a Spark job; every other plan streams through
+``toLocalIterator``, so a large SELECT never materializes on the
+driver.  Interactive mode pages the first ``--max-rows`` (default 1000)
+rows like the reference's pager.
 """
 
 from __future__ import annotations
@@ -116,7 +119,9 @@ def run_statement(engine, sql: str, fmt: str, out, max_rows: int | None) -> None
         df.collect()
         out.write("OK\n")
         return
-    rows = df.toLocalIterator()
+    from facebook_presto_spark.server import result_rows
+
+    rows = result_rows(df)
     if max_rows is not None:
         import itertools
 

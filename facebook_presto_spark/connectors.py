@@ -47,6 +47,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from facebook_presto_spark.session import local_dataframe
+
 _NAME = r"[A-Za-z_][A-Za-z0-9_]*"
 
 MEMORY_MAX_BYTES_DEFAULT = 128 << 20  # MemoryConfig.java:24
@@ -1115,8 +1117,8 @@ def dispatch(engine, sql: str) -> DataFrame | None:
         names = cats.memory.list_tables(
             m.group(1).lower() if m.group(1) else None
         )
-        return spark.createDataFrame(
-            [(n,) for n in names], "`Table` string"
+        return local_dataframe(
+            spark, [(n,) for n in names], "`Table` string"
         )
     m = _SHOW_JMX_RE.match(sql)
     if m:
@@ -1124,26 +1126,26 @@ def dispatch(engine, sql: str) -> DataFrame | None:
             cats.jmx.list_tables() if m.group(1).lower() == "current"
             else sorted(cats.jmx.history_tables)
         )
-        return spark.createDataFrame(
-            [(n,) for n in names], "`Table` string"
+        return local_dataframe(
+            spark, [(n,) for n in names], "`Table` string"
         )
     m = _SHOW_EXAMPLE_RE.match(sql)
     if m:
         names = cats.example.list_tables(
             m.group(1).lower() if m.group(1) else None
         )
-        return spark.createDataFrame(
-            [(n,) for n in names], "`Table` string"
+        return local_dataframe(
+            spark, [(n,) for n in names], "`Table` string"
         )
     m = _SHOW_TPCH_TABLES_RE.match(sql)
     if m:
         cats.tpch.schema_dir(m.group(1))  # validates the scale factor
-        return spark.createDataFrame(
-            [(n,) for n in sorted(cats.tpch.TABLES)], "`Table` string"
+        return local_dataframe(
+            spark, [(n,) for n in sorted(cats.tpch.TABLES)], "`Table` string"
         )
     if _SHOW_TPCH_SCHEMAS_RE.match(sql):
-        return spark.createDataFrame(
-            [(n,) for n in cats.tpch.list_schemas()], "`Schema` string"
+        return local_dataframe(
+            spark, [(n,) for n in cats.tpch.list_schemas()], "`Schema` string"
         )
     m = _SHOW_CATALOGS_RE.match(sql)
     if m:
@@ -1156,8 +1158,8 @@ def dispatch(engine, sql: str) -> DataFrame | None:
                 .replace("%", ".*").replace("_", ".") + "$"
             )
             names = [n for n in names if pat.match(n)]
-        return spark.createDataFrame(
-            [(n,) for n in names], "`Catalog` string"
+        return local_dataframe(
+            spark, [(n,) for n in names], "`Catalog` string"
         )
     m = _RENAME_RE.match(sql)
     if m:

@@ -31,6 +31,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from facebook_presto_spark.catalog import list_tables
+
 
 def create_table_as(
     spark: SparkSession,
@@ -123,8 +125,8 @@ def alter_table(spark: SparkSession, table: str, action: str, **kw) -> None:
     untouched; only the view definition changes).
     """
     is_temp = any(
-        t.name == table.split(".")[-1] and t.isTemporary
-        for t in spark.catalog.listTables()
+        rel.name == table.split(".")[-1] and rel.is_temp
+        for rel in list_tables(spark)
     )
     if action == "rename_table":
         target = kw["to"]
@@ -156,7 +158,7 @@ def alter_table(spark: SparkSession, table: str, action: str, **kw) -> None:
 
 def show_tables(spark: SparkSession) -> list[str]:
     """SHOW TABLES (execution/ShowTablesTask-equivalent via ShowQueriesRewrite)."""
-    return sorted(t.name for t in spark.catalog.listTables())
+    return sorted(rel.name for rel in list_tables(spark))
 
 
 def describe_table(spark: SparkSession, name: str) -> list[Row]:

@@ -26,8 +26,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from facebook_presto_spark.catalog import DEFAULT_SF_DIR, register_views
-from facebook_presto_spark.session import get_spark
+from facebook_presto_spark.catalog import (
+    DEFAULT_SF_DIR,
+    list_columns,
+    register_views,
+)
+from facebook_presto_spark.session import get_spark, local_dataframe
 from facebook_presto_spark.sqlfront import translate
 
 _PREPARE_RE = re.compile(r"^\s*PREPARE\s+([A-Za-z_]\w*)\s+FROM\s+(.+)$", re.I | re.S)
@@ -490,16 +494,18 @@ class PrestoSparkEngine:
             if name not in self._views:
                 raise ValueError(f"View '{m.group(1)}' does not exist")
             text = f"CREATE VIEW {name} AS\n{self._views[name]}"
-            return self.spark.createDataFrame(
-                [(text,)], "create_view string"
+            return local_dataframe(
+                self.spark, [(text,)], "create_view string"
             )
-        if infoschema.references_information_schema(presto_sql):
+        members = infoschema.referenced_members(presto_sql)
+        if members:
             # the reference populates information_schema from connector
             # metadata at query time (InformationSchemaPageSourceProvider);
-            # rebuild the views from the live catalog — metadata-only
+            # rebuild the members the statement names from the live
+            # catalog — metadata-only, no Spark job
             infoschema.refresh(
                 self.spark, privileges=self.grants.rows(),
-                view_definitions=self._views,
+                view_definitions=self._views, members=members,
             )
         if systemtables.references_system_runtime(presto_sql):
             # system.runtime.{queries,nodes,tasks} — rebuilt from the
@@ -579,8 +585,9 @@ class PrestoSparkEngine:
             from facebook_presto_spark.ddl import explain_analyze
 
             text = explain_analyze(self.sql(m.group(1)))
-            return self.spark.createDataFrame(
-                [(line,) for line in text.splitlines()], "query_plan string"
+            return local_dataframe(
+                self.spark, [(line,) for line in text.splitlines()],
+                "query_plan string",
             )
         m = _EXPLAIN_OPTS_RE.match(presto_sql)
         if m:
@@ -601,8 +608,9 @@ class PrestoSparkEngine:
             # surface; Spark-subsumed properties list with empty values
             from facebook_presto_spark.properties import PROPERTIES
 
-            return self.spark.createDataFrame(
-                [(name,) for name in sorted(PROPERTIES)], "name string"
+            return local_dataframe(
+                self.spark, [(name,) for name in sorted(PROPERTIES)],
+                "name string",
             )
         if _SHOW_FUNCTIONS_RE.match(presto_sql):
             # SHOW FUNCTIONS (ShowQueriesRewrite → FunctionRegistry listing);
@@ -613,7 +621,9 @@ class PrestoSparkEngine:
                 (n, "pandas_udf" if n in SLOW_PATH else "builtin")
                 for n in names()
             ]
-            return self.spark.createDataFrame(rows, "function_name string, implementation string")
+            return local_dataframe(
+                self.spark, rows, "function_name string, implementation string"
+            )
         m = _SHOW_STATS_RE.match(presto_sql)
         if m:
             name = m.group(1)
@@ -656,14 +666,15 @@ class PrestoSparkEngine:
                 n_params = sum(
                     1 for t in tokenize(body) if t.kind == "op" and t.text == "?"
                 )
-                return self.spark.createDataFrame(
-                    [(i, "unknown") for i in range(n_params)] or [],
+                return local_dataframe(
+                    self.spark, [(i, "unknown") for i in range(n_params)],
                     "position int, type string",
                 )
             # OUTPUT: analyze with NULL-bound parameters (DescribeOutputRewrite)
             bound = self._bind_nulls(body)
             schema = self.spark.sql(translate(bound)).schema
-            return self.spark.createDataFrame(
+            return local_dataframe(
+                self.spark,
                 [(f.name, f.dataType.simpleString()) for f in schema],
                 "column_name string, type string",
             )
@@ -721,7 +732,7 @@ class PrestoSparkEngine:
         payload = json.dumps(
             {"inputTableColumnInfos": infos, "outputTable": None}
         )
-        return self.spark.createDataFrame([(payload,)], "query_plan string")
+        return local_dataframe(self.spark, [(payload,)], "query_plan string")
 
     def _show_stats(self, df: DataFrame) -> DataFrame:
         """SHOW STATS FOR <table> | (query) (SqlBase.g4:82-83,
@@ -762,8 +773,8 @@ class PrestoSparkEngine:
                 d.get(f"__hi_{c}"),
             ))
         out.append((None, None, None, None, float(row["__n"]), None, None))
-        return self.spark.createDataFrame(
-            out,
+        return local_dataframe(
+            self.spark, out,
             "column_name string, data_size double, distinct_values_count double, "
             "nulls_fraction double, row_count double, low_value string, high_value string",
         )
@@ -787,8 +798,8 @@ class PrestoSparkEngine:
             else:
                 out.append((f.name, None, None, None, None, None, None))
         out.append((None, None, None, None, float(total), None, None))
-        return self.spark.createDataFrame(
-            out,
+        return local_dataframe(
+            self.spark, out,
             "column_name string, data_size double, distinct_values_count double, "
             "nulls_fraction double, row_count double, low_value string, high_value string",
         )
@@ -835,9 +846,9 @@ class PrestoSparkEngine:
             }.get("Provider", "parquet")
             props.append(f"format = '{provider.upper()}'")
         try:
-            columns = self.spark.catalog.listColumns(name)
-            parts = [c.name for c in columns if c.isPartition]
-            buckets = [c.name for c in columns if c.isBucket]
+            columns = list_columns(self.spark, name)
+            parts = [c.name for c in columns if c.is_partition]
+            buckets = [c.name for c in columns if c.is_bucket]
             if parts:
                 quoted = ", ".join(f"'{p}'" for p in parts)
                 props.append(f"partitioned_by = ARRAY[{quoted}]")
@@ -856,8 +867,8 @@ class PrestoSparkEngine:
             pass
         if props:
             text += "\nWITH (\n   " + ",\n   ".join(props) + "\n)"
-        return self.spark.createDataFrame(
-            [(text,)], "`Create Table` string"
+        return local_dataframe(
+            self.spark, [(text,)], "`Create Table` string"
         )
 
     def _alter_schema(self, old: str, new: str) -> DataFrame:

@@ -43,11 +43,13 @@ import re
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from facebook_presto_spark import catalog as spark_catalog
 from facebook_presto_spark.connectors import (
     _parse_presto_type,
     _split_literals,
     _sub_outside_literals,
 )
+from facebook_presto_spark.session import local_dataframe
 
 _NAME = r'[A-Za-z_]\w*|"[^"]+"'
 
@@ -119,11 +121,11 @@ class HiveCatalog:
         self.spark.sql(f"CREATE DATABASE {self.db_name(schema)}")
 
     def _db_tables(self, db: str) -> list[str]:
-        # listTables(db) also reports session temp views — keep only the
-        # database's own catalog tables
+        # list_tables(db) also reports session temp views — keep only
+        # the database's own catalog tables
         return sorted(
-            t.name for t in self.spark.catalog.listTables(db)
-            if t.tableType != "TEMPORARY" and t.database == db
+            rel.name for rel in spark_catalog.list_tables(self.spark, db)
+            if not rel.is_temp
         )
 
     def drop_schema(self, schema: str, if_exists: bool) -> None:
@@ -138,9 +140,9 @@ class HiveCatalog:
 
     def list_schemas(self) -> list[str]:
         return sorted(
-            d.name[len("hive_"):]
-            for d in self.spark.catalog.listDatabases()
-            if d.name.startswith("hive_")
+            d[len("hive_"):]
+            for d in spark_catalog.list_databases(self.spark)
+            if d.startswith("hive_")
         )
 
     def list_tables(self, schema: str | None) -> list[str]:
@@ -304,10 +306,10 @@ class HiveCatalog:
             )
         part_cols = [
             c.name
-            for c in self.spark.catalog.listColumns(
-                self.qualified(schema, table)
+            for c in spark_catalog.list_columns(
+                self.spark, self.qualified(schema, table)
             )
-            if c.isPartition
+            if c.is_partition
         ]
         self.spark.sql(
             f"ALTER TABLE {self.qualified(schema, table)} "
@@ -330,7 +332,9 @@ class HiveCatalog:
     def _columns(self, schema: str, table: str):
         if not self._exists(schema, table):
             raise ValueError(f"Table hive.{schema}.{table} does not exist")
-        return self.spark.catalog.listColumns(self.qualified(schema, table))
+        return spark_catalog.list_columns(
+            self.spark, self.qualified(schema, table)
+        )
 
     def add_column(self, schema: str, table: str, col: str,
                    presto_type: str) -> None:
@@ -356,7 +360,7 @@ class HiveCatalog:
             raise ValueError(f"Column already exists: {new}")
         if old not in by_name:
             raise ValueError(f"Column '{old}' does not exist")
-        if by_name[old].isPartition:
+        if by_name[old].is_partition:
             raise ValueError("Renaming partition columns is not supported")
 
         def fix_props(props: dict) -> dict:
@@ -377,10 +381,10 @@ class HiveCatalog:
         by_name = {c.name: c for c in cols}
         if col not in by_name:
             raise ValueError(f"Column '{col}' does not exist")
-        if by_name[col].isPartition:
+        if by_name[col].is_partition:
             # MetastoreUtil.verifyCanDropColumn texts
             raise ValueError("Cannot drop partition columns")
-        if sum(1 for c in cols if not c.isPartition) <= 1:
+        if sum(1 for c in cols if not c.is_partition) <= 1:
             raise ValueError(
                 "Cannot drop the only non-partition column in a table"
             )
@@ -393,13 +397,13 @@ class HiveCatalog:
         props = dict(self.table_props.get((schema, table), {}))
         if "partitioned_by" not in props:
             parts = [
-                c.name for c in self._columns(schema, table) if c.isPartition
+                c.name for c in self._columns(schema, table) if c.is_partition
             ]
             if parts:
                 props["partitioned_by"] = parts
         if "bucketed_by" not in props:
             buckets = [
-                c.name for c in self._columns(schema, table) if c.isBucket
+                c.name for c in self._columns(schema, table) if c.is_bucket
             ]
             if buckets:
                 props["bucketed_by"] = buckets
@@ -466,7 +470,7 @@ class HiveCatalog:
         loc = self._describe_extended(schema, table).get("Location", "")
         loc = loc.removeprefix("file:")
         part_cols = [
-            c.name for c in self._columns(schema, table) if c.isPartition
+            c.name for c in self._columns(schema, table) if c.is_partition
         ]
         per_part: dict[tuple, int] = {}
         total = 0
@@ -540,8 +544,8 @@ class HiveCatalog:
             raise ValueError(f"Table hive.{schema}.{table} does not exist")
         qualified = self.qualified(schema, table)
         part_cols = [
-            c.name for c in self.spark.catalog.listColumns(qualified)
-            if c.isPartition
+            c.name for c in spark_catalog.list_columns(self.spark, qualified)
+            if c.is_partition
         ]
         if pred is None:
             n = self.spark.table(qualified).count()
@@ -603,8 +607,8 @@ class HiveCatalog:
             raise ValueError(f"Table hive.{schema}.{table} does not exist")
         qualified = self.qualified(schema, table)
         part_cols = [
-            c.name for c in self.spark.catalog.listColumns(qualified)
-            if c.isPartition
+            c.name for c in spark_catalog.list_columns(self.spark, qualified)
+            if c.is_partition
         ]
         if not part_cols:
             raise ValueError(
@@ -778,14 +782,14 @@ def dispatch(engine, sql: str) -> DataFrame | None:
         cat.drop_schema(_strip(m.group(2)), bool(m.group(1)))
         return _ok(spark)
     if _SHOW_SCHEMAS_RE.match(sql):
-        return spark.createDataFrame(
-            [(s,) for s in cat.list_schemas()], "`Schema` string"
+        return local_dataframe(
+            spark, [(s,) for s in cat.list_schemas()], "`Schema` string"
         )
     m = _SHOW_TABLES_RE.match(sql)
     if m:
         names = cat.list_tables(_strip(m.group(1)) if m.group(1) else None)
-        return spark.createDataFrame(
-            [(n,) for n in names], "`Table` string"
+        return local_dataframe(
+            spark, [(n,) for n in names], "`Table` string"
         )
     m = _ADD_COL_RE.match(sql)
     if m:

@@ -8,18 +8,30 @@ populated from connector metadata at query time
 
 Spark twin: a real ``information_schema`` database whose members are
 CREATE OR REPLACE VIEWs over literal VALUES rebuilt from the session
-catalog immediately before any query that references the schema runs.
+catalog immediately before any query that references them runs — only
+the members the statement names, each costing a view definition.
 This keeps the semantics (always-current metadata, filterable with
-ordinary predicates) while staying metadata-only — no table data is ever
-scanned, so the cost is independent of data volume (the same property the
-reference gets from serving these tables out of the metastore).
+ordinary predicates) while staying metadata-only: the listing goes
+through ``catalog.list_*``, which launches no Spark job and scans no
+table data, so the cost is independent of data volume (the same
+property the reference gets from serving these tables out of the
+metastore).
 """
 
 from __future__ import annotations
 
 import re
+import threading
+from collections.abc import Iterable
 
 from pyspark.sql import SparkSession
+
+from facebook_presto_spark.catalog import (
+    Relation,
+    list_columns,
+    list_databases,
+    list_tables,
+)
 
 CATALOG_NAME = "spark"
 
@@ -47,11 +59,12 @@ TABLE_SCHEMAS = {
     ),
 }
 
-_REFERENCES_RE = re.compile(r"\binformation_schema\s*\.", re.I)
+_MEMBER_RE = re.compile(r"\binformation_schema\s*\.\s*[\"`]?(\w+)", re.I)
 
 
-def references_information_schema(sql: str) -> bool:
-    return bool(_REFERENCES_RE.search(sql))
+def referenced_members(sql: str) -> set[str]:
+    """The information_schema members ``sql`` names."""
+    return {m.lower() for m in _MEMBER_RE.findall(sql)} & TABLE_SCHEMAS.keys()
 
 
 def presto_type_name(spark_type: str) -> str:
@@ -111,17 +124,35 @@ def presto_type_name(spark_type: str) -> str:
 
 
 def _q(value) -> str:
-    """Render one Python value as a SQL literal for a VALUES row."""
+    """Render one Python value as a SQL literal for a VALUES row (the
+    view casts each column to its declared type once)."""
     if value is None:
-        return "CAST(NULL AS STRING)"
+        return "NULL"
     if isinstance(value, bool):
         return "TRUE" if value else "FALSE"
     if isinstance(value, int):
-        return f"CAST({value} AS BIGINT)"
+        return str(value)
     return "'" + str(value).replace("'", "''") + "'"
 
 
+# member -> the rows its view was last defined over; a member whose
+# rows have not changed keeps its view (defining one costs 35-70 ms)
+_BUILT: dict[str, list[tuple]] = {}
+_BUILD_LOCK = threading.Lock()
+
+
 def _values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
+    with _BUILD_LOCK:
+        if _BUILT.get(name) == rows and spark.catalog.tableExists(
+            f"information_schema.{name}"
+        ):
+            return
+        spark.sql("CREATE DATABASE IF NOT EXISTS information_schema")
+        _define_view(spark, name, rows)
+        _BUILT[name] = rows
+
+
+def _define_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
     schema = TABLE_SCHEMAS[name]
     cols = [f.split()[0] for f in schema.split(", ")]
     types = [f.split()[1] for f in schema.split(", ")]
@@ -129,7 +160,14 @@ def _values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
         values = ", ".join(
             "(" + ", ".join(_q(v) for v in row) + ")" for row in rows
         )
-        body = f"SELECT * FROM (VALUES {values}) AS t({', '.join(cols)})"
+        # queries re-parse the view text, so literals stay bare and
+        # each column is cast once
+        casts = ", ".join(
+            f"CAST({c} AS {t}) AS {c}" for c, t in zip(cols, types)
+        )
+        body = (
+            f"SELECT {casts} FROM (VALUES {values}) AS t({', '.join(cols)})"
+        )
     else:
         nulls = ", ".join(
             f"CAST(NULL AS {t}) AS {c}" for c, t in zip(cols, types)
@@ -140,90 +178,97 @@ def _values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
 
 def refresh(spark: SparkSession, catalog_name: str = CATALOG_NAME,
             privileges: list[tuple] | None = None,
-            view_definitions: dict[str, str] | None = None) -> None:
-    """(Re)build the information_schema views from the live session catalog.
+            view_definitions: dict[str, str] | None = None,
+            members: Iterable[str] = tuple(TABLE_SCHEMAS)) -> None:
+    """(Re)build the information_schema ``members`` (default: all) from
+    the live session catalog.
 
-    Metadata-only: listDatabases/listTables/listColumns — no data reads.
-    Temp views (how the engine registers parquet tables) surface under the
-    current database, mirroring how the reference resolves unqualified
-    names against the session schema.
+    Metadata-only and job-free (catalog.list_databases / list_tables /
+    list_columns); a member whose rows are unchanged keeps its view.
+    Temp views (how the engine registers parquet tables) surface under
+    the current database, mirroring how the reference resolves
+    unqualified names against the session schema.
     """
-    spark.sql("CREATE DATABASE IF NOT EXISTS information_schema")
-
+    members = set(members)
+    if not members:
+        return
     current_db = spark.catalog.currentDatabase()
-    databases = [d.name for d in spark.catalog.listDatabases()]
-
-    schemata = [
-        ("hive", d[len("hive_"):]) if d.startswith("hive_")
-        else (catalog_name, d)
-        for d in sorted(set(databases))
-    ]
-
-    tables_rows: list[tuple] = []
-    columns_rows: list[tuple] = []
-    seen: set[tuple[str, str]] = set()
-
     view_defs = view_definitions or {}
 
-    def add_table(db: str, table: str, is_temp: bool) -> None:
-        if (db, table) in seen:
-            return
-        seen.add((db, table))
-        kind = "VIEW" if table.lower() in view_defs else "BASE TABLE"
+    def presto_schema(db: str) -> tuple[str, str]:
         # hive-catalog databases present under their Presto names:
         # catalog 'hive', schema without the implementation prefix
         # (the reference serves a per-catalog information_schema)
         if db.startswith("hive_"):
-            cat, schema_name = "hive", db[len("hive_"):]
-        else:
-            cat, schema_name = catalog_name, db
-        tables_rows.append((cat, schema_name, table, kind))
-        try:
-            cols = spark.catalog.listColumns(
-                table if is_temp else f"{db}.{table}"
-            )
-        except Exception:
-            return
-        for pos, c in enumerate(cols, start=1):
-            columns_rows.append((
-                cat, schema_name, table, c.name, pos, None,
-                "YES" if c.nullable else "NO",
-                presto_type_name(c.dataType), None,
-                # HiveUtil.java:867 — partition keys surface their role
-                "partition key" if getattr(c, "isPartition", False)
-                else None,
-            ))
+            return "hive", db[len("hive_"):]
+        return catalog_name, db
 
-    for t in spark.catalog.listTables():
-        # skip our own members when the current database is information_schema
-        if (t.database or current_db) == "information_schema":
-            continue
-        if t.tableType == "TEMPORARY" or not t.database:
-            add_table(current_db, t.name, is_temp=True)
-        else:
-            add_table(t.database, t.name, is_temp=False)
-    for db in databases:
-        if db in ("information_schema",):
-            continue
-        try:
-            listed = spark.catalog.listTables(db)
-        except Exception:
-            continue
-        for t in listed:
-            if t.tableType == "TEMPORARY" or not t.database:
+    databases = (
+        list_databases(spark) if members & {"schemata", "tables", "columns"}
+        else []
+    )
+    listed = (
+        _list_relations(spark, databases, current_db)
+        if members & {"tables", "columns"} else []
+    )
+    if "schemata" in members:
+        _values_view(spark, "schemata", [
+            presto_schema(d) for d in sorted(set(databases))
+        ])
+    if "tables" in members:
+        _values_view(spark, "tables", [
+            (*presto_schema(db), rel.name,
+             "VIEW" if rel.name.lower() in view_defs else "BASE TABLE")
+            for db, rel in listed
+        ])
+    if "columns" in members:
+        columns_rows: list[tuple] = []
+        for db, rel in listed:
+            try:
+                cols = list_columns(spark, rel)
+            except Exception:
                 continue
-            add_table(db, t.name, is_temp=False)
+            for pos, c in enumerate(cols, start=1):
+                columns_rows.append((
+                    *presto_schema(db), rel.name, c.name, pos, None,
+                    "YES" if c.nullable else "NO",
+                    presto_type_name(c.data_type), None,
+                    # HiveUtil.java:867 — partition keys surface their role
+                    "partition key" if c.is_partition else None,
+                ))
+        _values_view(spark, "columns", columns_rows)
+    if "views" in members:
+        # fed from the engine's view-definition store (Presto-dialect
+        # text, like MetadataManager.getViews serves ViewDefinition);
+        # those names also flip to table_type='VIEW' in `tables` above
+        _values_view(spark, "views", [
+            (catalog_name, current_db, name, definition)
+            for name, definition in sorted(view_defs.items())
+        ])
+    if "table_privileges" in members:
+        # fed from the engine's GrantRegistry (access.py) — the reference
+        # populates this from connector grant metadata
+        _values_view(spark, "table_privileges", privileges or [])
 
-    _values_view(spark, "schemata", schemata)
-    _values_view(spark, "tables", tables_rows)
-    _values_view(spark, "columns", columns_rows)
-    # fed from the engine's view-definition store (Presto-dialect text,
-    # like MetadataManager.getViews serves ViewDefinition) — round 4;
-    # those names also flip to table_type='VIEW' in `tables` above
-    _values_view(spark, "views", [
-        (catalog_name, current_db, name, definition)
-        for name, definition in sorted(view_defs.items())
-    ])
-    # fed from the engine's GrantRegistry (access.py) — the reference
-    # populates this from connector grant metadata
-    _values_view(spark, "table_privileges", privileges or [])
+
+def _list_relations(spark: SparkSession, databases: list[str],
+                    current_db: str) -> list[tuple[str, Relation]]:
+    """(database shown, relation) for every table and view: the current
+    database's listing first, with the temp views under its name, then
+    the tables of every other database; information_schema's own members
+    never list."""
+    out: dict[tuple[str, str], Relation] = {}
+    if current_db != "information_schema":
+        for rel in list_tables(spark):
+            out.setdefault((current_db, rel.name), rel)
+    for db in databases:
+        if db in ("information_schema", current_db):
+            continue
+        try:
+            listed = list_tables(spark, db)
+        except Exception:
+            continue
+        for rel in listed:
+            if not rel.is_temp:
+                out.setdefault((db, rel.name), rel)
+    return [(db, rel) for (db, _), rel in out.items()]

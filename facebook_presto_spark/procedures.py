@@ -88,6 +88,7 @@ def _split_args(text: str) -> list[str]:
 
 def _hive_create_empty_partition(engine, args: dict) -> None:
     """CreateEmptyPartitionProcedure.createEmptyPartition (:88-130)."""
+    from facebook_presto_spark.catalog import list_columns
     from facebook_presto_spark.hive_catalog import get_catalog
 
     spark = engine.spark
@@ -105,7 +106,7 @@ def _hive_create_empty_partition(engine, args: dict) -> None:
         raise ValueError(f"Table hive.{schema}.{table} does not exist")
     qualified = cat.qualified(schema, table)
     actual = [
-        c.name for c in spark.catalog.listColumns(qualified) if c.isPartition
+        c.name for c in list_columns(spark, qualified) if c.is_partition
     ]
     if list(part_cols) != actual or len(part_vals) != len(actual):
         # CreateEmptyPartitionProcedure.java:98 (INVALID_PROCEDURE_ARGUMENT)

@@ -14,6 +14,17 @@ client loop expects: keep GETting ``nextUri`` until it disappears,
 DELETE cancels.  ``X-Presto-Session: k=v,...`` headers apply the same
 session-property surface ``SET SESSION`` uses (properties.py).
 
+How rows leave Spark depends on the physical plan (``result_rows``): a
+plan whose root already holds its rows in the driver (a
+``LocalTableScanExec`` — VALUES, small driver-built metadata results —
+or a ``CommandResultExec`` — SHOW TABLES, DESCRIBE and other commands)
+is answered by ``collect()``, which launches no Spark job, the way the
+reference answers metadata statements on the coordinator.  Every other
+plan streams through ``toLocalIterator``, so the driver holds at most
+one partition plus one page.  Non-finite doubles go on the wire as the
+strings ``"NaN"``, ``"Infinity"`` and ``"-Infinity"``, as the reference
+writes them, so every response is strict JSON.
+
 Usage::
 
     from facebook_presto_spark.server import serve
@@ -28,6 +39,7 @@ import base64
 import datetime as dt
 import decimal
 import json
+import math
 import re
 import threading
 import uuid
@@ -37,10 +49,34 @@ from facebook_presto_spark.infoschema import presto_type_name
 
 PAGE_SIZE = 1000
 
+# physical roots whose rows already sit in the driver: collect() serves
+# them without launching a Spark job
+_DRIVER_LOCAL_ROOTS = frozenset({"LocalTableScanExec", "CommandResultExec"})
+
+
+def result_rows(df):
+    """Iterator over the rows of ``df`` for a client.
+
+    Driver-local plans (see ``_DRIVER_LOCAL_ROOTS``) are collected: the
+    rows are already in the driver, and ``collect()`` runs no job where
+    ``toLocalIterator`` runs one per partition.  Every other plan streams
+    partition by partition through ``toLocalIterator``.
+    """
+    root = df._jdf.queryExecution().executedPlan()
+    if root.getClass().getSimpleName() in _DRIVER_LOCAL_ROOTS:
+        return iter(df.collect())
+    return df.toLocalIterator()
+
 
 def _json_cell(v):
-    if v is None or isinstance(v, (bool, int, float, str)):
+    if v is None or isinstance(v, (bool, int, str)):
         return v
+    if isinstance(v, float):
+        if math.isfinite(v):
+            return v
+        # JSON has no NaN/Infinity tokens; the reference writes these
+        # strings and its client parses them back (FixJsonDataUtils)
+        return "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
     if isinstance(v, decimal.Decimal):
         return str(v)
     if isinstance(v, dt.datetime):
@@ -62,9 +98,11 @@ def _json_cell(v):
 
 class _Query:
     """Streaming paging state: rows are pulled lazily from
-    ``df.toLocalIterator()`` one page at a time, like the reference's
+    ``result_rows(df)`` one page at a time, like the reference's
     root-stage page flow (StatementResource.java:84 streams pages from
-    the output buffer — it never materializes the result).  Only the
+    the output buffer — it never materializes the result).  For plans
+    that stream, that is ``toLocalIterator``; driver-local plans hand
+    over their collected rows, which the driver held already.  Only the
     most recently produced page is retained (for idempotent client
     retries of the current nextUri); older pages are gone, matching the
     reference's consume-once buffer."""
@@ -111,7 +149,7 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _reply(self, payload: dict, code: int = 200,
                headers: dict | None = None) -> None:
-        body = json.dumps(payload).encode()
+        body = json.dumps(payload, allow_nan=False).encode()
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
@@ -274,9 +312,7 @@ class _Handler(BaseHTTPRequestHandler):
             if engine.path_event is not None:
                 reply_headers["X-Presto-Set-Path"] = engine.path_event
             schema = df.schema
-            # toLocalIterator streams partition-by-partition: the driver
-            # holds at most one partition + one page, never the result
-            rows = df.toLocalIterator()
+            rows = result_rows(df)
             columns = [
                 {"name": f.name, "type": presto_type_name(f.dataType.simpleString())}
                 for f in schema.fields

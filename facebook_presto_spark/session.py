@@ -16,9 +16,10 @@ session factory's job is only to pick configs that hold at scale:
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -70,6 +71,36 @@ def get_spark(app_name: str = "facebook_presto_spark", cpus: str | int | None = 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@functools.lru_cache(maxsize=64)
+def _ddl_schemas(ddl: str):
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def local_dataframe(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small driver-built result (``rows`` of tuples matching the DDL
+    schema ``ddl``) as a DataFrame over a ``LocalRelation``.
+
+    ``createDataFrame(list)`` parallelizes its rows into an RDD, so every
+    read of the result runs Spark jobs.  From a pyarrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps the
+    rows in the plan instead: the physical root is a ``LocalTableScanExec``
+    and ``collect()`` answers without a job (see ``server.result_rows``).
+    """
+    import pyarrow as pa
+
+    struct, arrow = _ddl_schemas(ddl)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def stop_spark() -> None:

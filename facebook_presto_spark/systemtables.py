@@ -403,14 +403,19 @@ def _jdbc_values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None
 def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
                  view_names: set[str] | None = None) -> None:
     """(Re)build system_jdbc.* from the live catalog — the JDBC
-    DatabaseMetaData surface, fed by the same listTables/listColumns
-    walk information_schema uses (metadata-only, no data reads)."""
+    DatabaseMetaData surface, fed by the same job-free catalog listing
+    information_schema uses (metadata-only, no data reads)."""
+    from facebook_presto_spark.catalog import (
+        list_columns,
+        list_databases,
+        list_tables,
+    )
     from facebook_presto_spark.infoschema import presto_type_name
 
     spark.sql("CREATE DATABASE IF NOT EXISTS system_jdbc")
     views = {v.lower() for v in (view_names or set())}
     current_db = spark.catalog.currentDatabase()
-    databases = sorted({d.name for d in spark.catalog.listDatabases()})
+    databases = sorted(set(list_databases(spark)))
 
     _jdbc_values_view(spark, "catalogs", [(catalog_name,)])
     _jdbc_values_view(
@@ -422,27 +427,24 @@ def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
 
     tables_rows: list[tuple] = []
     columns_rows: list[tuple] = []
-    for t in spark.catalog.listTables():
-        db = t.database or current_db
+    for rel in list_tables(spark):
+        db = rel.database or current_db
         if db in ("information_schema", "system_runtime", "system_jdbc"):
             continue
-        kind = "VIEW" if t.name.lower() in views else "TABLE"
+        kind = "VIEW" if rel.name.lower() in views else "TABLE"
         tables_rows.append((
-            catalog_name, db, t.name, kind,
+            catalog_name, db, rel.name, kind,
             None, None, None, None, None, None,
         ))
         try:
-            cols = spark.catalog.listColumns(
-                t.name if (t.tableType == "TEMPORARY" or not t.database)
-                else f"{db}.{t.name}"
-            )
+            cols = list_columns(spark, rel)
         except Exception:
             continue
         for pos, c in enumerate(cols, start=1):
-            pname = presto_type_name(c.dataType)
+            pname = presto_type_name(c.data_type)
             code, size, digits, radix = _jdbc_type_row(pname)
             columns_rows.append((
-                catalog_name, db, t.name, c.name,
+                catalog_name, db, rel.name, c.name,
                 code, pname, size, None, digits, radix,
                 1 if c.nullable else 0, None, None, None, None, None,
                 pos, "YES" if c.nullable else "NO",

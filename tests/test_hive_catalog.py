@@ -191,6 +191,63 @@ def test_describe_and_infoschema_partition_key(eng, spark):
     assert info["r_name"] is None
 
 
+def test_infoschema_refresh_starts_no_spark_job(eng, spark, spark_jobs):
+    """information_schema is rebuilt from catalog metadata alone — the
+    listing runs no Spark job, for hive tables and temp views alike."""
+    from facebook_presto_spark import infoschema
+
+    eng.sql("CREATE SCHEMA IF NOT EXISTS hive.web")
+    eng.sql("""
+        CREATE TABLE hive.web.jobs_p
+        WITH (partitioned_by = ARRAY['r_regionkey'])
+        AS SELECT r_name, r_regionkey FROM region
+    """)
+    with spark_jobs() as jobs:
+        infoschema.refresh(spark, view_definitions=eng._views)
+    assert jobs.count == 0
+
+
+def test_infoschema_members_rebuilt_on_demand(eng, spark):
+    """One statement naming information_schema.tables and .columns
+    rebuilds exactly those members, and the listing still reports hive
+    partition keys, temp views and views."""
+    eng.sql("CREATE SCHEMA IF NOT EXISTS hive.web")
+    eng.sql("""
+        CREATE TABLE hive.web.od_p
+        WITH (partitioned_by = ARRAY['r_regionkey'])
+        AS SELECT r_name, r_regionkey FROM region
+    """)
+    eng.sql("CREATE VIEW v_on_demand AS SELECT n_name FROM nation")
+    spark.sql("DROP VIEW IF EXISTS information_schema.schemata")
+    try:
+        rows = eng.sql("""
+            SELECT t.table_catalog, t.table_schema, t.table_name,
+                   t.table_type, c.column_name, c.extra_info
+            FROM information_schema.tables t
+            JOIN information_schema.columns c
+              ON t.table_catalog = c.table_catalog
+             AND t.table_schema = c.table_schema
+             AND t.table_name = c.table_name
+        """).collect()
+    finally:
+        eng.sql("DROP VIEW v_on_demand")
+    got = {
+        (r.table_catalog, r.table_schema, r.table_name, r.column_name):
+            (r.table_type, r.extra_info)
+        for r in rows
+    }
+    current = spark.catalog.currentDatabase()
+    assert got[("hive", "web", "od_p", "r_regionkey")] == (
+        "BASE TABLE", "partition key"
+    )
+    assert got[("hive", "web", "od_p", "r_name")] == ("BASE TABLE", None)
+    # the engine's parquet tables are temp views under the current schema
+    assert got[("spark", current, "nation", "n_name")] == ("BASE TABLE", None)
+    assert got[("spark", current, "v_on_demand", "n_name")] == ("VIEW", None)
+    # schemata was not named, so it was not rebuilt
+    assert not spark.catalog.tableExists("information_schema.schemata")
+
+
 def test_show_create_table_renders_properties(eng):
     eng.sql("CREATE SCHEMA IF NOT EXISTS hive.web")
     eng.sql("""

@@ -128,6 +128,73 @@ def test_large_result_streams_pages(server):
     assert len(q._page) <= 1000
 
 
+@pytest.mark.parametrize("sql", [
+    "SHOW TABLES",
+    "DESCRIBE nation",
+    "SHOW FUNCTIONS",
+    "SHOW SESSION",
+    "SET SESSION hash_partition_count = 7",
+])
+def test_metadata_statement_starts_no_spark_job(server, spark_jobs, sql):
+    """Metadata answers from the driver, like the reference's
+    coordinator-local ShowQueriesRewrite: the plan already holds its
+    rows, so serving them over the protocol starts no Spark job."""
+    from facebook_presto_spark.properties import restore_confs, snapshot_confs
+
+    snap = snapshot_confs(server.engine.spark, ["hash_partition_count"])
+    try:
+        with spark_jobs() as jobs:
+            res = _post(server, sql)
+            rows = _drain(server, res)
+    finally:
+        restore_confs(server.engine.spark, snap)
+    assert res["error"] is None
+    assert sql.startswith("SET") or rows
+    assert jobs.count == 0
+
+
+def test_driver_local_result_pages(server, spark_jobs):
+    """A driver-local result longer than one page still pages through
+    nextUri, in order, and is evicted after its last page."""
+    values = ", ".join(f"({i}, 'r{i}')" for i in range(2500))
+    with spark_jobs() as jobs:
+        res = _post(server, f"SELECT * FROM (VALUES {values}) AS t(i, s)")
+        qid = res["id"]
+        assert len(res["data"]) == 1000 and "nextUri" in res
+        assert qid in server.queries
+        rows = _drain(server, res)
+    assert rows == [[i, f"r{i}"] for i in range(2500)]
+    assert qid not in server.queries
+    assert jobs.count == 0
+
+
+def test_non_finite_doubles_are_strict_json(server):
+    """NaN and ±Infinity travel as the strings the reference writes
+    (its client's FixJsonDataUtils parses them back): the body is strict
+    JSON that Jackson-style parsers accept."""
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{server.server_port}/v1/statement",
+        data=(
+            b"SELECT nan() AS d_nan, infinity() AS d_inf, "
+            b"-infinity() AS d_ninf, CAST(nan() AS REAL) AS r_nan, "
+            b"CAST(infinity() AS REAL) AS r_inf, "
+            b"CAST(-infinity() AS REAL) AS r_ninf"
+        ),
+        method="POST",
+        headers={"X-Presto-User": "test"},
+    )
+    with urllib.request.urlopen(req) as r:
+        body = r.read().decode()
+
+    def reject(token):
+        raise ValueError(f"non-standard JSON token {token}")
+
+    res = json.loads(body, parse_constant=reject)
+    assert res["error"] is None
+    assert [c["type"] for c in res["columns"]] == ["double"] * 3 + ["real"] * 3
+    assert res["data"] == [["NaN", "Infinity", "-Infinity"] * 2]
+
+
 def test_finished_query_is_evicted(server):
     """The normal client loop (GET until nextUri disappears) frees the
     paging state without a DELETE."""

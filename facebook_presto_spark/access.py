@@ -20,22 +20,22 @@ from __future__ import annotations
 
 import re
 
+from facebook_presto_spark.session import local_dataframe
+from facebook_presto_spark.statements import classify
+
 # spi/security/Privilege.java
 PRIVILEGES = ("SELECT", "INSERT", "DELETE", "UPDATE")
 
-GRANT_RE = re.compile(
-    r"\s*GRANT\s+(.+?)\s+ON\s+(?:TABLE\s+)?([\w.\"]+)\s+TO\s+"
-    r"(?:USER\s+|ROLE\s+)?([\w\"]+)(\s+WITH\s+GRANT\s+OPTION)?\s*;?\s*$",
+# arguments after the GRANT / REVOKE keyword (SqlBase.g4 grant / revoke)
+_GRANT_ARGS_RE = re.compile(
+    r"(.+?)\s+ON\s+(?:TABLE\s+)?([\w.\"]+)\s+TO\s+"
+    r"(?:USER\s+|ROLE\s+)?([\w\"]+)(\s+WITH\s+GRANT\s+OPTION)?",
     re.IGNORECASE | re.DOTALL,
 )
-REVOKE_RE = re.compile(
-    r"\s*REVOKE\s+(GRANT\s+OPTION\s+FOR\s+)?(.+?)\s+ON\s+(?:TABLE\s+)?"
-    r"([\w.\"]+)\s+FROM\s+(?:USER\s+|ROLE\s+)?([\w\"]+)\s*;?\s*$",
+_REVOKE_ARGS_RE = re.compile(
+    r"(GRANT\s+OPTION\s+FOR\s+)?(.+?)\s+ON\s+(?:TABLE\s+)?"
+    r"([\w.\"]+)\s+FROM\s+(?:USER\s+|ROLE\s+)?([\w\"]+)",
     re.IGNORECASE | re.DOTALL,
-)
-SHOW_GRANTS_RE = re.compile(
-    r"\s*SHOW\s+GRANTS(?:\s+ON\s+(?:TABLE\s+)?([\w.\"]+))?\s*;?\s*$",
-    re.IGNORECASE,
 )
 
 
@@ -131,12 +131,11 @@ def _statement_targets(sql: str) -> list[tuple[str, str, str]]:
     depth = 0
     skip_from_at: int | None = None
 
-    m = re.match(r"\s*INSERT\s+INTO\s+(?:TABLE\s+)?([\w.\"]+)", sql, re.I)
-    if m:
-        out.append(("INSERT", m.group(1).strip('"'), "insert into"))
-    m = re.match(r"\s*DELETE\s*$|\s*DELETE\s+FROM\s+([\w.\"]+)", sql, re.I)
-    if m and m.group(1):
-        out.append(("DELETE", m.group(1).strip('"'), "delete from"))
+    stmt = classify(sql)
+    if stmt.kind == "insert":
+        out.append(("INSERT", ".".join(stmt.name), "insert into"))
+    elif stmt.kind == "delete":
+        out.append(("DELETE", ".".join(stmt.name), "delete from"))
         skip_from_at = 0  # the DELETE's own FROM is not a read
 
     for i, t in enumerate(toks):
@@ -190,50 +189,41 @@ def enforce(engine, sql: str) -> None:
             raise PermissionError(f"Access Denied: Cannot {verb} table {table}")
 
 
-def dispatch(engine, sql: str):
-    """Handle GRANT / REVOKE / SHOW GRANTS; None if ``sql`` is neither."""
-    m = GRANT_RE.match(sql)
-    if m:
-        privs = parse_privileges(m.group(1))
-        table = m.group(2).strip('"')
-        if not engine.spark.catalog.tableExists(table):
-            raise ValueError(f"Table '{table}' does not exist")
-        engine.grants.grant(m.group(3).strip('"'), table, privs,
-                            grantable=bool(m.group(4)))
-        return engine.spark.sql("SELECT true AS ok WHERE false")
-    m = REVOKE_RE.match(sql)
-    if m:
-        privs = parse_privileges(m.group(2))
-        table = m.group(3).strip('"')
-        if not engine.spark.catalog.tableExists(table):
-            raise ValueError(f"Table '{table}' does not exist")
-        engine.grants.revoke(m.group(4).strip('"'), table, privs,
-                             grant_option_only=bool(m.group(1)))
-        return engine.spark.sql("SELECT true AS ok WHERE false")
-    m = SHOW_GRANTS_RE.match(sql)
-    if m:
-        table = m.group(1).strip('"') if m.group(1) else None
-        if table is not None and not engine.spark.catalog.tableExists(table):
-            raise ValueError(f"Table '{table}' does not exist")
-        from facebook_presto_spark.infoschema import TABLE_SCHEMAS
-
-        full = engine.spark.createDataFrame(
-            engine.grants.rows(table), TABLE_SCHEMAS["table_privileges"]
-        )
-        # ShowQueriesRewrite.visitShowGrants:244-254 — aliased projection
-        # over table_privileges, ordered by grantee, table_name
-        return full.selectExpr(
-            "grantee AS Grantee", "table_catalog AS Catalog",
-            "table_schema AS Schema", "table_name AS Table",
-            "privilege_type AS Privilege", "is_grantable AS Grantable",
-        ).orderBy("Grantee", "Table")
-    return None
+def _existing_table(engine, name: str) -> str:
+    table = name.strip('"')
+    if not engine.spark.catalog.tableExists(table):
+        raise ValueError(f"Table '{table}' does not exist")
+    return table
 
 
-def reject_unsupported(sql: str) -> None:
-    """CALL statements are fully handled upstream since round 8
-    (procedures.dispatch — the connector-procedure registry with
-    CallTask.java binding semantics; system.runtime.kill_query in
-    systemtables.py), so nothing is rejected here anymore.  Kept as the
-    engine's hook point for any future statement family that needs a
-    loud, specific failure instead of a translation error."""
+def grant(engine, stmt):
+    m = _GRANT_ARGS_RE.fullmatch(stmt.body)
+    if m is None:
+        return None
+    privs = parse_privileges(m.group(1))
+    engine.grants.grant(m.group(3).strip('"'), _existing_table(engine, m.group(2)),
+                        privs, grantable=bool(m.group(4)))
+    return engine.ok()
+
+
+def revoke(engine, stmt):
+    m = _REVOKE_ARGS_RE.fullmatch(stmt.body)
+    if m is None:
+        return None
+    privs = parse_privileges(m.group(2))
+    engine.grants.revoke(m.group(4).strip('"'), _existing_table(engine, m.group(3)),
+                         privs, grant_option_only=bool(m.group(1)))
+    return engine.ok()
+
+
+def show_grants(engine, stmt):
+    """ShowQueriesRewrite.visitShowGrants:244-254 — an aliased projection
+    over table_privileges, ordered by grantee, table_name (the registry's
+    rows already come in that order)."""
+    table = _existing_table(engine, ".".join(stmt.name)) if stmt.name else None
+    rows = [r[1:7] for r in engine.grants.rows(table)]
+    return local_dataframe(
+        engine.spark, rows,
+        "`Grantee` string, `Catalog` string, `Schema` string, "
+        "`Table` string, `Privilege` string, `Grantable` boolean",
+    )

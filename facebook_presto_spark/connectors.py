@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from facebook_presto_spark.session import local_dataframe
+from facebook_presto_spark.sqlfront.tokens import split_text
+from facebook_presto_spark.statements import column_names, split_with_data
 
 _NAME = r"[A-Za-z_][A-Za-z0-9_]*"
 
@@ -920,7 +922,7 @@ class JmxCatalog:
 
 
 # ---------------------------------------------------------------------------
-# session-scoped registry + engine dispatch
+# session-scoped registry + statement handlers
 # ---------------------------------------------------------------------------
 
 
@@ -946,60 +948,6 @@ def get_catalogs(spark: SparkSession) -> ConnectorCatalogs:
         _CATALOGS[key] = ConnectorCatalogs(spark)
     return _CATALOGS[key]
 
-
-_T3 = rf"(memory|blackhole)\.({_NAME})\.({_NAME})"
-
-_CREATE_SCHEMA_RE = re.compile(
-    rf"\s*CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?memory\.({_NAME})\s*;?\s*$",
-    re.I,
-)
-_DROP_SCHEMA_RE = re.compile(
-    rf"\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?memory\.({_NAME})\s*;?\s*$", re.I
-)
-_CTAS_RE = re.compile(
-    rf"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?{_T3}\s*"
-    rf"(?:WITH\s*\((?P<props>[^)]*)\)\s*)?AS\s+(?P<query>.+?)"
-    rf"(?:\s+WITH\s+(?P<nodata>NO\s+)?DATA)?\s*;?\s*$",
-    re.I | re.S,
-)
-_CREATE_COLS_RE = re.compile(
-    rf"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?{_T3}\s*"
-    rf"\((?P<cols>.+?)\)\s*(?:WITH\s*\((?P<props>[^)]*)\)\s*)?;?\s*$",
-    re.I | re.S,
-)
-_INSERT_RE = re.compile(
-    rf"\s*INSERT\s+INTO\s+{_T3}\s*"
-    rf"(?:\((?P<cols>[\w\s,\"]+)\)\s*)?(?P<query>(?:SELECT|VALUES|WITH|"
-    rf"TABLE|\().+?)\s*;?\s*$",
-    re.I | re.S,
-)
-_DROP_TABLE_RE = re.compile(
-    rf"\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?{_T3}\s*;?\s*$", re.I
-)
-_RENAME_RE = re.compile(
-    rf"\s*ALTER\s+TABLE\s+memory\.({_NAME})\.({_NAME})\s+RENAME\s+TO\s+"
-    rf"(?:memory\.)?({_NAME})\.({_NAME})\s*;?\s*$",
-    re.I,
-)
-_SHOW_TABLES_RE = re.compile(
-    rf"\s*SHOW\s+TABLES\s+(?:FROM|IN)\s+memory(?:\.({_NAME}))?\s*;?\s*$", re.I
-)
-_SHOW_JMX_RE = re.compile(
-    r"\s*SHOW\s+TABLES\s+(?:FROM|IN)\s+jmx\.(current|history)\s*;?\s*$", re.I
-)
-_SHOW_EXAMPLE_RE = re.compile(
-    rf"\s*SHOW\s+TABLES\s+(?:FROM|IN)\s+example(?:\.({_NAME}))?\s*;?\s*$",
-    re.I,
-)
-_SHOW_TPCH_TABLES_RE = re.compile(
-    rf"\s*SHOW\s+TABLES\s+(?:FROM|IN)\s+tpch\.({_NAME})\s*;?\s*$", re.I
-)
-_SHOW_TPCH_SCHEMAS_RE = re.compile(
-    r"\s*SHOW\s+SCHEMAS\s+(?:FROM|IN)\s+tpch\s*;?\s*$", re.I
-)
-_SHOW_CATALOGS_RE = re.compile(
-    r"\s*SHOW\s+CATALOGS(?:\s+LIKE\s+'([^']*)')?\s*;?\s*$", re.I
-)
 
 _JMX_REF = r'jmx\.(current|history)\.(?:"([^"]+)"|([A-Za-z_][\w.]*))'
 _REF_RE = re.compile(
@@ -1052,194 +1000,152 @@ def references(sql: str) -> bool:
     )
 
 
-def _parse_props(text: str | None) -> dict:
+def parse_props(text: str | None) -> dict:
+    """WITH (...) list: scalars, 'strings', and ARRAY['a','b']."""
     props: dict = {}
     if not text:
         return props
-    for part in text.split(","):
-        k, _eq, v = part.partition("=")
-        v = v.strip()
-        if v.startswith("'") and v.endswith("'"):
-            v = v[1:-1]
+    for m in re.finditer(
+        r"(\w+)\s*=\s*(ARRAY\s*\[[^\]]*\]|'[^']*'|[^,]+)", text, re.I
+    ):
+        k = m.group(1).lower()
+        v = m.group(2).strip()
+        if v.upper().startswith("ARRAY"):
+            props[k] = re.findall(r"'([^']*)'", v)
+        elif v.startswith("'") and v.endswith("'"):
+            props[k] = v[1:-1]
         else:
-            v = int(v)
-        props[k.strip().lower()] = v
+            try:
+                props[k] = int(v)
+            except ValueError:
+                props[k] = v
     return props
 
 
-def _parse_columns(text: str) -> list:
+def parse_columns(text: str) -> list:
+    """A CREATE TABLE column list → [(name, presto base, spark type,
+    varchar length)]; names are unquoted and lower-cased like the
+    reference's identifiers."""
     cols = []
-    depth = 0
-    part = ""
-    parts = []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append(part)
-            part = ""
-        else:
-            part += ch
-    if part.strip():
-        parts.append(part)
-    for p in parts:
-        name, _sp, tp = p.strip().partition(" ")
-        base, spark_type, length = _parse_presto_type(tp)
-        cols.append((name.strip().strip('"'), base, spark_type, length))
+    for part in split_text(text):
+        name, _sp, tp = part.partition(" ")
+        cols.append((name.strip('"').lower(),) + _parse_presto_type(tp))
     return cols
-
-
-def _ok(spark: SparkSession) -> DataFrame:
-    return spark.sql("SELECT true AS ok WHERE false")
 
 
 def _rows(spark: SparkSession, n: int) -> DataFrame:
     return spark.createDataFrame([(n,)], "rows bigint")
 
 
-def dispatch(engine, sql: str) -> DataFrame | None:
-    """Handle DDL/DML addressed at a connector catalog; None = not ours."""
+# -- statement handlers (engine._HANDLERS routes memory/blackhole/jmx/tpch
+# statements here) -----------------------------------------------------------
+
+
+def rename_schema(engine, stmt) -> DataFrame:
+    """ALTER SCHEMA memory.a RENAME TO memory.b: the tables move along."""
+    mem = get_catalogs(engine.spark).memory
+    old_s, new_s = stmt.schema, stmt.args[-1].lower()
+    if old_s not in mem.schemas:
+        raise ValueError(f"Schema [{old_s}] does not exist")
+    if new_s in mem.schemas:
+        raise ValueError(f"Schema [{new_s}] already exists")
+    mem.schemas.discard(old_s)
+    mem.schemas.add(new_s)
+    for s, t in [(s, t) for (s, t) in mem.tables if s == old_s]:
+        mem.rename(s, t, new_s, t)
+    return engine.ok()
+
+
+def show_tables(engine, stmt) -> DataFrame | None:
+    """SHOW TABLES FROM jmx.current|history / tpch.<schema>."""
+    cats = get_catalogs(engine.spark)
+    if stmt.catalog == "jmx" and stmt.schema == "current":
+        names = cats.jmx.list_tables()
+    elif stmt.catalog == "jmx" and stmt.schema == "history":
+        names = sorted(cats.jmx.history_tables)
+    elif stmt.catalog == "tpch" and stmt.schema is not None:
+        cats.tpch.schema_dir(stmt.schema)  # validates the scale factor
+        names = sorted(cats.tpch.TABLES)
+    else:
+        return None
+    return local_dataframe(engine.spark, [(n,) for n in names], "`Table` string")
+
+
+def show_catalogs(engine, stmt) -> DataFrame | None:
+    # ShowQueriesRewrite.visitShowCatalogs — LIKE maps % and _
+    m = re.fullmatch(r"(?:LIKE\s+'([^']*)')?", stmt.body, re.I)
+    if m is None:
+        return None
+    names = ["blackhole", "example", "hive", "jmx", "localfile",
+             "memory", "spark", "system", "tpch"]
+    if m.group(1) is not None:
+        pat = re.compile(
+            "^" + re.escape(m.group(1))
+            .replace("%", ".*").replace("_", ".") + "$"
+        )
+        names = [n for n in names if pat.match(n)]
+    return local_dataframe(engine.spark, [(n,) for n in names], "`Catalog` string")
+
+
+def create_table_as(engine, stmt) -> DataFrame:
+    query, no_data = split_with_data(stmt.body)
+    df = engine.sql(query)
+    if no_data:
+        df = df.limit(0)
+    props = parse_props(stmt.props)
+    if_not_exists = "if_not_exists" in stmt.flags
+    if stmt.catalog == "memory":
+        if props:
+            raise ValueError("memory connector tables take no properties")
+        n = get_catalogs(engine.spark).memory.create(
+            stmt.schema, stmt.table, df, if_not_exists)
+    else:
+        n = get_catalogs(engine.spark).blackhole.create_from_query(
+            stmt.schema, stmt.table, df, props, if_not_exists)
+    return _rows(engine.spark, n)
+
+
+def create_table(engine, stmt) -> DataFrame:
+    columns = parse_columns(stmt.columns)
+    props = parse_props(stmt.props)
+    if_not_exists = "if_not_exists" in stmt.flags
+    if stmt.catalog == "blackhole":
+        get_catalogs(engine.spark).blackhole.create(
+            stmt.schema, stmt.table, columns, props, if_not_exists)
+    else:
+        if props:
+            raise ValueError("memory connector tables take no properties")
+        ddl = ", ".join(f"`{n}` {st}" for n, _b, st, _l in columns)
+        empty = engine.spark.createDataFrame([], ddl)
+        get_catalogs(engine.spark).memory.create(
+            stmt.schema, stmt.table, empty, if_not_exists)
+    return engine.ok()
+
+
+def insert(engine, stmt) -> DataFrame:
     spark = engine.spark
     cats = get_catalogs(spark)
-
-    m = _CREATE_SCHEMA_RE.match(sql)
-    if m:
-        cats.memory.create_schema(m.group(2).lower(), bool(m.group(1)))
-        return _ok(spark)
-    m = _DROP_SCHEMA_RE.match(sql)
-    if m:
-        cats.memory.drop_schema(m.group(2).lower(), bool(m.group(1)))
-        return _ok(spark)
-    m = _SHOW_TABLES_RE.match(sql)
-    if m:
-        names = cats.memory.list_tables(
-            m.group(1).lower() if m.group(1) else None
-        )
-        return local_dataframe(
-            spark, [(n,) for n in names], "`Table` string"
-        )
-    m = _SHOW_JMX_RE.match(sql)
-    if m:
-        names = (
-            cats.jmx.list_tables() if m.group(1).lower() == "current"
-            else sorted(cats.jmx.history_tables)
-        )
-        return local_dataframe(
-            spark, [(n,) for n in names], "`Table` string"
-        )
-    m = _SHOW_EXAMPLE_RE.match(sql)
-    if m:
-        names = cats.example.list_tables(
-            m.group(1).lower() if m.group(1) else None
-        )
-        return local_dataframe(
-            spark, [(n,) for n in names], "`Table` string"
-        )
-    m = _SHOW_TPCH_TABLES_RE.match(sql)
-    if m:
-        cats.tpch.schema_dir(m.group(1))  # validates the scale factor
-        return local_dataframe(
-            spark, [(n,) for n in sorted(cats.tpch.TABLES)], "`Table` string"
-        )
-    if _SHOW_TPCH_SCHEMAS_RE.match(sql):
-        return local_dataframe(
-            spark, [(n,) for n in cats.tpch.list_schemas()], "`Schema` string"
-        )
-    m = _SHOW_CATALOGS_RE.match(sql)
-    if m:
-        # ShowQueriesRewrite.visitShowCatalogs — LIKE maps % and _
-        names = ["blackhole", "example", "hive", "jmx", "localfile",
-                 "memory", "spark", "system", "tpch"]
-        if m.group(1) is not None:
-            pat = re.compile(
-                "^" + re.escape(m.group(1))
-                .replace("%", ".*").replace("_", ".") + "$"
-            )
-            names = [n for n in names if pat.match(n)]
-        return local_dataframe(
-            spark, [(n,) for n in names], "`Catalog` string"
-        )
-    m = _RENAME_RE.match(sql)
-    if m:
-        cats.memory.rename(*(g.lower() for g in m.groups()))
-        return _ok(spark)
-    m = _DROP_TABLE_RE.match(sql)
-    if m:
-        cat, schema, table = (m.group(2).lower(), m.group(3).lower(),
-                              m.group(4).lower())
-        target = cats.memory if cat == "memory" else cats.blackhole
-        target.drop(schema, table, bool(m.group(1)))
-        return _ok(spark)
-    m = _CTAS_RE.match(sql)
-    if m:
-        cat, schema, table = (m.group(2).lower(), m.group(3).lower(),
-                              m.group(4).lower())
-        df = engine.sql(m.group("query"))
-        if m.group("nodata"):
-            df = df.limit(0)
-        if cat == "memory":
-            if _parse_props(m.group("props")):
-                raise ValueError(
-                    "memory connector tables take no properties"
+    schema, table = stmt.schema, stmt.table
+    df = engine.sql(stmt.body)
+    if stmt.columns is not None:
+        # explicit column list (InsertInto grammar): name the query's
+        # positional output, letting insert() align by position with
+        # the target after NULL-filling unmentioned columns
+        names = column_names(stmt.columns)
+        df = df.toDF(*names)
+        if stmt.catalog == "memory" and (schema, table) in cats.memory.tables:
+            target = spark.table(cats.memory.tables[(schema, table)])
+            missing = [c for c in target.columns if c not in names]
+            for c in missing:
+                df = df.withColumn(
+                    c, F.lit(None).cast(target.schema[c].dataType)
                 )
-            n = cats.memory.create(
-                schema, table, df, bool(m.group(1))
-            )
-        else:
-            n = cats.blackhole.create_from_query(
-                schema, table, df, _parse_props(m.group("props")),
-                bool(m.group(1)),
-            )
-        return _rows(spark, n)
-    m = _CREATE_COLS_RE.match(sql)
-    if m:
-        cat, schema, table = (m.group(2).lower(), m.group(3).lower(),
-                              m.group(4).lower())
-        columns = _parse_columns(m.group("cols"))
-        props = _parse_props(m.group("props"))
-        if cat == "blackhole":
-            cats.blackhole.create(
-                schema, table, columns, props, bool(m.group(1))
-            )
-        else:
-            if props:
-                raise ValueError(
-                    "memory connector tables take no properties"
-                )
-            ddl = ", ".join(f"`{n}` {st}" for n, _b, st, _l in columns)
-            empty = spark.createDataFrame([], ddl)
-            cats.memory.create(schema, table, empty, bool(m.group(1)))
-        return _ok(spark)
-    m = _INSERT_RE.match(sql)
-    if m:
-        cat, schema, table = (m.group(1).lower(), m.group(2).lower(),
-                              m.group(3).lower())
-        df = engine.sql(m.group("query"))
-        if m.group("cols"):
-            # explicit column list (InsertInto grammar): name the query's
-            # positional output, letting insert() align by position with
-            # the target after NULL-filling unmentioned columns
-            names = [
-                c.strip().strip('"').lower()
-                for c in m.group("cols").split(",")
-            ]
-            df = df.toDF(*names)
-            if cat == "memory" and (schema, table) in cats.memory.tables:
-                target = spark.table(cats.memory.tables[(schema, table)])
-                missing = [c for c in target.columns if c not in names]
-                for c in missing:
-                    df = df.withColumn(
-                        c, F.lit(None).cast(target.schema[c].dataType)
-                    )
-                df = df.select(*target.columns)
-        if cat == "memory":
-            n = cats.memory.insert(schema, table, df)
-        else:
-            n = cats.blackhole.write_rowcount(schema, table, df)
-        return _rows(spark, n)
-    return None
+            df = df.select(*target.columns)
+    if stmt.catalog == "memory":
+        n = cats.memory.insert(schema, table, df)
+    else:
+        n = cats.blackhole.write_rowcount(schema, table, df)
+    return _rows(spark, n)
 
 
 def prepare(engine, sql: str) -> str:

@@ -252,8 +252,8 @@ GROUP BY c_nationkey ORDER BY c_nationkey
 
 
 def ddl_txn_rollback_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transaction staging end-to-end (transactions.stage_write/
-    stage_ddl — the undo-log analogue of SemiTransactionalHiveMetastore
+    """Transaction staging end-to-end (transactions.stage —
+    the undo-log analogue of SemiTransactionalHiveMetastore
     staging): CTAS nation into hive, then inside an explicit
     transaction DELETE a slice, INSERT duplicates, ADD a column, and
     RENAME the table — and ROLLBACK.  The returned relation is the

@@ -6,12 +6,24 @@ The reference's query lifecycle (SURVEY.md §3.1) is:
     (StatementAnalyzer.java:216) → plan (LogicalPlanner.java:150) →
     optimize → fragment → schedule → execute.
 
-On Spark all stages after parsing belong to Catalyst/AQE.  The engine
-therefore does exactly two things:
+DDL and session statements leave that pipeline right after parsing: the
+reference routes them by AST class to their ``*Task``
+(``DataDefinitionExecution``).  On Spark all stages after parsing belong
+to Catalyst/AQE, so ``engine.sql`` runs every statement through three
+steps:
 
-1. registers the catalog (parquet tables as views — catalog.py), and
-2. translates Presto-dialect SQL to Spark SQL (sqlfront/) and hands it to
-   ``spark.sql``.
+1. **classify** — ``statements.classify`` reads the statement's head and
+   names its kind (``set_session``, ``create_table_as``, ``query`` …), its
+   target ``catalog.schema.table`` and the spans of its parts;
+2. **handler** — one lookup in ``_HANDLERS`` (kind → handler, routed by
+   the target's catalog for hive/memory/blackhole/tpch/jmx/example)
+   runs session, transaction, DDL and metadata statements and returns a
+   small driver-built result;
+3. **translate** — queries and every statement the table does not claim
+   have their catalog references resolved, are translated to Spark SQL
+   (sqlfront/) and handed to ``spark.sql``.
+
+The parquet tables under a directory register as views (catalog.py).
 
 Usage::
 
@@ -26,51 +38,36 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from facebook_presto_spark import (
+    access,
+    connectors,
+    hive_catalog,
+    infoschema,
+    procedures,
+    systemtables,
+    transactions,
+)
 from facebook_presto_spark.catalog import (
     DEFAULT_SF_DIR,
     list_columns,
     register_views,
 )
+from facebook_presto_spark.properties import (
+    PROPERTIES,
+    reset_session_property,
+    set_session_property,
+)
 from facebook_presto_spark.session import get_spark, local_dataframe
 from facebook_presto_spark.sqlfront import translate
+from facebook_presto_spark.statements import Statement, classify
 
-_PREPARE_RE = re.compile(r"^\s*PREPARE\s+([A-Za-z_]\w*)\s+FROM\s+(.+)$", re.I | re.S)
-_EXECUTE_RE = re.compile(
-    r"^\s*EXECUTE\s+([A-Za-z_]\w*)(?:\s+USING\s+(.+))?\s*;?\s*$", re.I | re.S
+
+# SHOW STATS columns (ShowStatsRewrite)
+_STATS_DDL = (
+    "column_name string, data_size double, distinct_values_count double, "
+    "nulls_fraction double, row_count double, low_value string, "
+    "high_value string"
 )
-_DEALLOCATE_RE = re.compile(r"^\s*DEALLOCATE\s+PREPARE\s+([A-Za-z_]\w*)\s*;?\s*$", re.I)
-_DESCRIBE_IO_RE = re.compile(
-    r"^\s*DESCRIBE\s+(INPUT|OUTPUT)\s+([A-Za-z_]\w*)\s*;?\s*$", re.I
-)
-_SHOW_SESSION_RE = re.compile(r"^\s*SHOW\s+SESSION\s*;?\s*$", re.I)
-_SHOW_FUNCTIONS_RE = re.compile(r"^\s*SHOW\s+FUNCTIONS\s*;?\s*$", re.I)
-_SHOW_STATS_RE = re.compile(
-    r"^\s*SHOW\s+STATS\s+FOR\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
-)
-# showStatsForQuery (SqlBase.g4:83): SHOW STATS FOR (SELECT …)
-_SHOW_STATS_QUERY_RE = re.compile(
-    r"^\s*SHOW\s+STATS\s+FOR\s*\((.+)\)\s*;?\s*$", re.I | re.S
-)
-_SHOW_CREATE_TABLE_RE = re.compile(
-    r"^\s*SHOW\s+CREATE\s+TABLE\s+([\w.\"]+)\s*;?\s*$", re.I
-)
-_ALTER_SCHEMA_RE = re.compile(
-    r"^\s*ALTER\s+SCHEMA\s+([\w.]+)\s+RENAME\s+TO\s+([\w.]+)\s*;?\s*$", re.I
-)
-_EXPLAIN_ANALYZE_RE = re.compile(r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", re.I | re.S)
-_ALTER_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+"
-    r"(?:RENAME\s+TO\s+([A-Za-z_][\w.]*)"
-    r"|RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)"
-    r"|DROP\s+COLUMN\s+(\w+)"
-    r"|ADD\s+COLUMN\s+(\w+)\s+(.+?))\s*;?\s*$",
-    re.I | re.S,
-)
-_USE_RE = re.compile(
-    r"^\s*USE\s+(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)\s*;?\s*$", re.I
-)
-_SET_PATH_RE = re.compile(r"^\s*SET\s+PATH\s+(.+?)\s*;?\s*$", re.I | re.S)
-_EXPLAIN_OPTS_RE = re.compile(r"^\s*EXPLAIN\s*\(([^)]*)\)\s*(.+)$", re.I | re.S)
 
 
 def _split_filters(text: str) -> list[str]:
@@ -215,6 +212,7 @@ class PrestoSparkEngine:
         # SQL path (SetPathTask / X-Presto-Path) — session state like
         # the transaction id, thread-local for the protocol server
         self._path_tl = _threading.local()
+        self._ok: DataFrame | None = None
 
     def current_path(self) -> str:
         return getattr(self._path_tl, "value", "") or ""
@@ -323,16 +321,23 @@ class PrestoSparkEngine:
         """Presto-dialect SQL → the Spark SQL string that will run."""
         return translate(presto_sql)
 
+    def ok(self) -> DataFrame:
+        """The empty ``ok boolean`` result of a statement that returns no
+        rows.  Built once per engine as a local relation, so serving it
+        launches no Spark job."""
+        if self._ok is None:
+            self._ok = local_dataframe(self.spark, [], "ok boolean")
+        return self._ok
+
     def sql(self, presto_sql: str) -> DataFrame:
         """Run Presto-dialect SQL; returns a lazy DataFrame.
 
-        ``SET SESSION <prop> = <value>`` statements apply the reference's
-        session-property surface (SystemSessionProperties.java) to the
-        Spark conf and return an empty OK relation, like the reference's
-        coordinator does.  Everything else is translated and planned by
-        Catalyst — which performs the reference's whole optimizer sequence
-        (PlanOptimizers.java:221-502): pushdown, pruning, join selection —
-        lazily, until an action runs.
+        Session, transaction, DDL and metadata statements run their
+        handler (see ``_sql_inner``) and return a small driver-built
+        result, like the reference's coordinator does.  Everything else
+        is translated and planned by Catalyst — which performs the
+        reference's whole optimizer sequence (PlanOptimizers.java:221-502):
+        pushdown, pruning, join selection — lazily, until an action runs.
 
         Every statement registers in ``self.runtime`` (the QueryManager
         surface behind ``system.runtime.queries`` / ``kill_query``);
@@ -354,149 +359,37 @@ class PrestoSparkEngine:
                 self.runtime.exit()
 
     def _sql_inner(self, presto_sql: str) -> DataFrame:
-        from facebook_presto_spark.properties import (
-            parse_set_session,
-            set_session_property,
-        )
+        # classify once from the statement's head (statements.py), the
+        # way the reference routes by AST class
+        stmt = classify(presto_sql)
+        # inside an explicit transaction: the READ ONLY write check and
+        # the undo-log staging that lets ROLLBACK revert the statement
+        transactions.guard(self, stmt)
+        # one lookup in the handler table; a handler returns None for a
+        # form of its kind it does not serve
+        handler = handler_for(stmt)
+        if handler is not None:
+            df = handler(self, stmt)
+            if df is not None:
+                return df
+        # queries and every unclaimed statement: translate and plan
+        return self._run_translated(presto_sql)
 
-        set_stmt = parse_set_session(presto_sql)
-        if set_stmt is not None:
-            set_session_property(self.spark, *set_stmt)
-            return self.spark.sql("SELECT true AS ok WHERE false")
-        from facebook_presto_spark.properties import (
-            parse_reset_session,
-            reset_session_property,
-        )
-
-        reset_stmt = parse_reset_session(presto_sql)
-        if reset_stmt is not None:
-            reset_session_property(self.spark, reset_stmt)
-            return self.spark.sql("SELECT true AS ok WHERE false")
-        m = _USE_RE.match(presto_sql)
-        if m:
-            # USE [catalog.]schema (SqlBase.g4:35-36) — the schema maps to a
-            # Spark database (see catalog.register_schema); catalog is a
-            # name prefix only
-            self.spark.catalog.setCurrentDatabase(m.group(2))
-            return self.spark.sql("SELECT true AS ok WHERE false")
-        from facebook_presto_spark import transactions as txn
-
-        # transaction control (START TRANSACTION/COMMIT/ROLLBACK —
-        # SqlBase.g4:90-92); then the READ ONLY write guard for every
-        # statement running inside an explicit transaction
-        handled = txn.dispatch(self, presto_sql)
-        if handled is not None:
-            return handled
-        txn.check_write(self, presto_sql)
-        # hive/memory CTAS/INSERT/DELETE inside an explicit transaction
-        # register compensating actions so ROLLBACK undoes them
-        # (transactions.py round 8 — undo-log staging); metadata
-        # statements (ALTER/DROP TABLE, CREATE/DROP VIEW) stage too
-        # since round 9, per SemiTransactionalHiveMetastore's staged
-        # renames and drops
-        txn.stage_write(self, presto_sql)
-        txn.stage_ddl(self, presto_sql)
-        m = _SET_PATH_RE.match(presto_sql)
-        if m:
-            # SET PATH (SqlBase.g4 setPath → SetPathTask.java): a comma
-            # list of [catalog.]schema elements, kept as session state
-            # (thread-local like the transaction id; the protocol server
-            # round-trips it via X-Presto-Path / X-Presto-Set-Path).
-            # Function resolution here is a single flat registry, so the
-            # path's only observable effect is current_path — same as a
-            # reference deployment with no session functions installed.
-            spec = m.group(1).strip().rstrip(";").strip()
-            elem = r'(?:"[^"]+"|\w+)(?:\s*\.\s*(?:"[^"]+"|\w+))?'
-            if not re.fullmatch(rf"{elem}(?:\s*,\s*{elem})*", spec):
-                raise ValueError(f"mismatched input '{spec}' expecting path")
-            self._path_tl.value = spec
-            self._path_tl.event = spec
-            return self.spark.sql("SELECT true AS ok WHERE false")
+    def _run_translated(self, presto_sql: str) -> DataFrame:
+        """The translate path: resolve session functions and catalog
+        references the translator does not know, then translate to Spark
+        SQL and plan it."""
         if re.search(r"\bcurrent_path\b", presto_sql, re.I):
             # current_path (FunctionRegistry session function): resolves
             # to the session's raw path string at translation time
-            from facebook_presto_spark.connectors import (
-                _sub_outside_literals,
-            )
-
             lit = "'" + self.current_path().replace("'", "''") + "'"
-            presto_sql = _sub_outside_literals(
+            presto_sql = connectors._sub_outside_literals(
                 re.compile(r"\bcurrent_path\b(?:\s*\(\s*\))?", re.I),
                 lambda _m: lit, presto_sql,
             )
-        from facebook_presto_spark import connectors
-
-        # connector-catalog DDL/DML (memory/blackhole/localfile) — ahead
-        # of the generic metadata dispatch so e.g. ALTER TABLE memory.*
-        # RENAME resolves against the connector registry, not the session
-        # catalog
-        handled = connectors.dispatch(self, presto_sql)
-        if handled is not None:
-            return handled
-        from facebook_presto_spark import hive_catalog
-
-        handled = hive_catalog.dispatch(self, presto_sql)
-        if handled is not None:
-            return handled
-        meta = self._dispatch_metadata(presto_sql)
-        if meta is not None:
-            return meta
-        prepared = self._dispatch_prepared(presto_sql)
-        if prepared is not None:
-            return prepared
-        from facebook_presto_spark import access
-
-        granted = access.dispatch(self, presto_sql)
-        if granted is not None:
-            return granted
         # optional grant enforcement (SET SESSION enforce_access_control
         # = true — access.enforce; default off, single-user behavior)
         access.enforce(self, presto_sql)
-        from facebook_presto_spark import systemtables
-
-        called = systemtables.dispatch_call(self, presto_sql)
-        if called is not None:
-            return called
-        from facebook_presto_spark import procedures
-
-        # connector procedures (CallTask.java → ProcedureRegistry) —
-        # raises the reference texts for every CALL failure mode
-        called = procedures.dispatch(self, presto_sql)
-        if called is not None:
-            return called
-        access.reject_unsupported(presto_sql)
-        from facebook_presto_spark import infoschema
-
-        m = re.match(
-            r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+([\w.\"]+)\s+AS\s+(.+?)\s*;?\s*$",
-            presto_sql, re.I | re.S,
-        )
-        if m:
-            # record the Presto-dialect definition for
-            # information_schema.views / SHOW CREATE VIEW before the
-            # translated CREATE TEMPORARY VIEW runs
-            self._views[m.group(1).strip('"').split(".")[-1].lower()] = (
-                m.group(2).strip()
-            )
-        m = re.match(
-            r"\s*DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s*;?\s*$",
-            presto_sql, re.I,
-        )
-        if m:
-            self._views.pop(m.group(1).strip('"').split(".")[-1].lower(), None)
-        m = re.match(
-            r"\s*SHOW\s+CREATE\s+VIEW\s+([\w.\"]+)\s*;?\s*$", presto_sql, re.I
-        )
-        if m:
-            # ShowQueriesRewrite.visitShowCreate — renders the stored
-            # Presto-dialect definition, not Spark's translation
-            name = m.group(1).strip('"').split(".")[-1].lower()
-            if name not in self._views:
-                raise ValueError(f"View '{m.group(1)}' does not exist")
-            text = f"CREATE VIEW {name} AS\n{self._views[name]}"
-            return local_dataframe(
-                self.spark, [(text,)], "create_view string"
-            )
         members = infoschema.referenced_members(presto_sql)
         if members:
             # the reference populates information_schema from connector
@@ -552,133 +445,203 @@ class PrestoSparkEngine:
                 raise
             return self.spark.sql(fallback)
 
+    # -- session statements (SetSessionTask / ResetSessionTask / UseTask /
+    # SetPathTask) ----------------------------------------------------------
+
+    def _set_session(self, stmt: Statement) -> DataFrame:
+        set_session_property(self.spark, ".".join(stmt.name), stmt.body)
+        return self.ok()
+
+    def _reset_session(self, stmt: Statement) -> DataFrame:
+        reset_session_property(self.spark, ".".join(stmt.name))
+        return self.ok()
+
+    def _use(self, stmt: Statement) -> DataFrame:
+        # USE [catalog.]schema (SqlBase.g4:35-36) — the schema maps to a
+        # Spark database (see catalog.register_schema); catalog is a
+        # name prefix only
+        self.spark.catalog.setCurrentDatabase(stmt.name[-1])
+        return self.ok()
+
+    def _set_path(self, stmt: Statement) -> DataFrame:
+        # SET PATH (SqlBase.g4 setPath → SetPathTask.java): a comma list
+        # of [catalog.]schema elements, kept as session state
+        # (thread-local like the transaction id; the protocol server
+        # round-trips it via X-Presto-Path / X-Presto-Set-Path).
+        # Function resolution here is a single flat registry, so the
+        # path's only observable effect is current_path — same as a
+        # reference deployment with no session functions installed.
+        spec = stmt.body
+        elem = r'(?:"[^"]+"|\w+)(?:\s*\.\s*(?:"[^"]+"|\w+))?'
+        if not re.fullmatch(rf"{elem}(?:\s*,\s*{elem})*", spec):
+            raise ValueError(f"mismatched input '{spec}' expecting path")
+        self._path_tl.value = spec
+        self._path_tl.event = spec
+        return self.ok()
+
+    # -- catalog DDL (the hive and connector catalog objects share these
+    # schema/table methods) -----------------------------------------------
+
+    def _catalog(self, stmt: Statement):
+        if stmt.catalog == "hive":
+            return hive_catalog.get_catalog(self.spark)
+        return getattr(connectors.get_catalogs(self.spark), stmt.catalog)
+
+    def _create_schema(self, stmt: Statement) -> DataFrame:
+        self._catalog(stmt).create_schema(
+            stmt.schema, "if_not_exists" in stmt.flags)
+        return self.ok()
+
+    def _drop_schema(self, stmt: Statement) -> DataFrame:
+        self._catalog(stmt).drop_schema(stmt.schema, "if_exists" in stmt.flags)
+        return self.ok()
+
+    def _drop_table(self, stmt: Statement) -> DataFrame:
+        self._catalog(stmt).drop(
+            stmt.schema, stmt.table, "if_exists" in stmt.flags)
+        return self.ok()
+
+    def _rename_table(self, stmt: Statement) -> DataFrame:
+        self._catalog(stmt).rename(stmt.schema, stmt.table, *stmt.new_table)
+        return self.ok()
+
+    def _show_schemas(self, stmt: Statement) -> DataFrame | None:
+        if stmt.schema is not None:
+            return None
+        names = self._catalog(stmt).list_schemas()
+        return local_dataframe(
+            self.spark, [(n,) for n in names], "`Schema` string")
+
+    def _show_tables(self, stmt: Statement) -> DataFrame:
+        names = self._catalog(stmt).list_tables(stmt.schema)
+        return local_dataframe(
+            self.spark, [(n,) for n in names], "`Table` string")
+
     # -- metadata statements (ShowQueriesRewrite / Describe*Rewrite) --------
 
-    def _dispatch_metadata(self, presto_sql: str) -> DataFrame | None:
-        m = _ALTER_RE.match(presto_sql)
-        if m:
-            # ALTER TABLE (SqlBase.g4:52-58 → RenameTableTask /
-            # RenameColumnTask / DropColumnTask / AddColumnTask)
-            from facebook_presto_spark.ddl import alter_table
+    def _alter_table(self, stmt: Statement) -> DataFrame:
+        """ALTER TABLE on a session-catalog table (SqlBase.g4:52-58 →
+        RenameTableTask / RenameColumnTask / DropColumnTask /
+        AddColumnTask)."""
+        from facebook_presto_spark.ddl import alter_table
 
-            table = m.group(1)
-            if m.group(2):
-                alter_table(self.spark, table, "rename_table", to=m.group(2))
-            elif m.group(3):
-                alter_table(self.spark, table, "rename_column",
-                            column=m.group(3), to=m.group(4))
-            elif m.group(5):
-                alter_table(self.spark, table, "drop_column", column=m.group(5))
-            else:
-                # resolve the Presto column type through the normal cast
-                # translation (NULL probe → Spark DataType)
-                dtype = self.spark.sql(
-                    translate(f"SELECT CAST(NULL AS {m.group(7)}) AS x")
-                ).schema[0].dataType
-                alter_table(self.spark, table, "add_column",
-                            column=m.group(6), dtype=dtype)
-            return self.spark.sql("SELECT true AS ok WHERE false")
-        m = _EXPLAIN_ANALYZE_RE.match(presto_sql)
-        if m:
-            # EXPLAIN ANALYZE executes the query and reports the plan with
-            # runtime metrics (ExplainAnalyzeOperator) — AQE final plan here
-            from facebook_presto_spark.ddl import explain_analyze
+        table = ".".join(stmt.name)
+        if stmt.kind == "rename_table":
+            alter_table(self.spark, table, "rename_table", to=".".join(stmt.args))
+        elif stmt.kind == "rename_column":
+            alter_table(self.spark, table, "rename_column",
+                        column=stmt.args[0], to=stmt.args[1])
+        elif stmt.kind == "drop_column":
+            alter_table(self.spark, table, "drop_column", column=stmt.args[0])
+        else:
+            # resolve the Presto column type through the normal cast
+            # translation (NULL probe → Spark DataType)
+            dtype = self.spark.sql(
+                translate(f"SELECT CAST(NULL AS {stmt.body}) AS x")
+            ).schema[0].dataType
+            alter_table(self.spark, table, "add_column",
+                        column=stmt.args[0], dtype=dtype)
+        return self.ok()
 
-            text = explain_analyze(self.sql(m.group(1)))
-            return local_dataframe(
-                self.spark, [(line,) for line in text.splitlines()],
-                "query_plan string",
-            )
-        m = _EXPLAIN_OPTS_RE.match(presto_sql)
-        if m:
-            # EXPLAIN (TYPE LOGICAL|DISTRIBUTED|IO|VALIDATE, FORMAT TEXT …):
-            # VALIDATE just analyzes; IO reports the scan surface
-            # (IOPlanPrinter.java shape); other options map to Spark's
-            # formatted plan (fragmenting is Catalyst's, so one plan form
-            # serves all)
-            opts, body = m.group(1).upper(), m.group(2)
-            if "VALIDATE" in opts:
-                self.sql(body).schema  # analysis errors propagate
-                return self.spark.sql("SELECT true AS valid")
-            if "IO" in opts.replace("FORMAT", ""):
-                return self._explain_io(body)
-            return self.spark.sql("EXPLAIN EXTENDED " + translate(body))
-        if _SHOW_SESSION_RE.match(presto_sql):
-            # SHOW SESSION (ShowQueriesRewrite) — the accepted property
-            # surface; Spark-subsumed properties list with empty values
-            from facebook_presto_spark.properties import PROPERTIES
+    def _explain_analyze(self, stmt: Statement) -> DataFrame:
+        # EXPLAIN ANALYZE executes the query and reports the plan with
+        # runtime metrics (ExplainAnalyzeOperator) — AQE final plan here
+        from facebook_presto_spark.ddl import explain_analyze
 
-            return local_dataframe(
-                self.spark, [(name,) for name in sorted(PROPERTIES)],
-                "name string",
-            )
-        if _SHOW_FUNCTIONS_RE.match(presto_sql):
-            # SHOW FUNCTIONS (ShowQueriesRewrite → FunctionRegistry listing);
-            # implementation column mirrors the registry's fast/slow split
-            from facebook_presto_spark.functions.registry import SLOW_PATH, names
+        text = explain_analyze(self.sql(stmt.body))
+        return local_dataframe(
+            self.spark, [(line,) for line in text.splitlines()],
+            "query_plan string",
+        )
 
-            rows = [
-                (n, "pandas_udf" if n in SLOW_PATH else "builtin")
-                for n in names()
-            ]
-            return local_dataframe(
-                self.spark, rows, "function_name string, implementation string"
-            )
-        m = _SHOW_STATS_RE.match(presto_sql)
-        if m:
-            name = m.group(1)
-            hm = re.match(r"hive\.(\w+)\.(\w+)$", name, re.I)
-            if hm:
-                # hive tables: METADATA-ONLY stats (parquet footers +
-                # partition directories — HiveMetadata.getTableStatistics
-                # parity; the reference never scans for SHOW STATS, and
-                # at 100 TB neither should we).  Column-level stats for
-                # data columns are NULL, like a metastore without
-                # ANALYZE; SHOW STATS FOR (SELECT …) stays the live
-                # computed path.
-                return self._show_stats_hive_meta(
-                    hm.group(1).lower(), hm.group(2).lower()
-                )
-            return self._show_stats(self.spark.table(name))
-        m = _SHOW_STATS_QUERY_RE.match(presto_sql)
-        if m:
+    def _explain_options(self, stmt: Statement) -> DataFrame:
+        # EXPLAIN (TYPE LOGICAL|DISTRIBUTED|IO|VALIDATE, FORMAT TEXT …):
+        # VALIDATE just analyzes; IO reports the scan surface
+        # (IOPlanPrinter.java shape); other options map to Spark's
+        # formatted plan (fragmenting is Catalyst's, so one plan form
+        # serves all)
+        opts, body = stmt.props.upper(), stmt.body
+        if "VALIDATE" in opts:
+            self.sql(body).schema  # analysis errors propagate
+            return local_dataframe(self.spark, [(True,)], "valid boolean")
+        if "IO" in opts.replace("FORMAT", ""):
+            return self._explain_io(body)
+        return self.spark.sql("EXPLAIN EXTENDED " + translate(body))
+
+    def _show_session(self, stmt: Statement) -> DataFrame:
+        # SHOW SESSION (ShowQueriesRewrite) — the accepted property
+        # surface; Spark-subsumed properties list with empty values
+        return local_dataframe(
+            self.spark, [(name,) for name in sorted(PROPERTIES)],
+            "name string",
+        )
+
+    def _show_functions(self, stmt: Statement) -> DataFrame:
+        # SHOW FUNCTIONS (ShowQueriesRewrite → FunctionRegistry listing);
+        # implementation column mirrors the registry's fast/slow split
+        from facebook_presto_spark.functions.registry import SLOW_PATH, names
+
+        rows = [
+            (n, "pandas_udf" if n in SLOW_PATH else "builtin")
+            for n in names()
+        ]
+        return local_dataframe(
+            self.spark, rows, "function_name string, implementation string"
+        )
+
+    def _show_stats(self, stmt: Statement) -> DataFrame:
+        if stmt.body is not None:
             # ShowStatsRewrite over a query: statistics of the RESULT
             # relation, computed live from the plan's output
-            return self._show_stats(self.sql(m.group(1)))
-        m = _SHOW_CREATE_TABLE_RE.match(presto_sql)
-        if m:
-            return self._show_create_table(m.group(1))
-        m = _ALTER_SCHEMA_RE.match(presto_sql)
-        if m:
-            return self._alter_schema(m.group(1), m.group(2))
-        m = _DESCRIBE_IO_RE.match(presto_sql)
-        if m:
-            kind, name = m.group(1).upper(), m.group(2).lower()
-            if name not in self._prepared:
-                raise ValueError(f"Prepared statement not found: {name}")
-            from facebook_presto_spark.sqlfront.tokens import tokenize
+            return self._stats_of(self.sql(stmt.body))
+        return self._stats_of(self.spark.table(".".join(stmt.name)))
 
-            body = self._prepared[name]
-            if kind == "INPUT":
-                # parameter positions (DescribeInputRewrite); types are not
-                # inferred pre-analysis — 'unknown' like the reference emits
-                # for non-deducible parameters
-                n_params = sum(
-                    1 for t in tokenize(body) if t.kind == "op" and t.text == "?"
-                )
-                return local_dataframe(
-                    self.spark, [(i, "unknown") for i in range(n_params)],
-                    "position int, type string",
-                )
-            # OUTPUT: analyze with NULL-bound parameters (DescribeOutputRewrite)
-            bound = self._bind_nulls(body)
-            schema = self.spark.sql(translate(bound)).schema
-            return local_dataframe(
-                self.spark,
-                [(f.name, f.dataType.simpleString()) for f in schema],
-                "column_name string, type string",
-            )
-        return None
+    def _show_create_view(self, stmt: Statement) -> DataFrame:
+        # ShowQueriesRewrite.visitShowCreate — renders the stored
+        # Presto-dialect definition, not Spark's translation
+        name = stmt.table
+        if name not in self._views:
+            raise ValueError(f"View '{'.'.join(stmt.name)}' does not exist")
+        text = f"CREATE VIEW {name} AS\n{self._views[name]}"
+        return local_dataframe(self.spark, [(text,)], "create_view string")
+
+    def _create_view(self, stmt: Statement) -> DataFrame:
+        # the translated CREATE TEMPORARY VIEW runs; the Presto-dialect
+        # definition is kept for information_schema.views and SHOW
+        # CREATE VIEW
+        df = self._run_translated(stmt.sql)
+        self._views[stmt.table] = stmt.body
+        return df
+
+    def _drop_view(self, stmt: Statement) -> DataFrame:
+        df = self._run_translated(stmt.sql)
+        self._views.pop(stmt.table, None)
+        return df
+
+    def _describe_input(self, stmt: Statement) -> DataFrame:
+        # parameter positions (DescribeInputRewrite); types are not
+        # inferred pre-analysis — 'unknown' like the reference emits for
+        # non-deducible parameters
+        from facebook_presto_spark.sqlfront.tokens import tokenize
+
+        body = self._prepared_body(stmt.name[0])
+        n_params = sum(
+            1 for t in tokenize(body) if t.kind == "op" and t.text == "?"
+        )
+        return local_dataframe(
+            self.spark, [(i, "unknown") for i in range(n_params)],
+            "position int, type string",
+        )
+
+    def _describe_output(self, stmt: Statement) -> DataFrame:
+        # analyze with NULL-bound parameters (DescribeOutputRewrite)
+        bound = self._bind_nulls(self._prepared_body(stmt.name[0]))
+        schema = self.spark.sql(translate(bound)).schema
+        return local_dataframe(
+            self.spark,
+            [(f.name, f.dataType.simpleString()) for f in schema],
+            "column_name string, type string",
+        )
 
     def _explain_io(self, body: str) -> DataFrame:
         """EXPLAIN (TYPE IO): the scan surface as one JSON row —
@@ -734,7 +697,7 @@ class PrestoSparkEngine:
         )
         return local_dataframe(self.spark, [(payload,)], "query_plan string")
 
-    def _show_stats(self, df: DataFrame) -> DataFrame:
+    def _stats_of(self, df: DataFrame) -> DataFrame:
         """SHOW STATS FOR <table> | (query) (SqlBase.g4:82-83,
         MetadataManager table statistics / ShowStatsRewrite): one
         aggregation pass computes per-column data_size / approx distinct
@@ -773,23 +736,19 @@ class PrestoSparkEngine:
                 d.get(f"__hi_{c}"),
             ))
         out.append((None, None, None, None, float(row["__n"]), None, None))
-        return local_dataframe(
-            self.spark, out,
-            "column_name string, data_size double, distinct_values_count double, "
-            "nulls_fraction double, row_count double, low_value string, high_value string",
-        )
+        return local_dataframe(self.spark, out, _STATS_DDL)
 
-    def _show_stats_hive_meta(self, schema: str, table: str) -> DataFrame:
+    def _show_stats_hive(self, stmt: Statement) -> DataFrame:
         """SHOW STATS FOR hive.s.t from metadata only (round 6): the
         summary row_count comes from parquet footers, partition-column
         stats from the key=value directory names; data columns carry
         NULL stats — the reference's exact shape for a hive table
-        without ANALYZE-collected column statistics."""
-        from facebook_presto_spark import hive_catalog
-
+        without ANALYZE-collected column statistics.  The reference never
+        scans for SHOW STATS, and at 100 TB neither should we; SHOW STATS
+        FOR (SELECT …) stays the live computed path."""
         cat = hive_catalog.get_catalog(self.spark)
-        total, part_stats = cat.metadata_stats(schema, table)
-        df = self.spark.table(cat.qualified(schema, table))
+        total, part_stats = cat.metadata_stats(stmt.schema, stmt.table)
+        df = self.spark.table(cat.qualified(stmt.schema, stmt.table))
         out = []
         for f in df.schema.fields:
             if f.name in part_stats:
@@ -798,28 +757,22 @@ class PrestoSparkEngine:
             else:
                 out.append((f.name, None, None, None, None, None, None))
         out.append((None, None, None, None, float(total), None, None))
-        return local_dataframe(
-            self.spark, out,
-            "column_name string, data_size double, distinct_values_count double, "
-            "nulls_fraction double, row_count double, low_value string, high_value string",
-        )
+        return local_dataframe(self.spark, out, _STATS_DDL)
 
-    def _show_create_table(self, name: str) -> DataFrame:
+    def _show_create_table(self, stmt: Statement) -> DataFrame:
         """SHOW CREATE TABLE (ShowQueriesRewrite.visitShowCreate TABLE
         arm): render a Presto-dialect CREATE TABLE from the live schema
         with StandardTypes names — Spark's native command refuses temp
         views, and the reference renders from metadata anyway."""
         from facebook_presto_spark.infoschema import presto_type_name
 
-        m = re.match(r"hive\.(\w+)\.(\w+)$", name.strip(), re.I)
-        display = None
-        if m:
+        name, display, bare = ".".join(stmt.name), None, stmt.table
+        if stmt.catalog == "hive":
             # hive catalog tables live in hive_<schema> databases; the
             # rendered statement keeps the PRESTO name so the output
-            # re-executes through the hive dispatch verbatim
-            name = f"hive_{m.group(1).lower()}.{m.group(2).lower()}"
-            display = f"hive.{m.group(1).lower()}.{m.group(2).lower()}"
-        bare = name.strip('"').split(".")[-1].lower()
+            # re-executes through the hive handlers verbatim
+            name = f"hive_{stmt.schema}.{bare}"
+            display = f"hive.{stmt.schema}.{bare}"
         if bare in self._views:
             raise ValueError(
                 f"Relation '{name}' is a view, not a table. "
@@ -871,30 +824,12 @@ class PrestoSparkEngine:
             self.spark, [(text,)], "`Create Table` string"
         )
 
-    def _alter_schema(self, old: str, new: str) -> DataFrame:
+    def _rename_schema(self, stmt: Statement) -> DataFrame:
         """ALTER SCHEMA … RENAME TO (SqlBase.g4 renameSchema).  Only the
-        memory catalog supports live schema rename; Spark's session
-        catalog cannot rename a database, so other targets raise the
-        reference-style NOT_SUPPORTED error."""
-        old_parts, new_parts = old.lower().split("."), new.lower().split(".")
-        if old_parts[0] == "memory":
-            from facebook_presto_spark import connectors
-
-            mem = connectors.get_catalogs(self.spark).memory
-            old_s = old_parts[-1]
-            new_s = new_parts[-1]
-            if old_s not in mem.schemas:
-                raise ValueError(f"Schema [{old_s}] does not exist")
-            if new_s in mem.schemas:
-                raise ValueError(f"Schema [{new_s}] already exists")
-            mem.schemas.discard(old_s)
-            mem.schemas.add(new_s)
-            renames = [
-                (s, t) for (s, t) in mem.tables if s == old_s
-            ]
-            for s, t in renames:
-                mem.rename(s, t, new_s, t)
-            return self.spark.sql("SELECT true AS ok WHERE false")
+        memory catalog supports live schema rename
+        (``connectors.rename_schema``); Spark's session catalog cannot
+        rename a database, so other targets raise the reference-style
+        NOT_SUPPORTED error."""
         raise ValueError(
             "This connector does not support renaming schemas "
             "(only the memory catalog supports ALTER SCHEMA RENAME here)"
@@ -911,42 +846,34 @@ class PrestoSparkEngine:
 
     # -- prepared statements (QueryPreparer.java:55-85) ---------------------
 
-    def _dispatch_prepared(self, presto_sql: str) -> DataFrame | None:
-        m = _PREPARE_RE.match(presto_sql)
-        if m:
-            self._prepared[m.group(1).lower()] = m.group(2)
-            return self.spark.sql("SELECT true AS ok WHERE false")
-        m = _DEALLOCATE_RE.match(presto_sql)
-        if m:
-            self._prepared.pop(m.group(1).lower(), None)
-            return self.spark.sql("SELECT true AS ok WHERE false")
-        m = _EXECUTE_RE.match(presto_sql)
-        if m:
-            return self.sql(self._bind(m.group(1).lower(), m.group(2)))
-        return None
+    def _prepare(self, stmt: Statement) -> DataFrame:
+        self._prepared[stmt.name[0].lower()] = stmt.body
+        return self.ok()
+
+    def _deallocate(self, stmt: Statement) -> DataFrame:
+        self._prepared.pop(stmt.name[0].lower(), None)
+        return self.ok()
+
+    def _execute(self, stmt: Statement) -> DataFrame:
+        return self.sql(self._bind(stmt.name[0], stmt.body))
+
+    def _prepared_body(self, name: str) -> str:
+        name = name.lower()
+        if name not in self._prepared:
+            raise ValueError(f"Prepared statement not found: {name}")
+        return self._prepared[name]
 
     def _bind(self, name: str, using: str | None) -> str:
         """Substitute `?` parameters with the USING expressions, positional
         like the reference's ParameterRewriter."""
-        from facebook_presto_spark.sqlfront.tokens import render, tokenize
+        from facebook_presto_spark.sqlfront.tokens import (
+            render,
+            split_top_level,
+            tokenize,
+        )
 
-        if name not in self._prepared:
-            raise ValueError(f"Prepared statement not found: {name}")
-        body = tokenize(self._prepared[name])
-        params: list[list] = []
-        if using:
-            depth, current = 0, []
-            for t in tokenize(using):
-                if t.kind == "op" and t.text in "([":
-                    depth += 1
-                elif t.kind == "op" and t.text in ")]":
-                    depth -= 1
-                if t.kind == "op" and t.text == "," and depth == 0:
-                    params.append(current)
-                    current = []
-                else:
-                    current.append(t)
-            params.append(current)
+        body = tokenize(self._prepared_body(name))
+        params = split_top_level(tokenize(using)) if using else []
         out, i = [], 0
         for t in body:
             if t.kind == "op" and t.text == "?":
@@ -974,3 +901,68 @@ class PrestoSparkEngine:
         with contextlib.redirect_stdout(buf):
             self.sql(presto_sql).explain("formatted")
         return buf.getvalue()
+
+
+# The handler table: statement kind → handler(engine, stmt), or a
+# {catalog: handler} map for kinds routed by the target's catalog (the
+# None entry serves every other catalog).  Kinds not listed — queries
+# among them — take the translate path.
+_E = PrestoSparkEngine
+_HIVE_MEMORY = ("hive", "memory")
+_CONNECTOR_WRITES = ("memory", "blackhole")
+_HANDLERS = {
+    "set_session": _E._set_session,
+    "reset_session": _E._reset_session,
+    "use": _E._use,
+    "set_path": _E._set_path,
+    "start_transaction": transactions.start,
+    "commit": transactions.commit,
+    "rollback": transactions.rollback,
+    "prepare": _E._prepare,
+    "execute": _E._execute,
+    "deallocate": _E._deallocate,
+    "describe_input": _E._describe_input,
+    "describe_output": _E._describe_output,
+    "grant": access.grant,
+    "revoke": access.revoke,
+    "show_grants": access.show_grants,
+    "call": procedures.call,
+    "explain_analyze": _E._explain_analyze,
+    "explain_options": _E._explain_options,
+    "show_session": _E._show_session,
+    "show_functions": _E._show_functions,
+    "show_catalogs": connectors.show_catalogs,
+    "show_create_table": _E._show_create_table,
+    "show_create_view": _E._show_create_view,
+    "create_view": _E._create_view,
+    "drop_view": _E._drop_view,
+    "show_stats": {"hive": _E._show_stats_hive, None: _E._show_stats},
+    "show_schemas": dict.fromkeys(("hive", "tpch"), _E._show_schemas),
+    "show_tables": {**dict.fromkeys(("hive", "memory", "example"), _E._show_tables),
+                    **dict.fromkeys(("jmx", "tpch"), connectors.show_tables)},
+    "create_schema": dict.fromkeys(_HIVE_MEMORY, _E._create_schema),
+    "drop_schema": dict.fromkeys(_HIVE_MEMORY, _E._drop_schema),
+    "rename_schema": {"memory": connectors.rename_schema, None: _E._rename_schema},
+    "create_table": {"hive": hive_catalog.create_table,
+                     **dict.fromkeys(_CONNECTOR_WRITES, connectors.create_table)},
+    "create_table_as": {"hive": hive_catalog.create_table_as,
+                        **dict.fromkeys(_CONNECTOR_WRITES, connectors.create_table_as)},
+    "insert": {"hive": hive_catalog.insert,
+               **dict.fromkeys(_CONNECTOR_WRITES, connectors.insert)},
+    "delete": {"hive": hive_catalog.delete},
+    "drop_table": dict.fromkeys(("hive",) + _CONNECTOR_WRITES, _E._drop_table),
+    "rename_table": {**dict.fromkeys(_HIVE_MEMORY, _E._rename_table),
+                     None: _E._alter_table},
+    "add_column": {"hive": hive_catalog.alter_column, None: _E._alter_table},
+    "rename_column": {"hive": hive_catalog.alter_column, None: _E._alter_table},
+    "drop_column": {"hive": hive_catalog.alter_column, None: _E._alter_table},
+}
+
+
+def handler_for(stmt: Statement):
+    """The handler ``_HANDLERS`` names for ``stmt``; None sends the
+    statement down the translate path."""
+    handler = _HANDLERS.get(stmt.kind)
+    if isinstance(handler, dict):  # routed by the target's catalog
+        handler = handler.get(stmt.catalog, handler.get(None))
+    return handler

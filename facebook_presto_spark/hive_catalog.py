@@ -48,8 +48,11 @@ from facebook_presto_spark.connectors import (
     _parse_presto_type,
     _split_literals,
     _sub_outside_literals,
+    parse_columns,
+    parse_props,
 )
 from facebook_presto_spark.session import local_dataframe
+from facebook_presto_spark.statements import column_names, split_with_data
 
 _NAME = r'[A-Za-z_]\w*|"[^"]+"'
 
@@ -649,205 +652,61 @@ def get_catalog(spark: SparkSession) -> HiveCatalog:
 
 
 # ---------------------------------------------------------------------------
-# statement dispatch (DDL/DML addressed at hive.*)
+# hive.* statements: engine._HANDLERS routes writes and column DDL here
+# (schema and table DDL it serves itself over HiveCatalog's methods);
+# ``references``/``prepare`` rewrite reads on the translate path
 # ---------------------------------------------------------------------------
-
-_T3 = rf"hive\.({_NAME})\.({_NAME})"
-
-_CREATE_SCHEMA_RE = re.compile(
-    rf"\s*CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?hive\.({_NAME})\s*;?\s*$",
-    re.I,
-)
-_DROP_SCHEMA_RE = re.compile(
-    rf"\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?hive\.({_NAME})\s*;?\s*$", re.I
-)
-_SHOW_SCHEMAS_RE = re.compile(
-    r"\s*SHOW\s+SCHEMAS\s+(?:FROM|IN)\s+hive\s*;?\s*$", re.I
-)
-_SHOW_TABLES_RE = re.compile(
-    rf"\s*SHOW\s+TABLES\s+(?:FROM|IN)\s+hive(?:\.({_NAME}))?\s*;?\s*$", re.I
-)
-_CTAS_RE = re.compile(
-    rf"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?{_T3}\s*"
-    rf"(?:WITH\s*\((?P<props>.*?)\)\s*)?AS\s+(?P<query>.+?)"
-    rf"(?:\s+WITH\s+(?P<nodata>NO\s+)?DATA)?\s*;?\s*$",
-    re.I | re.S,
-)
-_CREATE_COLS_RE = re.compile(
-    rf"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?{_T3}\s*"
-    rf"\((?P<cols>.+?)\)\s*(?:WITH\s*\((?P<props>.*?)\)\s*)?;?\s*$",
-    re.I | re.S,
-)
-_INSERT_RE = re.compile(
-    rf"\s*INSERT\s+INTO\s+{_T3}\s*"
-    rf"(?:\((?P<cols>[\w\s,\"]+)\)\s*)?(?P<query>(?:SELECT|VALUES|WITH|"
-    rf"TABLE|\().+?)\s*;?\s*$",
-    re.I | re.S,
-)
-_DROP_TABLE_RE = re.compile(
-    rf"\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?{_T3}\s*;?\s*$", re.I
-)
-_DELETE_RE = re.compile(
-    rf"\s*DELETE\s+FROM\s+{_T3}\s*"
-    rf"(?:WHERE\s+(?P<pred>.+?))?\s*;?\s*$",
-    re.I | re.S,
-)
-_RENAME_RE = re.compile(
-    rf"\s*ALTER\s+TABLE\s+{_T3}\s+RENAME\s+TO\s+"
-    rf"(?:hive\.)?({_NAME})\.({_NAME})\s*;?\s*$",
-    re.I,
-)
-# SqlBase.g4:54-58 — ALTER TABLE column alternatives, hive-addressed
-_ADD_COL_RE = re.compile(
-    rf"\s*ALTER\s+TABLE\s+{_T3}\s+ADD\s+COLUMN\s+"
-    rf"({_NAME})\s+(.+?)\s*;?\s*$",
-    re.I,
-)
-_RENAME_COL_RE = re.compile(
-    rf"\s*ALTER\s+TABLE\s+{_T3}\s+RENAME\s+COLUMN\s+"
-    rf"({_NAME})\s+TO\s+({_NAME})\s*;?\s*$",
-    re.I,
-)
-_DROP_COL_RE = re.compile(
-    rf"\s*ALTER\s+TABLE\s+{_T3}\s+DROP\s+COLUMN\s+({_NAME})\s*;?\s*$",
-    re.I,
-)
 
 # hive.schema."table$partitions" — quoted, since $ is not a name char
 _PARTITIONS_REF = rf'hive\.({_NAME})\."([^"$]+)\$partitions"'
 _TABLE_REF = rf"\bhive\.({_NAME})\.({_NAME})"
 
 
-def _parse_props(text: str | None) -> dict:
-    """WITH (...) list: scalars, 'strings', and ARRAY['a','b']."""
-    props: dict = {}
-    if not text:
-        return props
-    for m in re.finditer(
-        r"(\w+)\s*=\s*(ARRAY\s*\[[^\]]*\]|'[^']*'|[^,]+)", text, re.I
-    ):
-        k = m.group(1).lower()
-        v = m.group(2).strip()
-        if v.upper().startswith("ARRAY"):
-            props[k] = re.findall(r"'([^']*)'", v)
-        elif v.startswith("'") and v.endswith("'"):
-            props[k] = v[1:-1]
-        else:
-            try:
-                props[k] = int(v)
-            except ValueError:
-                props[k] = v
-    return props
+def alter_column(engine, stmt) -> DataFrame:
+    """ADD / RENAME / DROP COLUMN on a hive table."""
+    cat, args = get_catalog(engine.spark), [_strip(a) for a in stmt.args]
+    if stmt.kind == "add_column":
+        cat.add_column(stmt.schema, stmt.table, args[0], stmt.body)
+    elif stmt.kind == "rename_column":
+        cat.rename_column(stmt.schema, stmt.table, *args)
+    else:
+        cat.drop_column(stmt.schema, stmt.table, args[0])
+    return engine.ok()
 
 
-def _parse_columns(text: str) -> list:
-    cols = []
-    depth = 0
-    part = ""
-    parts = []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append(part)
-            part = ""
-        else:
-            part += ch
-    if part.strip():
-        parts.append(part)
-    for p in parts:
-        name, _sp, tp = p.strip().partition(" ")
-        base, spark_type, length = _parse_presto_type(tp)
-        cols.append((_strip(name), base, spark_type, length))
-    return cols
-
-
-def _ok(spark: SparkSession) -> DataFrame:
-    return spark.sql("SELECT true AS ok WHERE false")
-
-
-def dispatch(engine, sql: str) -> DataFrame | None:
-    """Handle DDL/DML addressed at the hive catalog; None = not ours."""
+def delete(engine, stmt) -> DataFrame:
     spark = engine.spark
-    cat = get_catalog(spark)
+    n = get_catalog(spark).delete(stmt.schema, stmt.table, stmt.body)
+    return spark.createDataFrame([(n,)], "rows bigint")
 
-    m = _CREATE_SCHEMA_RE.match(sql)
-    if m:
-        cat.create_schema(_strip(m.group(2)), bool(m.group(1)))
-        return _ok(spark)
-    m = _DROP_SCHEMA_RE.match(sql)
-    if m:
-        cat.drop_schema(_strip(m.group(2)), bool(m.group(1)))
-        return _ok(spark)
-    if _SHOW_SCHEMAS_RE.match(sql):
-        return local_dataframe(
-            spark, [(s,) for s in cat.list_schemas()], "`Schema` string"
-        )
-    m = _SHOW_TABLES_RE.match(sql)
-    if m:
-        names = cat.list_tables(_strip(m.group(1)) if m.group(1) else None)
-        return local_dataframe(
-            spark, [(n,) for n in names], "`Table` string"
-        )
-    m = _ADD_COL_RE.match(sql)
-    if m:
-        cat.add_column(
-            _strip(m.group(1)), _strip(m.group(2)),
-            _strip(m.group(3)), m.group(4),
-        )
-        return _ok(spark)
-    m = _RENAME_COL_RE.match(sql)
-    if m:
-        cat.rename_column(*(_strip(g) for g in m.groups()))
-        return _ok(spark)
-    m = _DROP_COL_RE.match(sql)
-    if m:
-        cat.drop_column(*(_strip(g) for g in m.groups()))
-        return _ok(spark)
-    m = _RENAME_RE.match(sql)
-    if m:
-        cat.rename(*(_strip(g) for g in m.groups()))
-        return _ok(spark)
-    m = _DROP_TABLE_RE.match(sql)
-    if m:
-        cat.drop(_strip(m.group(2)), _strip(m.group(3)), bool(m.group(1)))
-        return _ok(spark)
-    m = _DELETE_RE.match(sql)
-    if m:
-        n = cat.delete(
-            _strip(m.group(1)), _strip(m.group(2)), m.group("pred")
-        )
-        return spark.createDataFrame([(n,)], "rows bigint")
-    m = _CTAS_RE.match(sql)
-    if m:
-        df = engine.sql(m.group("query"))
-        if m.group("nodata"):
-            df = df.limit(0)
-        n = cat.create_as(
-            _strip(m.group(2)), _strip(m.group(3)), df,
-            _parse_props(m.group("props")), bool(m.group(1)),
-        )
-        return spark.createDataFrame([(n,)], "rows bigint")
-    m = _CREATE_COLS_RE.match(sql)
-    if m:
-        cat.create_empty(
-            _strip(m.group(2)), _strip(m.group(3)),
-            _parse_columns(m.group("cols")),
-            _parse_props(m.group("props")), bool(m.group(1)),
-        )
-        return _ok(spark)
-    m = _INSERT_RE.match(sql)
-    if m:
-        df = engine.sql(m.group("query"))
-        cols = (
-            [_strip(c) for c in m.group("cols").split(",")]
-            if m.group("cols") else None
-        )
-        n = cat.insert(_strip(m.group(1)), _strip(m.group(2)), df, cols)
-        return spark.createDataFrame([(n,)], "rows bigint")
-    return None
+
+def create_table_as(engine, stmt) -> DataFrame:
+    spark = engine.spark
+    query, no_data = split_with_data(stmt.body)
+    df = engine.sql(query)
+    if no_data:
+        df = df.limit(0)
+    n = get_catalog(spark).create_as(
+        stmt.schema, stmt.table, df, parse_props(stmt.props),
+        "if_not_exists" in stmt.flags,
+    )
+    return spark.createDataFrame([(n,)], "rows bigint")
+
+
+def create_table(engine, stmt) -> DataFrame:
+    get_catalog(engine.spark).create_empty(
+        stmt.schema, stmt.table, parse_columns(stmt.columns),
+        parse_props(stmt.props), "if_not_exists" in stmt.flags,
+    )
+    return engine.ok()
+
+
+def insert(engine, stmt) -> DataFrame:
+    spark = engine.spark
+    df = engine.sql(stmt.body)
+    cols = column_names(stmt.columns) if stmt.columns is not None else None
+    n = get_catalog(spark).insert(stmt.schema, stmt.table, df, cols)
+    return spark.createDataFrame([(n,)], "rows bigint")
 
 
 def references(sql: str) -> bool:

@@ -34,11 +34,11 @@ from __future__ import annotations
 import re
 from urllib.parse import unquote
 
-_CALL_RE = re.compile(
-    r"\s*CALL\s+(?P<name>(?:\"[^\"]+\"|[\w$]+)(?:\s*\.\s*(?:\"[^\"]+\"|[\w$]+)){0,2})"
-    r"\s*\((?P<args>.*)\)\s*;?\s*$",
-    re.I | re.S,
-)
+from facebook_presto_spark.sqlfront.tokens import split_text
+
+# system.runtime.kill_query('<query id>'[, '<message>'])
+# (KillQueryProcedure.java:53-76 — systemtables.py serves the registry)
+_KILL_ARGS_RE = re.compile(r"\(\s*'([^']*)'\s*(?:,\s*'([^']*)')?\s*\)")
 _NAMED_RE = re.compile(r"\s*([A-Za-z_]\w*)\s*=>\s*(.*)$", re.S)
 
 # catalogs the engine serves (systemtables.refresh_metadata's registry)
@@ -46,42 +46,6 @@ _KNOWN_CATALOGS = {
     "spark", "memory", "blackhole", "localfile", "jmx", "example",
     "tpch", "hive", "system",
 }
-
-
-def _split_args(text: str) -> list[str]:
-    """Split the CALL argument list on top-level commas (quote- and
-    bracket-aware)."""
-    parts, depth, cur, quote = [], 0, [], None
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                if i + 1 < len(text) and text[i + 1] == quote:
-                    cur.append(text[i + 1])
-                    i += 1
-                else:
-                    quote = None
-        elif ch in "'\"":
-            quote = ch
-            cur.append(ch)
-        elif ch in "([":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
 
 
 # --- hive.system.create_empty_partition ------------------------------------
@@ -141,29 +105,32 @@ REGISTRY = {
 }
 
 
-def dispatch(engine, sql: str):
-    """Execute a CALL statement; None = not a CALL.  Raises the
-    CallTask/ProcedureRegistry error texts for every failure mode, so
-    nothing CALL-shaped falls through to a generic rejection."""
-    m = _CALL_RE.match(sql)
-    if m is None:
-        if re.match(r"\s*CALL\b", sql, re.I):
-            raise ValueError(f"Invalid CALL statement: {sql.strip()}")
-        return None
+def call(engine, stmt):
+    """Execute a CALL statement.  Raises the CallTask/ProcedureRegistry
+    error texts for every failure mode, so nothing CALL-shaped falls
+    through to a translation error."""
+    args = stmt.body
+    if tuple(p.lower() for p in stmt.name) == ("system", "runtime", "kill_query"):
+        m = _KILL_ARGS_RE.fullmatch(args)
+        if m is not None:
+            engine.runtime.kill_query(m.group(1), m.group(2))
+            return engine.ok()
+    if not (stmt.name and len(stmt.name) <= 3 and args.startswith("(")
+            and args.endswith(")")):
+        raise ValueError(f"Invalid CALL statement: {stmt.sql.strip()}")
     if engine.current_transaction() is not None:
         # CallTask.java:73 (NOT_SUPPORTED)
         raise ValueError(
             "Procedures cannot be called within a transaction "
             "(use autocommit mode)"
         )
-    parts = [p.strip().strip('"') for p in re.split(r"\s*\.\s*", m.group("name"))]
-    if len(parts) != 3:
+    if len(stmt.name) != 3:
         # createQualifiedObjectName: session catalog/schema would fill
         # in — the engine requires the fully qualified form
         raise ValueError(
-            f"Procedure name must be fully qualified: {m.group('name')}"
+            f"Procedure name must be fully qualified: {'.'.join(stmt.name)}"
         )
-    catalog, schema, proc = (p.lower() for p in parts)
+    catalog, schema, proc = (p.lower() for p in stmt.name)
     if catalog not in _KNOWN_CATALOGS:
         # CallTask.java:79 (MISSING_CATALOG)
         raise ValueError(f"Catalog {catalog} does not exist")
@@ -173,7 +140,7 @@ def dispatch(engine, sql: str):
         raise ValueError(f"Procedure not registered: {schema}.{proc}")
     arg_names, body = entry
 
-    raw = _split_args(m.group("args"))
+    raw = split_text(args[1:-1])
     named = [_NAMED_RE.match(a) for a in raw]
     if any(named) and not all(named):
         raise ValueError("Named and positional arguments cannot be mixed")
@@ -200,4 +167,4 @@ def dispatch(engine, sql: str):
         row = engine.sql(f"SELECT {expr} AS v").collect()
         values[name] = row[0]["v"] if row else None
     body(engine, values)
-    return engine.spark.sql("SELECT true AS ok WHERE false")
+    return engine.ok()

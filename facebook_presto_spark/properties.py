@@ -205,24 +205,11 @@ def reset_session_property(spark: SparkSession, name: str) -> None:
             pass
 
 
-def parse_reset_session(sql: str) -> str | None:
-    import re
-
-    m = re.match(
-        r"\s*RESET\s+SESSION\s+([A-Za-z_][A-Za-z0-9_.]*)\s*;?\s*$", sql, re.IGNORECASE
-    )
-    return m.group(1) if m else None
-
-
 def parse_set_session(sql: str) -> tuple[str, str] | None:
     """Return (name, value) if ``sql`` is a SET SESSION statement."""
-    import re
+    from facebook_presto_spark.statements import classify
 
-    m = re.match(
-        r"\s*SET\s+SESSION\s+([A-Za-z_][A-Za-z0-9_.]*)\s*=\s*(.+?)\s*;?\s*$",
-        sql,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
+    stmt = classify(sql)
+    if stmt.kind != "set_session":
         return None
-    return m.group(1), m.group(2)
+    return ".".join(stmt.name), stmt.body

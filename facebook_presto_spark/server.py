@@ -40,12 +40,12 @@ import datetime as dt
 import decimal
 import json
 import math
-import re
 import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from facebook_presto_spark.infoschema import presto_type_name
+from facebook_presto_spark.statements import classify
 
 PAGE_SIZE = 1000
 
@@ -257,20 +257,18 @@ class _Handler(BaseHTTPRequestHandler):
                 name, eq, body64 = pair.strip().partition("=")
                 if eq:
                     engine._prepared[_up.unquote(name).lower()] = _up.unquote(body64)
-            m = re.match(r"\s*PREPARE\s+([A-Za-z_]\w*)\s+FROM\s+(.+)$", sql,
-                         re.I | re.S)
-            if m:
-                # echo the registration back (PRESTO_ADDED_PREPARE), the
-                # reference's contract for client-side statement caches
-                reply_headers["X-Presto-Added-Prepare"] = (
-                    _up.quote(m.group(1).lower(), safe="")
-                    + "=" + _up.quote(m.group(2).strip(), safe="")
-                )
-            m = re.match(r"\s*DEALLOCATE\s+PREPARE\s+([A-Za-z_]\w*)", sql, re.I)
-            if m:
-                reply_headers["X-Presto-Deallocated-Prepare"] = _up.quote(
-                    m.group(1).lower(), safe=""
-                )
+            # echo a registration back (PRESTO_ADDED_PREPARE /
+            # PRESTO_DEALLOCATED_PREPARE), the reference's contract for
+            # client-side statement caches — from the same classification
+            # the engine routes the statement by
+            stmt = classify(sql)
+            if stmt.kind in ("prepare", "deallocate"):
+                name = _up.quote(stmt.name[0].lower(), safe="")
+                if stmt.kind == "prepare":
+                    reply_headers["X-Presto-Added-Prepare"] = (
+                        name + "=" + _up.quote(stmt.body, safe=""))
+                else:
+                    reply_headers["X-Presto-Deallocated-Prepare"] = name
             # X-Presto-Transaction-Id: the client replays its transaction
             # id per request (PrestoHeaders.java:35; the Session is
             # rebuilt from headers) — bind it to this request's thread

@@ -49,8 +49,10 @@ class Tok:
         return f"{self.kind}:{self.text}"
 
 
-def tokenize(sql: str) -> list[Tok]:
-    out: list[Tok] = []
+def scan(sql: str):
+    """Lazily yield ``(token, start offset)`` pairs, skipping whitespace
+    and comments — a reader that needs only the head of a statement
+    stops early and never tokenizes the rest."""
     pos = 0
     n = len(sql)
     while pos < n:
@@ -61,8 +63,11 @@ def tokenize(sql: str) -> list[Tok]:
         kind = m.lastgroup
         if kind in ("ws", "line_comment", "block_comment"):
             continue
-        out.append(Tok(kind, m.group()))
-    return out
+        yield Tok(kind, m.group()), m.start()
+
+
+def tokenize(sql: str) -> list[Tok]:
+    return [t for t, _start in scan(sql)]
 
 
 _NO_SPACE_BEFORE = {",", ")", "]", ".", ";"}
@@ -140,3 +145,21 @@ def split_top_level(tokens: list[Tok], sep: str = ",") -> list[list[Tok]]:
         else:
             parts[-1].append(t)
     return parts
+
+
+def split_text(text: str, sep: str = ",") -> list[str]:
+    """Split SQL text on ``sep`` outside parentheses, brackets and
+    literals: the non-empty pieces, stripped, in their original spelling."""
+    parts, depth, start = [], 0, 0
+    for tok, at in scan(text):
+        if tok.kind != "op":
+            continue
+        if tok.text in ("(", "["):
+            depth += 1
+        elif tok.text in (")", "]"):
+            depth -= 1
+        elif tok.text == sep and depth == 0:
+            parts.append(text[start:at])
+            start = at + 1
+    parts.append(text[start:])
+    return [p.strip() for p in parts if p.strip()]

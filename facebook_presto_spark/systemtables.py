@@ -35,7 +35,7 @@ import re
 import threading
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 # Columns in reference declaration order.  ``end`` is a reserved word in
 # both engines — the views quote it.
@@ -74,12 +74,6 @@ TABLE_SCHEMAS = {
 }
 
 _RUNTIME_RE = re.compile(r"\bsystem\s*\.\s*runtime\s*\.", re.I)
-_KILL_RE = re.compile(
-    r"^\s*CALL\s+system\s*\.\s*runtime\s*\.\s*kill_query\s*\(\s*"
-    r"'([^']*)'\s*(?:,\s*'([^']*)')?\s*\)\s*;?\s*$",
-    re.I,
-)
-
 
 class QueryEntry:
     __slots__ = ("qid", "query", "user", "source", "state", "created",
@@ -195,8 +189,12 @@ def _sql_lit(v, t: str) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
-def _values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
-    schema = TABLE_SCHEMAS[name]
+def _values_view(spark: SparkSession, db: str, name: str, rows: list[tuple],
+                 schema: tuple | None = None) -> None:
+    """(Re)define ``db.name`` as a literal-VALUES view over ``rows``
+    (columns and types from ``schema``, by default the system.runtime
+    member's)."""
+    schema = schema or TABLE_SCHEMAS[name]
     cols = ", ".join(f"`{c}`" for c, _t in schema)
     if rows:
         values = ", ".join(
@@ -207,7 +205,7 @@ def _values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
     else:
         nulls = ", ".join(f"CAST(NULL AS {t}) AS `{c}`" for c, t in schema)
         body = f"SELECT {nulls} WHERE FALSE"
-    spark.sql(f"CREATE OR REPLACE VIEW system_runtime.`{name}` AS {body}")
+    spark.sql(f"CREATE OR REPLACE VIEW {db}.`{name}` AS {body}")
 
 
 def refresh(spark: SparkSession, registry: RuntimeQueryRegistry,
@@ -216,8 +214,8 @@ def refresh(spark: SparkSession, registry: RuntimeQueryRegistry,
     live state."""
     spark.sql("CREATE DATABASE IF NOT EXISTS system_runtime")
     sc = spark.sparkContext
-    _values_view(spark, "queries", registry.rows())
-    _values_view(spark, "nodes", [(
+    _values_view(spark, "system_runtime", "queries", registry.rows())
+    _values_view(spark, "system_runtime", "nodes", [(
         sc.applicationId, sc.uiWebUrl, f"spark-{sc.version}", True, "active",
     )])
     tasks = []
@@ -233,8 +231,8 @@ def refresh(spark: SparkSession, registry: RuntimeQueryRegistry,
             info.numActiveTasks, info.numCompletedTasks,
             now, now, now, None,
         ))
-    _values_view(spark, "tasks", tasks)
-    _values_view(spark, "transactions", transactions or [])
+    _values_view(spark, "system_runtime", "tasks", tasks)
+    _values_view(spark, "system_runtime", "transactions", transactions or [])
 
 
 # -- system.metadata (CatalogSystemTable.java:44-48,
@@ -282,18 +280,8 @@ def refresh_metadata(spark: SparkSession, catalog_name: str = "spark") -> None:
     spark.sql("CREATE DATABASE IF NOT EXISTS system_metadata")
 
     def view(name: str, rows: list[tuple]) -> None:
-        schema = _METADATA_SCHEMAS[name]
-        cols = ", ".join(f"`{c}`" for c, _t in schema)
-        if rows:
-            values = ", ".join(
-                "(" + ", ".join(_sql_lit(v, t) for v, (_c, t) in zip(row, schema)) + ")"
-                for row in rows
-            )
-            body = f"SELECT * FROM (VALUES {values}) AS t({cols})"
-        else:
-            nulls = ", ".join(f"CAST(NULL AS {t}) AS `{c}`" for c, t in schema)
-            body = f"SELECT {nulls} WHERE FALSE"
-        spark.sql(f"CREATE OR REPLACE VIEW system_metadata.`{name}` AS {body}")
+        _values_view(spark, "system_metadata", name, rows,
+                     _METADATA_SCHEMAS[name])
 
     # the primary Spark catalog plus every registered connector catalog
     # (CatalogSystemTable lists the connector registry; the connector_id
@@ -386,18 +374,7 @@ def _jdbc_type_row(presto_name: str) -> tuple:
 
 
 def _jdbc_values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
-    schema = _JDBC_SCHEMAS[name]
-    cols = ", ".join(f"`{c}`" for c, _t in schema)
-    if rows:
-        values = ", ".join(
-            "(" + ", ".join(_sql_lit(v, t) for v, (_c, t) in zip(row, schema)) + ")"
-            for row in rows
-        )
-        body = f"SELECT * FROM (VALUES {values}) AS t({cols})"
-    else:
-        nulls = ", ".join(f"CAST(NULL AS {t}) AS `{c}`" for c, t in schema)
-        body = f"SELECT {nulls} WHERE FALSE"
-    spark.sql(f"CREATE OR REPLACE VIEW system_jdbc.`{name}` AS {body}")
+    _values_view(spark, "system_jdbc", name, rows, _JDBC_SCHEMAS[name])
 
 
 def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
@@ -465,7 +442,7 @@ def rewrite_jdbc_names(sql: str) -> str:
     return _JDBC_RE.sub("system_jdbc.", sql)
 
 
-# -- engine dispatch ---------------------------------------------------------
+# -- statement name rewriting ---------------------------------------------
 
 def references_system_runtime(sql: str) -> bool:
     return bool(_RUNTIME_RE.search(sql))
@@ -475,13 +452,3 @@ def rewrite_names(sql: str) -> str:
     """``system.runtime.X`` → ``system_runtime.X`` (Spark databases are
     single-level; the catalog prefix is a name prefix, as in catalog.py)."""
     return _RUNTIME_RE.sub("system_runtime.", sql)
-
-
-def dispatch_call(engine, sql: str) -> DataFrame | None:
-    """CALL system.runtime.kill_query('<qid>'[, '<message>']) — other
-    CALLs fall through to access.reject_unsupported's loud raise."""
-    m = _KILL_RE.match(sql)
-    if m is None:
-        return None
-    engine.runtime.kill_query(m.group(1), m.group(2))
-    return engine.spark.sql("SELECT true AS ok WHERE false")

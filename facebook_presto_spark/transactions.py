@@ -29,13 +29,13 @@ writes in READ ONLY transactions with the reference's message, lists
 live transactions in ``system.runtime.transactions``, and round-trips
 the protocol headers.  Since round 8, hive/memory CTAS/INSERT/DELETE
 inside an explicit transaction register compensating actions in an
-undo log (``stage_write`` below), so ROLLBACK restores the
+undo log (``stage`` below), so ROLLBACK restores the
 pre-transaction table state — the file-retention analogue of the
 reference's SemiTransactionalHiveMetastore staging.  Writes stay
 visible between statements (READ UNCOMMITTED is the engine default,
 like the reference's TransactionManager.java:30) and within the
 transaction (read-your-writes).  Since round 9 metadata statements
-stage too (``stage_ddl``: ALTER TABLE RENAME TO / ADD COLUMN / RENAME
+stage too (ALTER TABLE RENAME TO / ADD COLUMN / RENAME
 COLUMN / DROP COLUMN, DROP TABLE, CREATE/DROP VIEW — the same set
 SemiTransactionalHiveMetastore queues).  The remaining
 single-statement residual is session/authorization state (GRANT/
@@ -71,7 +71,7 @@ class TransactionInfo:
         self.written_catalog: str | None = None
         self.catalogs: list[str] = []
         # round 8: compensating actions for hive/memory writes staged
-        # inside this transaction (stage_write), run in reverse on
+        # inside this transaction (stage), run in reverse on
         # ROLLBACK; backup_dirs holds the .txn_undo file retention
         self.undo: list = []
         self.backup_dirs: list[str] = []
@@ -135,28 +135,32 @@ class TransactionManager:
 
 
 # ---------------------------------------------------------------------------
-# statement dispatch
+# statement handlers and the transaction guard
 # ---------------------------------------------------------------------------
 
-_START_RE = re.compile(
-    r"\s*START\s+TRANSACTION\b(?P<modes>[^;]*);?\s*$", re.I | re.S
-)
-_COMMIT_RE = re.compile(r"\s*COMMIT(\s+WORK)?\s*;?\s*$", re.I)
-_ROLLBACK_RE = re.compile(r"\s*ROLLBACK(\s+WORK)?\s*;?\s*$", re.I)
 _MODE_RE = re.compile(
     r"ISOLATION\s+LEVEL\s+(READ\s+UNCOMMITTED|READ\s+COMMITTED|"
     r"REPEATABLE\s+READ|SERIALIZABLE)|READ\s+(ONLY|WRITE)",
     re.I,
 )
 
-# statements that write through a connector or the catalog — the set the
-# READ ONLY check guards (InMemoryTransactionManager.checkConnectorWrite
-# fires for any metadata/data mutation)
-_WRITE_RE = re.compile(
-    r"\s*(INSERT|DELETE|UPDATE|CREATE|DROP|ALTER|TRUNCATE|GRANT|REVOKE|"
-    r"ANALYZE|REFRESH)\b",
-    re.I,
-)
+# statement verbs that write through a connector or the catalog — the
+# set the READ ONLY check guards (InMemoryTransactionManager.
+# checkConnectorWrite fires for any metadata/data mutation)
+_WRITE_VERBS = frozenset({
+    "INSERT", "DELETE", "UPDATE", "CREATE", "DROP", "ALTER", "TRUNCATE",
+    "GRANT", "REVOKE", "ANALYZE", "REFRESH",
+})
+# kinds whose target table's catalog is recorded on the transaction
+_TABLE_KINDS = frozenset({
+    "insert", "delete", "create_table", "create_table_as", "drop_table",
+    "rename_table", "add_column", "rename_column", "drop_column",
+})
+# session and transaction-control statements are not transactional work
+_CONTROL_KINDS = frozenset({
+    "set_session", "reset_session", "use",
+    "start_transaction", "commit", "rollback",
+})
 
 
 def _parse_modes(text: str) -> tuple[str, bool]:
@@ -184,94 +188,97 @@ def _parse_modes(text: str) -> tuple[str, bool]:
     )
 
 
-def dispatch(engine, sql: str):
-    """Handle the three transaction-control statements; None = not ours.
+def start(engine, stmt):
+    """START TRANSACTION [modes].
 
     The current transaction id is engine-session state but thread-local
     (one protocol request = one thread = one session snapshot, like the
     reference's header-rebuilt Session)."""
-    m = _START_RE.match(sql)
-    if m:
-        if engine.current_transaction() is not None:
-            raise ValueError("Nested transactions not supported")
-        isolation, read_only = _parse_modes(m.group("modes") or "")
-        tid = engine.transactions.begin(isolation, read_only)
-        engine.set_current_transaction(tid)
-        engine.txn_event = ("started", tid)
-        return engine.spark.sql("SELECT true AS ok WHERE false")
-    is_commit = bool(_COMMIT_RE.match(sql))
-    if is_commit or _ROLLBACK_RE.match(sql):
-        tid = engine.current_transaction()
-        if tid is None:
-            # CommitTask.java / RollbackTask.java — NOT_IN_TRANSACTION
-            raise ValueError("No transaction in progress")
-        info = engine.transactions.get(tid)
-        failures: list[Exception] = []
-        retained: list[str] = []
-        try:
-            if not is_commit:
-                # run the compensating actions in reverse statement
-                # order (stage_write/stage_ddl) — the rollback path of
-                # the reference's SemiTransactionalHiveMetastore.  One
-                # failing undo must NOT abort the rest: every remaining
-                # compensation is still attempted, and the failures are
-                # aggregated into the raised error.
-                info.rolling_back = True
-                try:
-                    for undo in reversed(list(info.undo)):
-                        try:
-                            undo()
-                        except Exception as exc:
-                            failures.append(exc)
-                finally:
-                    info.rolling_back = False
-        finally:
-            # a failing compensation must still TERMINATE the
-            # transaction (the reference's rollback is terminal too) —
-            # otherwise the session is stuck inside a stale transaction.
-            # But when any undo failed, KEEP the .txn_undo retention:
-            # it is the only material for repairing the part-rolled-back
-            # table state, and discarding it would destroy the evidence.
-            if failures:
-                retained = list(info.backup_dirs)
-                info.undo.clear()
-                info.backup_dirs.clear()
-            else:
-                _discard_staging(info)
-            engine.transactions.end(tid)
-            engine.set_current_transaction(None)
-            engine.txn_event = ("cleared", tid)
-        if failures:
-            msgs = "; ".join(f"{type(e).__name__}: {e}" for e in failures)
-            raise RuntimeError(
-                f"rollback: {len(failures)} compensating action(s) failed "
-                f"({msgs}); transaction terminated, file retention kept at "
-                f"{retained}") from failures[0]
-        return engine.spark.sql("SELECT true AS ok WHERE false")
-    return None
+    if engine.current_transaction() is not None:
+        raise ValueError("Nested transactions not supported")
+    isolation, read_only = _parse_modes(stmt.body)
+    tid = engine.transactions.begin(isolation, read_only)
+    engine.set_current_transaction(tid)
+    engine.txn_event = ("started", tid)
+    return engine.ok()
 
 
-def check_write(engine, sql: str) -> None:
-    """READ_ONLY_VIOLATION (InMemoryTransactionManager.java:456) for any
-    write statement inside an explicit READ ONLY transaction; also
-    stamps activity/written-catalog on the live transaction."""
+def commit(engine, stmt):
+    return _finish(engine, rollback=False)
+
+
+def rollback(engine, stmt):
+    return _finish(engine, rollback=True)
+
+
+def _finish(engine, rollback: bool):
     tid = engine.current_transaction()
     if tid is None:
+        # CommitTask.java / RollbackTask.java — NOT_IN_TRANSACTION
+        raise ValueError("No transaction in progress")
+    info = engine.transactions.get(tid)
+    failures: list[Exception] = []
+    retained: list[str] = []
+    try:
+        if rollback:
+            # run the compensating actions in reverse statement order
+            # (see stage) — the rollback path of the reference's
+            # SemiTransactionalHiveMetastore.  One failing undo must NOT
+            # abort the rest: every remaining compensation is still
+            # attempted, and the failures are aggregated into the raised
+            # error.
+            info.rolling_back = True
+            try:
+                for undo in reversed(list(info.undo)):
+                    try:
+                        undo()
+                    except Exception as exc:
+                        failures.append(exc)
+            finally:
+                info.rolling_back = False
+    finally:
+        # a failing compensation must still TERMINATE the transaction
+        # (the reference's rollback is terminal too) — otherwise the
+        # session is stuck inside a stale transaction.  But when any undo
+        # failed, KEEP the .txn_undo retention: it is the only material
+        # for repairing the part-rolled-back table state, and discarding
+        # it would destroy the evidence.
+        if failures:
+            retained = list(info.backup_dirs)
+            info.undo.clear()
+            info.backup_dirs.clear()
+        else:
+            _discard_staging(info)
+        engine.transactions.end(tid)
+        engine.set_current_transaction(None)
+        engine.txn_event = ("cleared", tid)
+    if failures:
+        msgs = "; ".join(f"{type(e).__name__}: {e}" for e in failures)
+        raise RuntimeError(
+            f"rollback: {len(failures)} compensating action(s) failed "
+            f"({msgs}); transaction terminated, file retention kept at "
+            f"{retained}") from failures[0]
+    return engine.ok()
+
+
+def guard(engine, stmt) -> None:
+    """Inside an explicit transaction: READ_ONLY_VIOLATION
+    (InMemoryTransactionManager.java:456) for a write in a READ ONLY
+    transaction, activity/written-catalog stamps on the live
+    transaction, and the statement's compensating action (``stage``)."""
+    tid = engine.current_transaction()
+    if tid is None or stmt.kind in _CONTROL_KINDS:
         return
     info = engine.transactions.get(tid)
-    is_write = bool(_WRITE_RE.match(sql))
+    is_write = stmt.verb in _WRITE_VERBS
     if is_write and info.read_only:
         raise ValueError("Cannot execute write in a read-only transaction")
-    catalog = "spark"
-    m = re.match(
-        r"\s*(?:INSERT\s+INTO|DELETE\s+FROM|CREATE\s+TABLE(?:\s+IF\s+NOT"
-        r"\s+EXISTS)?|DROP\s+TABLE(?:\s+IF\s+EXISTS)?|ALTER\s+TABLE)\s+"
-        r"([A-Za-z_]\w*)\s*\.",
-        sql, re.I,
-    )
-    if m and m.group(1).lower() in ("hive", "memory", "blackhole", "tpch"):
-        catalog = m.group(1).lower()
+    first = stmt.name[0].lower() if (
+        stmt.kind in _TABLE_KINDS and len(stmt.name) > 1) else None
+    catalog = first if first in ("hive", "memory", "blackhole", "tpch") else "spark"
     engine.transactions.touch(tid, catalog=catalog, wrote=is_write)
+    if not info.rolling_back:
+        stage(engine, stmt, info)
 
 
 # ---------------------------------------------------------------------------
@@ -301,15 +308,6 @@ def check_write(engine, sql: str) -> None:
 # - memory INSERT → re-pin the pre-insert cached DataFrame
 #   (localCheckpoint keeps it materialized after the view re-pins).
 # ---------------------------------------------------------------------------
-
-_STAGE_NAME = r'(?:"[^"]+"|[A-Za-z_]\w*)'
-_STAGE_RE = re.compile(
-    rf"\s*(?P<op>CREATE\s+TABLE(?:\s+IF\s+NOT\s+EXISTS)?|INSERT\s+INTO|"
-    rf"DELETE\s+FROM)\s+(?P<cat>hive|memory)\s*\.\s*"
-    rf"(?P<schema>{_STAGE_NAME})\s*\.\s*(?P<table>{_STAGE_NAME})",
-    re.I,
-)
-
 
 def _local_path(uri: str):
     from urllib.parse import unquote, urlparse
@@ -342,15 +340,16 @@ def _spec_sql(spec: str) -> str:
     return ", ".join(parts)
 
 
-def _backup_files(spark, qualified: str) -> tuple:
-    """Hard-link every current data file into a .txn_undo staging dir;
-    returns (staging_root, {original_path: backup_path}).  Same-
-    filesystem links are O(1) per file; cross-device (external
-    locations) falls back to a copy."""
+def _retain(spark, qualified: str, info: TransactionInfo):
+    """Hard-link every current data file of ``qualified`` into a
+    .txn_undo staging dir (recorded on ``info`` for cleanup) and return
+    the function that restores those files and re-registers the current
+    partitions.  Same-filesystem links are O(1) per file; cross-device
+    (external locations) falls back to a copy."""
     import os
-    import shutil
     import uuid as _uuid
 
+    parts = _partition_specs(spark, qualified)
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     wh = _local_path(warehouse) or warehouse
     bdir = os.path.join(wh, ".txn_undo", _uuid.uuid4().hex)
@@ -359,44 +358,53 @@ def _backup_files(spark, qualified: str) -> tuple:
         path = _local_path(uri)
         if path is None or not os.path.exists(path):
             continue
-        dst = os.path.join(bdir, path.lstrip("/"))
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        try:
-            os.link(path, dst)
-        except OSError:
-            shutil.copy2(path, dst)
-        backup[path] = dst
-    return bdir, backup
+        backup[path] = dst = os.path.join(bdir, path.lstrip("/"))
+        _link(path, dst)
+    if backup:
+        info.backup_dirs.append(bdir)
+
+    def restore():
+        for orig, bk in backup.items():
+            if not os.path.exists(orig):
+                _link(bk, orig)
+        if parts:
+            now = set(_partition_specs(spark, qualified) or [])
+            for spec in parts:
+                if spec not in now:
+                    spark.sql(f"ALTER TABLE {qualified} "
+                              f"ADD PARTITION ({_spec_sql(spec)})")
+        spark.catalog.refreshTable(qualified)
+
+    return restore
 
 
-def stage_write(engine, sql: str) -> None:
-    """Register a compensating action on the current transaction for a
-    hive.*/memory.* CTAS/INSERT/DELETE; no-op outside a transaction or
-    for other statements (they keep single-statement semantics)."""
-    tid = engine.current_transaction()
-    if tid is None:
-        return
-    m = _STAGE_RE.match(sql)
-    if m is None:
-        return
-    info = engine.transactions.get(tid)
-    if info.rolling_back:
-        return
-    op = re.sub(r"\s+", " ", m.group("op").upper())
-    schema = m.group("schema").strip('"')
-    table = m.group("table").strip('"')
+def _link(src: str, dst: str) -> None:
+    import os
+    import shutil
+
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+def _stage_write(engine, stmt, info: TransactionInfo) -> None:
+    """Compensating action for a hive.*/memory.* CTAS/INSERT/DELETE."""
+    op = stmt.kind
+    schema, table = stmt.schema, stmt.table
     spark = engine.spark
 
-    if m.group("cat").lower() == "memory":
+    if stmt.catalog == "memory":
         from facebook_presto_spark.connectors import get_catalogs
 
         mem = get_catalogs(spark).memory
-        if op.startswith("CREATE TABLE"):
+        if op.startswith("create_table"):
             if (schema, table) not in mem.tables:
                 info.undo.append(
                     lambda: mem.drop(schema, table, if_exists=True)
                 )
-        elif op == "INSERT INTO" and (schema, table) in mem.tables:
+        elif op == "insert" and (schema, table) in mem.tables:
             view = mem.tables[(schema, table)]
             prev = spark.table(view).localCheckpoint(eager=True)
 
@@ -412,67 +420,40 @@ def stage_write(engine, sql: str) -> None:
     from facebook_presto_spark.hive_catalog import get_catalog
 
     cat = get_catalog(spark)
-    if op.startswith("CREATE TABLE"):
+    if op.startswith("create_table"):
         if not cat._exists(schema, table):
             info.undo.append(lambda: cat.drop(schema, table, if_exists=True))
         return
     if not cat._exists(schema, table):
         return  # the statement itself will fail; nothing to compensate
     qualified = cat.qualified(schema, table)
-    parts_before = _partition_specs(spark, qualified)
-
-    if op == "INSERT INTO":
-        files_before = set(spark.table(qualified).inputFiles())
-
-        def undo_insert():
-            import os
-
-            spark.catalog.refreshTable(qualified)
-            for uri in set(spark.table(qualified).inputFiles()) - files_before:
-                path = _local_path(uri)
-                if path and os.path.exists(path):
-                    os.remove(path)
-            if parts_before is not None:
-                added = set(_partition_specs(spark, qualified) or []) - set(
-                    parts_before
-                )
-                for spec in added:
-                    spark.sql(
-                        f"ALTER TABLE {qualified} "
-                        f"DROP PARTITION ({_spec_sql(spec)})"
-                    )
-            spark.catalog.refreshTable(qualified)
-
-        info.undo.append(undo_insert)
+    if op == "delete":
+        # retain the current files via hard links
+        info.undo.append(_retain(spark, qualified, info))
         return
+    parts_before = _partition_specs(spark, qualified)
+    files_before = set(spark.table(qualified).inputFiles())
 
-    # DELETE FROM — retain the current files via hard links
-    bdir, backup = _backup_files(spark, qualified)
-    if backup:
-        info.backup_dirs.append(bdir)
-
-    def undo_delete():
+    def undo_insert():
         import os
-        import shutil
 
-        for orig, bk in backup.items():
-            if not os.path.exists(orig):
-                os.makedirs(os.path.dirname(orig), exist_ok=True)
-                try:
-                    os.link(bk, orig)
-                except OSError:
-                    shutil.copy2(bk, orig)
+        spark.catalog.refreshTable(qualified)
+        for uri in set(spark.table(qualified).inputFiles()) - files_before:
+            path = _local_path(uri)
+            if path and os.path.exists(path):
+                os.remove(path)
         if parts_before is not None:
-            now = set(_partition_specs(spark, qualified) or [])
-            for spec in parts_before:
-                if spec not in now:
-                    spark.sql(
-                        f"ALTER TABLE {qualified} "
-                        f"ADD PARTITION ({_spec_sql(spec)})"
-                    )
+            added = set(_partition_specs(spark, qualified) or []) - set(
+                parts_before
+            )
+            for spec in added:
+                spark.sql(
+                    f"ALTER TABLE {qualified} "
+                    f"DROP PARTITION ({_spec_sql(spec)})"
+                )
         spark.catalog.refreshTable(qualified)
 
-    info.undo.append(undo_delete)
+    info.undo.append(undo_insert)
 
 
 # ---------------------------------------------------------------------------
@@ -496,32 +477,6 @@ def stage_write(engine, sql: str) -> None:
 #   re-run the recorded Presto-dialect definition.
 # ---------------------------------------------------------------------------
 
-_DDL_T3 = rf"(?P<cat>hive|memory)\s*\.\s*(?P<schema>{_STAGE_NAME})\s*\.\s*" \
-          rf"(?P<table>{_STAGE_NAME})"
-_DDL_RENAME_RE = re.compile(
-    rf"\s*ALTER\s+TABLE\s+{_DDL_T3}\s+RENAME\s+TO\s+"
-    rf"(?:(?:hive|memory)\s*\.\s*)?(?:(?P<nschema>{_STAGE_NAME})\s*\.\s*)?"
-    rf"(?P<ntable>{_STAGE_NAME})\s*;?\s*$",
-    re.I,
-)
-_DDL_ADDCOL_RE = re.compile(
-    rf"\s*ALTER\s+TABLE\s+{_DDL_T3}\s+ADD\s+COLUMN\s+", re.I)
-_DDL_DESTRUCTIVE_RE = re.compile(
-    rf"\s*ALTER\s+TABLE\s+{_DDL_T3}\s+(?:RENAME|DROP)\s+COLUMN\s+", re.I)
-_DDL_DROP_RE = re.compile(
-    rf"\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?{_DDL_T3}\s*;?\s*$", re.I)
-_DDL_CREATE_SCHEMA_RE = re.compile(
-    rf"\s*CREATE\s+SCHEMA\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    rf"(?P<cat>hive|memory)\s*\.\s*(?P<schema>{_STAGE_NAME})\s*;?\s*$", re.I)
-_DDL_DROP_SCHEMA_RE = re.compile(
-    rf"\s*DROP\s+SCHEMA\s+(?:IF\s+EXISTS\s+)?"
-    rf"(?P<cat>hive|memory)\s*\.\s*(?P<schema>{_STAGE_NAME})\s*;?\s*$", re.I)
-_DDL_CREATE_VIEW_RE = re.compile(
-    r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+([\w.\"]+)\s+AS\s+", re.I)
-_DDL_DROP_VIEW_RE = re.compile(
-    r"\s*DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s*;?\s*$", re.I)
-
-
 def _snapshot_hive_table(engine, schema: str, table: str,
                          info: TransactionInfo) -> None:
     """Full-compensation snapshot for destructive hive DDL: the
@@ -534,68 +489,43 @@ def _snapshot_hive_table(engine, schema: str, table: str,
     qualified = cat.qualified(schema, table)
     create_sql = engine.sql(
         f"SHOW CREATE TABLE hive.{schema}.{table}").collect()[0][0]
-    parts = _partition_specs(spark, qualified)
-    bdir, backup = _backup_files(spark, qualified)
-    if backup:
-        info.backup_dirs.append(bdir)
+    restore = _retain(spark, qualified, info)
 
     def undo():
-        import os
-        import shutil
-
-        cat2 = get_catalog(spark)
-        cat2.drop(schema, table, if_exists=True)
+        get_catalog(spark).drop(schema, table, if_exists=True)
         engine.sql(create_sql).collect()
-        for orig, bk in backup.items():
-            if not os.path.exists(orig):
-                os.makedirs(os.path.dirname(orig), exist_ok=True)
-                try:
-                    os.link(bk, orig)
-                except OSError:
-                    shutil.copy2(bk, orig)
-        if parts:
-            now = set(_partition_specs(spark, qualified) or [])
-            for spec in parts:
-                if spec not in now:
-                    spark.sql(f"ALTER TABLE {qualified} "
-                              f"ADD PARTITION ({_spec_sql(spec)})")
-        spark.catalog.refreshTable(qualified)
+        restore()
 
     info.undo.append(undo)
 
 
-def stage_ddl(engine, sql: str) -> None:
-    """Register compensating actions for metadata statements (ALTER/
-    DROP TABLE, CREATE/DROP VIEW) inside an explicit transaction, per
-    SemiTransactionalHiveMetastore's staged renames and drops."""
-    tid = engine.current_transaction()
-    if tid is None:
-        return
-    info = engine.transactions.get(tid)
-    if info.rolling_back:
-        return
+def stage(engine, stmt, info: TransactionInfo) -> None:
+    """Register the compensating action for ``stmt`` on the transaction:
+    hive/memory writes (``_stage_write``), and metadata statements (ALTER/
+    DROP TABLE, schema DDL, GRANT/REVOKE, CREATE/DROP VIEW) per
+    SemiTransactionalHiveMetastore's staged renames and drops.  Other
+    statements keep single-statement semantics."""
     spark = engine.spark
+    kind, schema, table = stmt.kind, stmt.schema, stmt.table
+    hive_or_memory = stmt.catalog in ("hive", "memory")
+    if stmt.catalog == "hive":
+        from facebook_presto_spark.hive_catalog import get_catalog
 
-    # schema DDL: the reference BUFFERS createDatabase/dropDatabase as
-    # exclusive operations that execute only at COMMIT
-    # (SemiTransactionalHiveMetastore.java:283-290, setExclusive:1519) —
-    # on ROLLBACK the mutation never happens.  The compensating-undo
-    # equivalent: CREATE SCHEMA undoes with a drop (tables created
-    # inside the transaction are undone first, reverse order), DROP
-    # SCHEMA — which only ever succeeds on an EMPTY schema — undoes by
-    # re-creating it.  (SET SESSION is deliberately NOT staged: the
-    # reference applies session properties to the session unconditionally
-    # — SetSessionTask.java:90 — so they survive ROLLBACK there too.)
-    # GRANT/REVOKE: the reference buffers grantTablePrivileges /
-    # revokeTablePrivileges the same exclusive way
-    # (SemiTransactionalHiveMetastore.java:777, setExclusive) — COMMIT
-    # applies, ROLLBACK discards.  The grant registry is a small
-    # in-memory dict, so the compensation is a snapshot-restore of the
-    # affected (grantee, table) slot.
-    from facebook_presto_spark import access
+        cat = get_catalog(spark)
+    elif stmt.catalog == "memory":
+        from facebook_presto_spark.connectors import get_catalogs
 
-    mg = access.GRANT_RE.match(sql) or access.REVOKE_RE.match(sql)
-    if mg:
+        mem = get_catalogs(spark).memory
+
+    if kind in ("create_table", "create_table_as", "insert", "delete"):
+        if hive_or_memory:
+            _stage_write(engine, stmt, info)
+    elif kind in ("grant", "revoke"):
+        # GRANT/REVOKE: the reference buffers grantTablePrivileges /
+        # revokeTablePrivileges as exclusive operations
+        # (SemiTransactionalHiveMetastore.java:777, setExclusive) — COMMIT
+        # applies, ROLLBACK discards.  The grant registry is a small
+        # in-memory dict, so the compensation is a snapshot-restore.
         import copy
 
         snapshot = copy.deepcopy(engine.grants._grants)
@@ -605,73 +535,35 @@ def stage_ddl(engine, sql: str) -> None:
             engine.grants._grants.update(snapshot)
 
         info.undo.append(undo_grants)
-        return
-
-    m = _DDL_CREATE_SCHEMA_RE.match(sql)
-    if m:
-        schema = m.group("schema").strip('"').lower()
-        if m.group("cat").lower() == "hive":
-            from facebook_presto_spark.hive_catalog import get_catalog
-
-            if schema not in get_catalog(spark).list_schemas():
-                info.undo.append(
-                    lambda: get_catalog(spark).drop_schema(schema, True))
-        else:
-            from facebook_presto_spark.connectors import get_catalogs
-
-            mem = get_catalogs(spark).memory
-            if schema not in mem.schemas:
-                info.undo.append(lambda: mem.drop_schema(schema, True))
-        return
-
-    m = _DDL_DROP_SCHEMA_RE.match(sql)
-    if m:
-        schema = m.group("schema").strip('"').lower()
-        if m.group("cat").lower() == "hive":
-            from facebook_presto_spark.hive_catalog import get_catalog
-
-            if schema in get_catalog(spark).list_schemas():
-                info.undo.append(
-                    lambda: get_catalog(spark).create_schema(schema, True))
-        else:
-            from facebook_presto_spark.connectors import get_catalogs
-
-            mem = get_catalogs(spark).memory
-            if schema in mem.schemas:
-                info.undo.append(lambda: mem.create_schema(schema, True))
-        return
-
-    m = _DDL_RENAME_RE.match(sql)
-    if m:
-        cat_name = m.group("cat").lower()
-        schema = m.group("schema").strip('"')
-        table = m.group("table").strip('"')
-        nschema = (m.group("nschema") or schema).strip('"')
-        ntable = m.group("ntable").strip('"')
-        if cat_name == "hive":
-            from facebook_presto_spark.hive_catalog import get_catalog
-
-            cat = get_catalog(spark)
+    elif kind in ("create_schema", "drop_schema") and hive_or_memory:
+        # schema DDL: the reference BUFFERS createDatabase/dropDatabase as
+        # exclusive operations that execute only at COMMIT
+        # (SemiTransactionalHiveMetastore.java:283-290, setExclusive:1519)
+        # — on ROLLBACK the mutation never happens.  The compensating-undo
+        # equivalent: CREATE SCHEMA undoes with a drop (tables created
+        # inside the transaction are undone first, reverse order), DROP
+        # SCHEMA — which only ever succeeds on an EMPTY schema — undoes
+        # by re-creating it.  (SET SESSION is deliberately NOT staged: the
+        # reference applies session properties to the session
+        # unconditionally — SetSessionTask.java:90 — so they survive
+        # ROLLBACK there too.)
+        target = cat if stmt.catalog == "hive" else mem
+        exists = schema in (
+            cat.list_schemas() if stmt.catalog == "hive" else mem.schemas)
+        if kind == "create_schema" and not exists:
+            info.undo.append(lambda: target.drop_schema(schema, True))
+        elif kind == "drop_schema" and exists:
+            info.undo.append(lambda: target.create_schema(schema, True))
+    elif kind == "rename_table" and hive_or_memory:
+        nschema, ntable = stmt.new_table
+        if stmt.catalog == "hive":
             if cat._exists(schema, table):
                 info.undo.append(
                     lambda: get_catalog(spark).rename(
                         nschema, ntable, schema, table))
-        else:
-            from facebook_presto_spark.connectors import get_catalogs
-
-            mem = get_catalogs(spark).memory
-            if (schema, table) in mem.tables:
-                info.undo.append(
-                    lambda: mem.rename(nschema, ntable, schema, table))
-        return
-
-    m = _DDL_ADDCOL_RE.match(sql)
-    if m and m.group("cat").lower() == "hive":
-        schema = m.group("schema").strip('"')
-        table = m.group("table").strip('"')
-        from facebook_presto_spark.hive_catalog import get_catalog
-
-        cat = get_catalog(spark)
+        elif (schema, table) in mem.tables:
+            info.undo.append(lambda: mem.rename(nschema, ntable, schema, table))
+    elif kind == "add_column" and stmt.catalog == "hive":
         if not cat._exists(schema, table):
             return
         db = cat.db_name(schema)
@@ -692,63 +584,37 @@ def stage_ddl(engine, sql: str) -> None:
             spark.catalog.refreshTable(f"{db}.{table}")
 
         info.undo.append(undo_addcol)
-        return
-
-    m = _DDL_DESTRUCTIVE_RE.match(sql) or _DDL_DROP_RE.match(sql)
-    if m:
-        schema = m.group("schema").strip('"')
-        table = m.group("table").strip('"')
-        if m.group("cat").lower() == "hive":
-            from facebook_presto_spark.hive_catalog import get_catalog
-
-            if get_catalog(spark)._exists(schema, table):
+    elif kind in ("rename_column", "drop_column", "drop_table") and hive_or_memory:
+        if stmt.catalog == "hive":
+            if cat._exists(schema, table):
                 _snapshot_hive_table(engine, schema, table, info)
-        else:
-            from facebook_presto_spark.connectors import get_catalogs
+        elif kind == "drop_table" and (schema, table) in mem.tables:
+            view = mem.tables[(schema, table)]
+            prev = spark.table(view).localCheckpoint(eager=True)
 
-            mem = get_catalogs(spark).memory
-            view = mem.tables.get((schema, table))
-            if view is not None and _DDL_DROP_RE.match(sql):
-                prev = spark.table(view).localCheckpoint(eager=True)
+            def undo_mem_drop():
+                mem.tables[(schema, table)] = view
+                mem._pin(view, prev)
 
-                def undo_mem_drop():
-                    mem.tables[(schema, table)] = view
-                    mem._pin(view, prev)
-
-                info.undo.append(undo_mem_drop)
-        return
-
-    m = _DDL_CREATE_VIEW_RE.match(sql)
-    if m:
-        name = m.group(1).strip('"').split(".")[-1].lower()
+            info.undo.append(undo_mem_drop)
+    elif kind in ("create_view", "drop_view"):
+        name = table
         prev = engine._views.get(name)
 
-        def undo_create_view():
-            if prev is None:
-                try:
-                    spark.catalog.dropTempView(name)
-                except Exception:
-                    pass
-                engine._views.pop(name, None)
-            else:
+        def undo_view():
+            if prev is not None:
                 spark.sql(engine.translate(
                     f"CREATE OR REPLACE VIEW {name} AS {prev}"))
                 engine._views[name] = prev
+                return
+            try:
+                spark.catalog.dropTempView(name)
+            except Exception:
+                pass
+            engine._views.pop(name, None)
 
-        info.undo.append(undo_create_view)
-        return
-
-    m = _DDL_DROP_VIEW_RE.match(sql)
-    if m:
-        name = m.group(1).strip('"').split(".")[-1].lower()
-        prev = engine._views.get(name)
-        if prev is not None:
-            def undo_drop_view():
-                spark.sql(engine.translate(
-                    f"CREATE OR REPLACE VIEW {name} AS {prev}"))
-                engine._views[name] = prev
-
-            info.undo.append(undo_drop_view)
+        if kind == "create_view" or prev is not None:
+            info.undo.append(undo_view)
 
 
 def _discard_staging(info: TransactionInfo) -> None:

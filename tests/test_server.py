@@ -134,6 +134,8 @@ def test_large_result_streams_pages(server):
     "SHOW FUNCTIONS",
     "SHOW SESSION",
     "SET SESSION hash_partition_count = 7",
+    "EXPLAIN (TYPE VALIDATE) SELECT n_name FROM nation",
+    "SHOW GRANTS",
 ])
 def test_metadata_statement_starts_no_spark_job(server, spark_jobs, sql):
     """Metadata answers from the driver, like the reference's
@@ -142,12 +144,16 @@ def test_metadata_statement_starts_no_spark_job(server, spark_jobs, sql):
     from facebook_presto_spark.properties import restore_confs, snapshot_confs
 
     snap = snapshot_confs(server.engine.spark, ["hash_partition_count"])
+    if sql == "SHOW GRANTS":  # a grant to list
+        server.engine.sql("GRANT SELECT ON nation TO grants_probe")
     try:
         with spark_jobs() as jobs:
             res = _post(server, sql)
             rows = _drain(server, res)
     finally:
         restore_confs(server.engine.spark, snap)
+        if sql == "SHOW GRANTS":
+            server.engine.sql("REVOKE SELECT ON nation FROM grants_probe")
     assert res["error"] is None
     assert sql.startswith("SET") or rows
     assert jobs.count == 0

@@ -1,4 +1,4 @@
-"""Transaction write-staging (transactions.py stage_write, round 8).
+"""Transaction write-staging (transactions.py stage, round 8).
 
 The reference stages connector writes in SemiTransactionalHiveMetastore
 (presto-hive/src/main/java/com/facebook/presto/hive/metastore/
@@ -232,7 +232,7 @@ def test_rollback_after_failed_statement_is_harmless(eng, spark):
     before = sorted(eng.sql("SELECT * FROM hive.txn.t_failstmt").collect())
     eng.sql("START TRANSACTION")
     # row-level hive DELETE raises (partition-delete-only connector)
-    # AFTER stage_write already registered its compensation
+    # AFTER stage already registered its compensation
     with pytest.raises(ValueError, match="partitions are deleted"):
         eng.sql("DELETE FROM hive.txn.t_failstmt WHERE n_nationkey = 3")
     eng.sql("ROLLBACK")
@@ -250,7 +250,7 @@ def test_writes_outside_transaction_unstaged(eng, spark):
     ).collect()[0].n == 2
 
 
-# --- round 9: metadata-statement staging (stage_ddl) ------------------------
+# --- round 9: metadata-statement staging (stage) -----------------------------
 # SemiTransactionalHiveMetastore stages renames and drops alongside the
 # write path; these pin DDL → ROLLBACK round-trips.
 

@@ -20,15 +20,15 @@ Reference surface (all semantics re-derived, none of the Java ported):
   timestamps), ``LocalFileMetadata.java:49`` (single ``logs`` schema).
 
 Spark mapping: every connector table surfaces as a session temp view
-under a mangled name (``memory.default.t`` → ``memory_default_t``); the
-``references`` / ``prepare`` pair follows the ``systemtables.py``
-pattern (refresh just-in-time, rewrite three-part names, let the normal
-translate path plan the query).  Memory tables are ``cacheTable``-pinned
-DataFrames — the byte accounting reads the cached relation's plan
-statistics, the same figure MemoryPagesStore tracks per node.  Blackhole
-reads are generated ``spark.range`` plans with ``split_count`` input
-partitions, so parallelism mirrors the reference's split fan-out and the
-constant columns stay inside whole-stage codegen.  Local-file reads are
+under a mangled name (``memory.default.t`` → ``memory_default_t``):
+``resolve`` registers the view a read needs just-in-time and names it in
+place of the three-part reference that ``statements.references`` found,
+and the normal translate path plans the query.  Memory tables are
+``cacheTable``-pinned DataFrames — the byte accounting reads the cached
+relation's plan statistics, the same figure MemoryPagesStore tracks per
+node.  Blackhole reads are generated ``spark.range`` plans with
+``split_count`` input partitions, so parallelism mirrors the reference's
+split fan-out and the constant columns stay inside whole-stage codegen.  Local-file reads are
 native ``spark.read.csv`` scans (header-less TSV), which keeps column
 pruning and predicate pushdown on the text source.
 
@@ -42,7 +42,9 @@ one-split-per-DataLocation file listing.
 from __future__ import annotations
 
 import re
+import threading
 import time
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,8 +52,6 @@ from pyspark.sql import functions as F
 from facebook_presto_spark.session import local_dataframe
 from facebook_presto_spark.sqlfront.tokens import split_text
 from facebook_presto_spark.statements import column_names, split_with_data
-
-_NAME = r"[A-Za-z_][A-Za-z0-9_]*"
 
 MEMORY_MAX_BYTES_DEFAULT = 128 << 20  # MemoryConfig.java:24
 
@@ -936,68 +936,22 @@ class ConnectorCatalogs:
         self.tpch = TpchCatalog(spark)
 
 
-_CATALOGS: dict[int, ConnectorCatalogs] = {}
+# keyed weakly on the session object, not on ``id(spark)``: a collected
+# session's id can be reused by a new one; entries are created under a
+# lock because protocol-server request threads reach this concurrently
+_CATALOGS: "weakref.WeakKeyDictionary[SparkSession, ConnectorCatalogs]" = (
+    weakref.WeakKeyDictionary())
+_CATALOGS_LOCK = threading.Lock()
 
 
 def get_catalogs(spark: SparkSession) -> ConnectorCatalogs:
     """One connector-state registry per SparkSession — connector tables
     outlive any single engine instance, like the reference's
     coordinator-held connector metadata."""
-    key = id(spark)
-    if key not in _CATALOGS:
-        _CATALOGS[key] = ConnectorCatalogs(spark)
-    return _CATALOGS[key]
-
-
-_JMX_REF = r'jmx\.(current|history)\.(?:"([^"]+)"|([A-Za-z_][\w.]*))'
-_REF_RE = re.compile(
-    rf"\b(?:(?:memory|blackhole|localfile|example|tpch)\.{_NAME}\.{_NAME}"
-    rf"|{_JMX_REF})",
-    re.I,
-)
-
-
-def _split_literals(sql: str) -> list[tuple[str, bool]]:
-    """Split SQL into (segment, is_string_literal) pieces so that
-    catalog-name rewriting never touches text inside '...' literals
-    (including '' escapes)."""
-    out: list[tuple[str, bool]] = []
-    i, n = 0, len(sql)
-    start = 0
-    while i < n:
-        if sql[i] == "'":
-            if i > start:
-                out.append((sql[start:i], False))
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":  # '' escape
-                        j += 2
-                        continue
-                    break
-                j += 1
-            j = min(j + 1, n)
-            out.append((sql[i:j], True))
-            i = start = j
-        else:
-            i += 1
-    if start < n:
-        out.append((sql[start:], False))
-    return out
-
-
-def _sub_outside_literals(pattern: re.Pattern, repl, sql: str) -> str:
-    return "".join(
-        seg if is_lit else pattern.sub(repl, seg)
-        for seg, is_lit in _split_literals(sql)
-    )
-
-
-def references(sql: str) -> bool:
-    return any(
-        _REF_RE.search(seg)
-        for seg, is_lit in _split_literals(sql) if not is_lit
-    )
+    with _CATALOGS_LOCK:
+        if spark not in _CATALOGS:
+            _CATALOGS[spark] = ConnectorCatalogs(spark)
+        return _CATALOGS[spark]
 
 
 def parse_props(text: str | None) -> dict:
@@ -1148,70 +1102,49 @@ def insert(engine, stmt) -> DataFrame:
     return _rows(spark, n)
 
 
-def prepare(engine, sql: str) -> str:
-    """Register temp views for every referenced connector table and
-    rewrite ``catalog.schema.table`` → the mangled view name."""
-    spark = engine.spark
-    cats = get_catalogs(spark)
+def resolve(engine, refs) -> list[str]:
+    """The Spark name of each memory/blackhole/localfile/example/tpch/
+    jmx reference (``statements.Reference``); registers the temp view a
+    read needs just-in-time."""
+    cats = get_catalogs(engine.spark)
+    return [_resolve_one(engine.spark, cats, *ref.parts) for ref in refs]
 
-    def sub(m: re.Match) -> str:
-        cat, schema, table = (m.group(1).lower(), m.group(2).lower(),
-                              m.group(3).lower())
-        view = f"{cat}_{schema}_{table}"
-        if cat == "memory":
-            if (schema, table) not in cats.memory.tables:
-                raise ValueError(
-                    f"Table memory.{schema}.{table} does not exist"
-                )
-            return cats.memory.tables[(schema, table)]
-        if cat == "blackhole":
-            cats.blackhole.generate(schema, table).createOrReplaceTempView(
-                view
-            )
-            return view
-        if cat == "example":
-            cats.example.read(schema, table).createOrReplaceTempView(view)
-            return view
-        if cat == "tpch":
-            # defer to a session-registered schema of the same name
-            # (engine.register_schema / the test corpora's dbgen `tiny`)
-            # — a live registration outranks the connector's dataset,
-            # exactly as only ONE catalog named tpch can exist at a time
-            try:
-                if spark.catalog.databaseExists(schema):
-                    return f"{schema}.{table}"
-            except Exception:  # noqa: BLE001 — catalog probe only
-                pass
-            cats.tpch.read(schema, table).createOrReplaceTempView(view)
-            return view
-        if (schema, table) != (
-            LocalFileCatalog.SCHEMA_NAME, LocalFileCatalog.TABLE_NAME
-        ):
-            raise ValueError(
-                f"Table localfile.{schema}.{table} does not exist"
-            )
-        cats.localfile.read().createOrReplaceTempView(view)
-        return view
 
-    def sub_jmx(m: re.Match) -> str:
-        schema = m.group(1).lower()
-        table = (m.group(2) or m.group(3)).lower()
+def _resolve_one(spark: SparkSession, cats: ConnectorCatalogs, cat: str,
+                 schema: str, *table_parts: str) -> str:
+    table = ".".join(table_parts)
+    view = f"{cat}_{schema}_{table}"
+    if cat == "memory":
+        if (schema, table) not in cats.memory.tables:
+            raise ValueError(f"Table memory.{schema}.{table} does not exist")
+        return cats.memory.tables[(schema, table)]
+    if cat == "blackhole":
+        df = cats.blackhole.generate(schema, table)
+    elif cat == "example":
+        df = cats.example.read(schema, table)
+    elif cat == "jmx":
         view = "jmx_" + schema + "__" + re.sub(r"\W+", "_", table)
         df = (cats.jmx.read_current(table) if schema == "current"
               else cats.jmx.read_history(table))
-        df.createOrReplaceTempView(view)
-        return view
-
-    sql = _sub_outside_literals(re.compile(_JMX_REF, re.I), sub_jmx, sql)
-    return _sub_outside_literals(
-        re.compile(
-            rf"\b(memory|blackhole|localfile|example|tpch)"
-            rf"\.({_NAME})\.({_NAME})",
-            re.I,
-        ),
-        sub,
-        sql,
-    )
+    elif cat == "tpch":
+        # defer to a session-registered schema of the same name
+        # (engine.register_schema / the test corpora's dbgen `tiny`)
+        # — a live registration outranks the connector's dataset,
+        # exactly as only ONE catalog named tpch can exist at a time
+        try:
+            if spark.catalog.databaseExists(schema):
+                return f"{schema}.{table}"
+        except Exception:  # noqa: BLE001 — catalog probe only
+            pass
+        df = cats.tpch.read(schema, table)
+    elif (schema, table) != (
+        LocalFileCatalog.SCHEMA_NAME, LocalFileCatalog.TABLE_NAME
+    ):
+        raise ValueError(f"Table localfile.{schema}.{table} does not exist")
+    else:
+        df = cats.localfile.read()
+    df.createOrReplaceTempView(view)
+    return view
 
 
 # ---------------------------------------------------------------------------

@@ -19,9 +19,14 @@ steps:
    the target's catalog for hive/memory/blackhole/tpch/jmx/example)
    runs session, transaction, DDL and metadata statements and returns a
    small driver-built result;
-3. **translate** — queries and every statement the table does not claim
-   have their catalog references resolved, are translated to Spark SQL
-   (sqlfront/) and handed to ``spark.sql``.
+3. **scan → resolve → translate** — for queries and every statement the
+   table does not claim, ``statements.references`` scans the text once
+   for catalog references (connector, hive, ``system``,
+   ``information_schema`` tables and ``current_path``); one pass over
+   ``_RESOLVERS`` (catalog → resolver) hands each catalog's references to
+   its resolver, which registers what the read needs and returns the
+   Spark name; the names are spliced in, and the text is translated to
+   Spark SQL (sqlfront/) and handed to ``spark.sql``.
 
 The parquet tables under a directory register as views (catalog.py).
 
@@ -59,7 +64,7 @@ from facebook_presto_spark.properties import (
 )
 from facebook_presto_spark.session import get_spark, local_dataframe
 from facebook_presto_spark.sqlfront import translate
-from facebook_presto_spark.statements import Statement, classify
+from facebook_presto_spark.statements import Statement, classify, references
 
 
 # SHOW STATS columns (ShowStatsRewrite)
@@ -376,58 +381,13 @@ class PrestoSparkEngine:
         return self._run_translated(presto_sql)
 
     def _run_translated(self, presto_sql: str) -> DataFrame:
-        """The translate path: resolve session functions and catalog
-        references the translator does not know, then translate to Spark
-        SQL and plan it."""
-        if re.search(r"\bcurrent_path\b", presto_sql, re.I):
-            # current_path (FunctionRegistry session function): resolves
-            # to the session's raw path string at translation time
-            lit = "'" + self.current_path().replace("'", "''") + "'"
-            presto_sql = connectors._sub_outside_literals(
-                re.compile(r"\bcurrent_path\b(?:\s*\(\s*\))?", re.I),
-                lambda _m: lit, presto_sql,
-            )
+        """The translate path: scan the statement's catalog references,
+        resolve them through their catalogs' resolvers, translate to
+        Spark SQL and plan it (``_to_spark``)."""
         # optional grant enforcement (SET SESSION enforce_access_control
         # = true — access.enforce; default off, single-user behavior)
         access.enforce(self, presto_sql)
-        members = infoschema.referenced_members(presto_sql)
-        if members:
-            # the reference populates information_schema from connector
-            # metadata at query time (InformationSchemaPageSourceProvider);
-            # rebuild the members the statement names from the live
-            # catalog — metadata-only, no Spark job
-            infoschema.refresh(
-                self.spark, privileges=self.grants.rows(),
-                view_definitions=self._views, members=members,
-            )
-        if systemtables.references_system_runtime(presto_sql):
-            # system.runtime.{queries,nodes,tasks} — rebuilt from the
-            # live registry/SparkContext, then addressed as the
-            # system_runtime database (catalog prefixes are names here)
-            systemtables.refresh(
-                self.spark, self.runtime,
-                transactions=self.transactions.rows(),
-            )
-            presto_sql = systemtables.rewrite_names(presto_sql)
-        if systemtables.references_system_jdbc(presto_sql):
-            # system.jdbc.* — the JDBC DatabaseMetaData surface
-            systemtables.refresh_jdbc(
-                self.spark, view_names=set(self._views)
-            )
-            presto_sql = systemtables.rewrite_jdbc_names(presto_sql)
-        if systemtables.references_system_metadata(presto_sql):
-            # system.metadata.{catalogs,*_properties}
-            systemtables.refresh_metadata(self.spark)
-            presto_sql = systemtables.rewrite_metadata_names(presto_sql)
-        if connectors.references(presto_sql):
-            # memory/blackhole/localfile reads: register the referenced
-            # connector tables as temp views just-in-time, rewrite names
-            presto_sql = connectors.prepare(self, presto_sql)
-        if hive_catalog.references(presto_sql):
-            # hive.* reads → session-catalog partitioned tables;
-            # "t$partitions" system tables register just-in-time
-            presto_sql = hive_catalog.prepare(self, presto_sql)
-        spark_sql = translate(presto_sql)
+        spark_sql = self._to_spark(presto_sql)
         if "__fps_salt" not in spark_sql:
             return self.spark.sql(spark_sql)
         # the two-phase restructure replaces expression-group-key
@@ -440,10 +400,34 @@ class PrestoSparkEngine:
         try:
             return self.spark.sql(spark_sql)
         except AnalysisException:
-            fallback = translate(presto_sql, two_phase=False)
+            fallback = self._to_spark(presto_sql, two_phase=False)
             if fallback == spark_sql:
                 raise
             return self.spark.sql(fallback)
+
+    def _to_spark(self, presto_sql: str, two_phase: bool = True) -> str:
+        """Presto text → the Spark SQL that runs: every catalog reference
+        (``statements.references``, one scan) goes to its catalog's
+        resolver in ``_RESOLVERS`` — each resolver once, with all of its
+        catalog's references — and the resolved names are spliced in
+        from the end of the text before ``translate``."""
+        refs = references(presto_sql)
+        resolved = []
+        for resolver in dict.fromkeys(_RESOLVERS.values()):
+            batch = [ref for ref in refs if _RESOLVERS[ref.catalog] is resolver]
+            if batch:
+                resolved += zip(batch, resolver(self, batch))
+        pieces, end = [], len(presto_sql)
+        for ref, text in sorted(resolved, key=lambda r: r[0].span, reverse=True):
+            pieces += [presto_sql[ref.span[1]:end], text]
+            end = ref.span[0]
+        pieces.append(presto_sql[:end])
+        return translate("".join(reversed(pieces)), two_phase=two_phase)
+
+    def _resolve_current_path(self, refs) -> list[str]:
+        # current_path (FunctionRegistry session function): the
+        # session's raw path string, fixed at translation time
+        return ["'" + self.current_path().replace("'", "''") + "'"] * len(refs)
 
     # -- session statements (SetSessionTask / ResetSessionTask / UseTask /
     # SetPathTask) ----------------------------------------------------------
@@ -537,7 +521,7 @@ class PrestoSparkEngine:
             # resolve the Presto column type through the normal cast
             # translation (NULL probe → Spark DataType)
             dtype = self.spark.sql(
-                translate(f"SELECT CAST(NULL AS {stmt.body}) AS x")
+                self._to_spark(f"SELECT CAST(NULL AS {stmt.body}) AS x")
             ).schema[0].dataType
             alter_table(self.spark, table, "add_column",
                         column=stmt.args[0], dtype=dtype)
@@ -566,7 +550,7 @@ class PrestoSparkEngine:
             return local_dataframe(self.spark, [(True,)], "valid boolean")
         if "IO" in opts.replace("FORMAT", ""):
             return self._explain_io(body)
-        return self.spark.sql("EXPLAIN EXTENDED " + translate(body))
+        return self.spark.sql("EXPLAIN EXTENDED " + self._to_spark(body))
 
     def _show_session(self, stmt: Statement) -> DataFrame:
         # SHOW SESSION (ShowQueriesRewrite) — the accepted property
@@ -636,7 +620,7 @@ class PrestoSparkEngine:
     def _describe_output(self, stmt: Statement) -> DataFrame:
         # analyze with NULL-bound parameters (DescribeOutputRewrite)
         bound = self._bind_nulls(self._prepared_body(stmt.name[0]))
-        schema = self.spark.sql(translate(bound)).schema
+        schema = self.spark.sql(self._to_spark(bound)).schema
         return local_dataframe(
             self.spark,
             [(f.name, f.dataType.simpleString()) for f in schema],
@@ -657,7 +641,7 @@ class PrestoSparkEngine:
 
         from facebook_presto_spark.infoschema import presto_type_name
 
-        df = self.spark.sql(translate(body))
+        df = self.spark.sql(self._to_spark(body))
         buf = _io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -956,6 +940,21 @@ _HANDLERS = {
     "add_column": {"hive": hive_catalog.alter_column, None: _E._alter_table},
     "rename_column": {"hive": hive_catalog.alter_column, None: _E._alter_table},
     "drop_column": {"hive": hive_catalog.alter_column, None: _E._alter_table},
+}
+
+
+# The resolver table: catalog → resolver(engine, refs), which returns the
+# Spark text of each of that catalog's references in the statement
+# (statements.references finds them).  A resolver serving several
+# catalogs gets all of their references in one call; resolvers run in
+# table order.
+_RESOLVERS = {
+    "current_path": _E._resolve_current_path,
+    "information_schema": infoschema.resolve,
+    "system": systemtables.resolve,
+    **dict.fromkeys(("memory", "blackhole", "localfile", "example", "tpch", "jmx"),
+                    connectors.resolve),
+    "hive": hive_catalog.resolve,
 }
 
 

@@ -38,23 +38,17 @@ touched, never table size.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from facebook_presto_spark import catalog as spark_catalog
 from facebook_presto_spark.connectors import (
     _parse_presto_type,
-    _split_literals,
-    _sub_outside_literals,
     parse_columns,
     parse_props,
 )
 from facebook_presto_spark.session import local_dataframe
 from facebook_presto_spark.statements import column_names, split_with_data
-
-_NAME = r'[A-Za-z_]\w*|"[^"]+"'
 
 _FORMATS = {
     # HiveStorageFormat.java names → Spark datasource
@@ -654,12 +648,8 @@ def get_catalog(spark: SparkSession) -> HiveCatalog:
 # ---------------------------------------------------------------------------
 # hive.* statements: engine._HANDLERS routes writes and column DDL here
 # (schema and table DDL it serves itself over HiveCatalog's methods);
-# ``references``/``prepare`` rewrite reads on the translate path
+# ``resolve`` names the tables reads reference on the translate path
 # ---------------------------------------------------------------------------
-
-# hive.schema."table$partitions" — quoted, since $ is not a name char
-_PARTITIONS_REF = rf'hive\.({_NAME})\."([^"$]+)\$partitions"'
-_TABLE_REF = rf"\bhive\.({_NAME})\.({_NAME})"
 
 
 def alter_column(engine, stmt) -> DataFrame:
@@ -709,38 +699,23 @@ def insert(engine, stmt) -> DataFrame:
     return spark.createDataFrame([(n,)], "rows bigint")
 
 
-def references(sql: str) -> bool:
-    pat = re.compile(rf"(?:{_PARTITIONS_REF})|(?:{_TABLE_REF})", re.I)
-    return any(
-        pat.search(seg)
-        for seg, is_lit in _split_literals(sql) if not is_lit
-    )
-
-
-def prepare(engine, sql: str) -> str:
-    """Rewrite hive.* references to session-catalog names; register the
-    ``$partitions`` system tables as temp views just-in-time."""
-    spark = engine.spark
-    cat = get_catalog(spark)
-
-    def sub_partitions(m: re.Match) -> str:
-        schema, table = _strip(m.group(1)), _strip(m.group(2))
-        view = f"hive_{schema}__{table}__partitions"
-        cat.partitions_table(schema, table).createOrReplaceTempView(view)
-        return view
-
-    def sub_table(m: re.Match) -> str:
-        schema, table = _strip(m.group(1)), _strip(m.group(2))
-        if not cat._exists(schema, table):
+def resolve(engine, refs) -> list[str]:
+    """The session-catalog name of each ``hive.schema.table`` reference
+    (``statements.Reference``); a ``"t$partitions"`` system table
+    registers as a temp view just-in-time."""
+    cat = get_catalog(engine.spark)
+    out = []
+    for _hive, schema, table in (ref.parts for ref in refs):
+        if table.endswith("$partitions"):
+            table = table[:-len("$partitions")]
+            view = f"hive_{schema}__{table}__partitions"
+            cat.partitions_table(schema, table).createOrReplaceTempView(view)
+            out.append(view)
+        elif cat._exists(schema, table):
+            out.append(cat.qualified(schema, table))
+        else:
             raise ValueError(f"Table hive.{schema}.{table} does not exist")
-        return cat.qualified(schema, table)
-
-    sql = _sub_outside_literals(
-        re.compile(_PARTITIONS_REF, re.I), sub_partitions, sql
-    )
-    return _sub_outside_literals(
-        re.compile(_TABLE_REF, re.I), sub_table, sql
-    )
+    return out
 
 
 # ---------------------------------------------------------------------------

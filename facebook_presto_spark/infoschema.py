@@ -59,12 +59,18 @@ TABLE_SCHEMAS = {
     ),
 }
 
-_MEMBER_RE = re.compile(r"\binformation_schema\s*\.\s*[\"`]?(\w+)", re.I)
-
-
-def referenced_members(sql: str) -> set[str]:
-    """The information_schema members ``sql`` names."""
-    return {m.lower() for m in _MEMBER_RE.findall(sql)} & TABLE_SCHEMAS.keys()
+def resolve(engine, refs) -> list[str]:
+    """``[catalog.]information_schema.<member>`` →
+    ``information_schema.<member>`` for each reference
+    (``statements.Reference``), after rebuilding the members the
+    statement names from the live catalog — metadata-only, no Spark job,
+    the way the reference populates information_schema from connector
+    metadata at query time (InformationSchemaPageSourceProvider)."""
+    members = [ref.parts[-1] for ref in refs]
+    refresh(engine.spark, privileges=engine.grants.rows(),
+            view_definitions=engine._views,
+            members=TABLE_SCHEMAS.keys() & set(members))
+    return [f"information_schema.{member}" for member in members]
 
 
 def presto_type_name(spark_type: str) -> str:

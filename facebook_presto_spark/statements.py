@@ -13,7 +13,12 @@ do not change the result.
 
 The engine looks the kind up in its handler table (``engine._HANDLERS``);
 queries and every kind the table does not claim go to the SQL translator
-whole.
+whole.  Before translating, ``references`` scans the whole statement
+once for the names the translator cannot resolve itself — connector,
+hive, ``system``, ``information_schema`` tables and ``current_path`` —
+and the engine hands each to its catalog's resolver
+(``engine._RESOLVERS``), the way the reference's analyzer resolves a
+qualified name through the catalog's ``ConnectorMetadata``.
 """
 
 from __future__ import annotations
@@ -98,6 +103,10 @@ class Statement:
         return schema, self.args[-1].lower()
 
 
+def _unquote(tok) -> str:
+    return tok.text[1:-1].replace('""', '"') if tok.kind == "qident" else tok.text
+
+
 class _Head:
     """A cursor over the statement's tokens, read on demand."""
 
@@ -145,7 +154,7 @@ class _Head:
         if tok is None or tok.kind not in ("ident", "qident"):
             return None
         self.i += 1
-        return tok.text[1:-1].replace('""', '"') if tok.kind == "qident" else tok.text
+        return _unquote(tok)
 
     def name(self) -> tuple[str, ...]:
         """The parts of a dotted name (empty when none comes next)."""
@@ -356,6 +365,85 @@ def _classify(h: _Head, verb: str) -> Statement | None:  # noqa: C901 — one ar
         # reference's error instead of a translation error
         return stmt("call", h.name(), body_span=h.rest())
     return None
+
+
+@dataclass(frozen=True)
+class Reference:
+    """One catalog reference in a statement's text: the resolver-table
+    catalog that serves it, its unquoted lower-cased name parts and the
+    ``(start, end)`` span of those parts in the text."""
+
+    catalog: str
+    parts: tuple[str, ...]
+    span: tuple[int, int]
+
+
+# catalogs whose references are ``catalog.schema.table``; ``system`` and
+# ``jmx`` name only the listed schemas.  Every key of engine._RESOLVERS
+# is one of these or ``information_schema`` / ``current_path``.
+_TABLE_CATALOGS = frozenset({"hive", "memory", "blackhole", "localfile",
+                             "example", "tpch", "system", "jmx"})
+_CATALOG_SCHEMAS = {"system": frozenset({"runtime", "jdbc", "metadata"}),
+                    "jmx": frozenset({"current", "history"})}
+REFERENCE_CATALOGS = _TABLE_CATALOGS | {"information_schema", "current_path"}
+
+
+def _reference(chain: list) -> tuple[str, tuple[str, ...]] | None:
+    """The catalog and the leading name parts a dotted name chain
+    ``[(token, start)]`` references; None when it is no reference."""
+    names = tuple(_unquote(tok).lower() for tok, _at in chain)
+    if names[0] == "information_schema" and len(names) > 1:
+        return "information_schema", names[:2]
+    if len(names) > 2 and names[1] == "information_schema":
+        return "information_schema", names[:3]  # catalog-qualified
+    if names[0] in _TABLE_CATALOGS and len(names) > 2:
+        schemas = _CATALOG_SCHEMAS.get(names[0])
+        if schemas is not None and names[1] not in schemas:
+            return None
+        if names[0] == "jmx" and chain[2][0].kind == "ident":
+            return "jmx", names  # an unquoted MBean name runs to the end
+        return names[0], names[:3]
+    if names == ("current_path",) and chain[0][0].kind == "ident":
+        return "current_path", names
+    return None
+
+
+def references(sql: str) -> list[Reference]:
+    """Every catalog reference in ``sql``, in text order, from one token
+    scan: each dotted name whose first part is a catalog of the resolver
+    table (an ``information_schema`` member may carry a catalog prefix),
+    and each bare ``current_path`` with its optional ``()``.  Literals,
+    comments and quoted names are tokens of their own, so a catalog
+    name inside a literal or comment is never a reference; whitespace
+    around the dots is allowed.  Parts past the reference (a column
+    qualified by its table) stay outside its span.  Raises the
+    tokenizer's ``ValueError`` on text it cannot read."""
+    toks = list(scan(sql))
+    out, i = [], 0
+    while i < len(toks):
+        tok, start = toks[i]
+        if tok.kind not in ("ident", "qident") or (
+                i and toks[i - 1][0].kind == "op" and toks[i - 1][0].text == "."):
+            i += 1
+            continue
+        chain = [toks[i]]
+        while (i + 2 < len(toks) and toks[i + 1][0].kind == "op"
+               and toks[i + 1][0].text == "."
+               and toks[i + 2][0].kind in ("ident", "qident")):
+            i += 2
+            chain.append(toks[i])
+        i += 1
+        found = _reference(chain)
+        if found is None:
+            continue
+        catalog, parts = found
+        last, at = chain[len(parts) - 1]
+        end = at + len(last.text)
+        if catalog == "current_path" and [t.text for t, _at in toks[i:i + 2]] == ["(", ")"]:
+            end = toks[i + 1][1] + 1
+            i += 2
+        out.append(Reference(catalog, parts, (start, end)))
+    return out
 
 
 _WITH_DATA_RE = re.compile(r"\s+WITH\s+(NO\s+)?DATA$", re.I)

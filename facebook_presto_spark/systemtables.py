@@ -73,7 +73,6 @@ TABLE_SCHEMAS = {
     ),
 }
 
-_RUNTIME_RE = re.compile(r"\bsystem\s*\.\s*runtime\s*\.", re.I)
 
 class QueryEntry:
     __slots__ = ("qid", "query", "user", "source", "state", "created",
@@ -265,17 +264,6 @@ _TABLE_PROPERTIES = [
     ("bucket_count", "0", "integer", "Number of buckets"),
 ]
 
-_METADATA_RE = re.compile(r"\bsystem\s*\.\s*metadata\s*\.", re.I)
-
-
-def references_system_metadata(sql: str) -> bool:
-    return bool(_METADATA_RE.search(sql))
-
-
-def rewrite_metadata_names(sql: str) -> str:
-    return _METADATA_RE.sub("system_metadata.", sql)
-
-
 def refresh_metadata(spark: SparkSession, catalog_name: str = "spark") -> None:
     spark.sql("CREATE DATABASE IF NOT EXISTS system_metadata")
 
@@ -363,9 +351,7 @@ _JDBC_TYPE_INFO = {
 def _jdbc_type_row(presto_name: str) -> tuple:
     low = presto_name.lower()
     if low.startswith("decimal"):
-        import re as _re
-
-        m = _re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", low)
+        m = re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", low)
         p, s = (int(m.group(1)), int(m.group(2))) if m else (38, 0)
         return (3, p, s, 10)
     if low.startswith("array"):
@@ -431,24 +417,20 @@ def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
     _jdbc_values_view(spark, "columns", columns_rows)
 
 
-_JDBC_RE = re.compile(r"\bsystem\s*\.\s*jdbc\s*\.", re.I)
+# -- statement name resolution ----------------------------------------------
 
-
-def references_system_jdbc(sql: str) -> bool:
-    return bool(_JDBC_RE.search(sql))
-
-
-def rewrite_jdbc_names(sql: str) -> str:
-    return _JDBC_RE.sub("system_jdbc.", sql)
-
-
-# -- statement name rewriting ---------------------------------------------
-
-def references_system_runtime(sql: str) -> bool:
-    return bool(_RUNTIME_RE.search(sql))
-
-
-def rewrite_names(sql: str) -> str:
-    """``system.runtime.X`` → ``system_runtime.X`` (Spark databases are
-    single-level; the catalog prefix is a name prefix, as in catalog.py)."""
-    return _RUNTIME_RE.sub("system_runtime.", sql)
+def resolve(engine, refs) -> list[str]:
+    """``system.<schema>.<table>`` → ``system_<schema>.<table>`` for each
+    reference (``statements.Reference``; Spark databases are
+    single-level, so the catalog prefix is a name prefix as in
+    catalog.py), after rebuilding each schema the statement names from
+    live state — once per statement."""
+    spark, schemas = engine.spark, {ref.parts[1] for ref in refs}
+    if "runtime" in schemas:
+        refresh(spark, engine.runtime, transactions=engine.transactions.rows())
+    if "jdbc" in schemas:
+        refresh_jdbc(spark, view_names=set(engine._views))
+    if "metadata" in schemas:
+        refresh_metadata(spark)
+    return [f"system_{schema}.{table}" for _system, schema, table in
+            (ref.parts for ref in refs)]

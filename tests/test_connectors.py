@@ -455,3 +455,31 @@ def test_localfile_timestamp_parses(eng, spark, sf_dir):
         FROM localfile.logs.http_request_log
     """).collect()[0]
     assert r["y"] >= 1990  # parsed as a real timestamp, not null/garbage
+
+
+def test_registry_is_shared_by_concurrent_first_use(spark, monkeypatch):
+    """Protocol-server request threads that reach a new session's
+    connector registry at the same time all get the same one."""
+    import threading
+    import time as _time
+
+    class SlowCatalogs:  # widens the check-then-insert window
+        def __init__(self, _spark):
+            _time.sleep(0.02)
+
+    monkeypatch.setattr(connectors, "ConnectorCatalogs", SlowCatalogs)
+    fresh = spark.newSession()
+    start = threading.Barrier(8)
+    got = []
+
+    def touch():
+        start.wait()
+        got.append(connectors.get_catalogs(fresh))
+
+    threads = [threading.Thread(target=touch) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(got) == 8
+    assert all(c is got[0] for c in got)

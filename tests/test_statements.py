@@ -1,8 +1,10 @@
-"""Statement classification (statements.py) and the engine's handler table.
+"""Statement classification and reference scanning (statements.py), and
+the engine's handler and resolver tables.
 
-The classifier reads only a statement's head, so these tests need no
-Spark session — except the last one, which checks that a leading comment
-leaves dispatch unchanged end to end.
+The classifier reads only a statement's head and the reference scan
+only tokens, so these tests need no Spark session — except the engine
+tests at the end, which check dispatch and reference resolution end to
+end.
 """
 
 from __future__ import annotations
@@ -12,7 +14,13 @@ import time
 import pytest
 
 from facebook_presto_spark import access, connectors, engine, hive_catalog
-from facebook_presto_spark.statements import classify, split_with_data
+from facebook_presto_spark.sqlfront import translate
+from facebook_presto_spark.statements import (
+    REFERENCE_CATALOGS,
+    classify,
+    references,
+    split_with_data,
+)
 
 # one row per kind in engine._HANDLERS: (sql, kind, catalog, schema,
 # table, body)
@@ -204,3 +212,130 @@ def test_leading_comment_dispatches_like_bare_statement(
     finally:
         restore_confs(spark, snap)
     assert results[0] == results[1]
+
+
+# one row per resolver-table catalog plus the edge cases: (sql, the
+# references as (catalog, parts, text of the span))
+REFERENCES = [
+    ("SELECT * FROM hive.sales.orders o",
+     [("hive", ("hive", "sales", "orders"), "hive.sales.orders")]),
+    ('SELECT * FROM hive.s."t$partitions"',
+     [("hive", ("hive", "s", "t$partitions"), 'hive.s."t$partitions"')]),
+    ('SELECT * FROM "Memory"."default"."MT"',
+     [("memory", ("memory", "default", "mt"), '"Memory"."default"."MT"')]),
+    ("SELECT * FROM blackhole . s . t",
+     [("blackhole", ("blackhole", "s", "t"), "blackhole . s . t")]),
+    ("SELECT * FROM localfile.logs.http_request_log",
+     [("localfile", ("localfile", "logs", "http_request_log"),
+       "localfile.logs.http_request_log")]),
+    ("SELECT * FROM example.ex.numbers",
+     [("example", ("example", "ex", "numbers"), "example.ex.numbers")]),
+    ("SELECT * FROM tpch.tiny.nation",
+     [("tpch", ("tpch", "tiny", "nation"), "tpch.tiny.nation")]),
+    ('SELECT * FROM jmx.current."java.lang:type=Memory"',
+     [("jmx", ("jmx", "current", "java.lang:type=memory"),
+       'jmx.current."java.lang:type=Memory"')]),
+    ("SELECT * FROM jmx.history.java.lang j",
+     [("jmx", ("jmx", "history", "java", "lang"), "jmx.history.java.lang")]),
+    ("SELECT * FROM system.runtime.queries",
+     [("system", ("system", "runtime", "queries"), "system.runtime.queries")]),
+    ('SELECT * FROM information_schema."columns"',
+     [("information_schema", ("information_schema", "columns"),
+       'information_schema."columns"')]),
+    ("SELECT * FROM x.information_schema.tables",
+     [("information_schema", ("x", "information_schema", "tables"),
+       "x.information_schema.tables")]),
+    ("SELECT current_path",
+     [("current_path", ("current_path",), "current_path")]),
+    ("SELECT current_path ( ) AS p",
+     [("current_path", ("current_path",), "current_path ( )")]),
+    # a column qualified by its table keeps its tail outside the span
+    ("SELECT memory.s.t.c FROM memory.s.t",
+     [("memory", ("memory", "s", "t"), "memory.s.t")] * 2),
+    ('SELECT t.current_path, "current_path" FROM t', []),
+    ("SELECT 'system.runtime.queries' AS s", []),
+    ("SELECT 1 -- copied from memory.s.t", []),
+    ("SELECT 1 /* was hive.s.t */", []),
+    ("SELECT * FROM system.other.t, jmx.other.t, memory.t", []),
+]
+
+
+@pytest.mark.parametrize("sql,expected", REFERENCES)
+def test_references(sql, expected):
+    found = [(r.catalog, r.parts, sql[r.span[0]:r.span[1]])
+             for r in references(sql)]
+    assert found == expected
+
+
+def test_unreadable_text_raises_the_translator_error():
+    sql = "SELECT `x` FROM memory.s.t"
+    with pytest.raises(ValueError) as scanned:
+        references(sql)
+    with pytest.raises(ValueError) as translated:
+        translate(sql)
+    assert str(scanned.value) == str(translated.value)
+
+
+def test_every_reference_catalog_has_a_resolver():
+    assert set(engine._RESOLVERS) == REFERENCE_CATALOGS
+
+
+@pytest.fixture(scope="module")
+def mt_engine(spark, sf_dir):
+    """An engine with ``memory.default.mt`` (the 25 nations)."""
+    eng = engine.PrestoSparkEngine.for_dir(sf_dir, spark=spark)
+    eng.sql("CREATE TABLE memory.default.mt AS "
+            "SELECT n_nationkey, n_name FROM nation")
+    eng.sql("PREPARE mt_q FROM SELECT n_name FROM memory.default.mt "
+            "WHERE n_nationkey = ?")
+    yield eng
+    eng.sql("DEALLOCATE PREPARE mt_q")
+    eng.sql("DROP TABLE memory.default.mt")
+
+
+def _plan_text(rows) -> str:
+    text = "\n".join(str(r[0]) for r in rows)
+    assert "NOT_FOUND" not in text
+    return text
+
+
+# statements whose handler turns Presto text into Spark SQL itself: each
+# resolves catalog references like a query does
+ONE_PATH = [
+    ("EXPLAIN (TYPE DISTRIBUTED) SELECT n_name FROM memory.default.mt",
+     lambda rows: "n_name" in _plan_text(rows)),
+    ("EXPLAIN (TYPE DISTRIBUTED) SELECT query_id FROM system.runtime.queries",
+     lambda rows: "query_id" in _plan_text(rows)),
+    ("EXPLAIN (TYPE IO) SELECT n_name FROM memory.default.mt",
+     lambda rows: '"outputTable": null' in _plan_text(rows)),
+    ("DESCRIBE OUTPUT mt_q",
+     lambda rows: [tuple(r) for r in rows] == [("n_name", "string")]),
+]
+
+
+@pytest.mark.parametrize("sql,check", ONE_PATH,
+                         ids=["explain_distributed", "explain_system",
+                              "explain_io", "describe_output"])
+def test_handlers_resolve_references(mt_engine, sql, check):
+    assert check(mt_engine.sql(sql).collect())
+
+
+# (sql, columns, rows): literals, comments and quoting as Presto reads them
+REFERENCE_EDGES = [
+    ("SELECT 'system.runtime.queries' AS s", ["s"],
+     [("system.runtime.queries",)]),
+    ("SELECT count(*) AS n FROM nation -- copied from memory.s.t", ["n"],
+     [(25,)]),
+    ("SELECT count(*) AS n FROM nation /* was hive.s.t */", ["n"], [(25,)]),
+    ('SELECT 1 AS "current_path"', ["current_path"], [(1,)]),
+    ("SELECT count(*) AS n FROM memory . default . mt", ["n"], [(25,)]),
+    ('SELECT count(*) AS n FROM "memory"."default"."mt"', ["n"], [(25,)]),
+]
+
+
+@pytest.mark.parametrize("sql,columns,rows", REFERENCE_EDGES,
+                         ids=["literal", "line_comment", "block_comment",
+                              "quoted_alias", "spaced_name", "quoted_name"])
+def test_reference_edge_cases(mt_engine, sql, columns, rows):
+    df = mt_engine.sql(sql)
+    assert (df.columns, [tuple(r) for r in df.collect()]) == (columns, rows)

@@ -118,7 +118,7 @@ class GrantRegistry:
 ENFORCE_CONF = "spark.fps.enforceAccessControl"
 USER_CONF = "spark.fps.sessionUser"
 
-_META_PREFIXES = ("information_schema", "system", "system_runtime")
+_META_PREFIXES = ("information_schema", "system")
 
 
 def _statement_targets(sql: str) -> list[tuple[str, str, str]]:

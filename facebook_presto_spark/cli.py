@@ -131,38 +131,41 @@ def run_statement(engine, sql: str, fmt: str, out, max_rows: int | None) -> None
 
 def read_statements(stream) -> Iterator[str]:
     """Accumulate lines until a ``;`` terminator (Console.java's
-    statement splitter, minus string-literal awareness for ``;`` inside
-    quotes, which IS handled)."""
+    statement splitter); the text after the last one is a statement too."""
     buf = ""
     for line in stream:
-        buf += line
-        while True:
-            cut = _find_terminator(buf)
-            if cut < 0:
-                break
-            stmt = buf[:cut].strip()
-            buf = buf[cut + 1:]
-            if stmt:
-                yield stmt
+        stmts, buf = split_statements(buf + line)
+        yield from stmts
     tail = buf.strip()
     if tail:
         yield tail
 
 
-def _find_terminator(text: str) -> int:
-    in_str = False
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if ch == "'":
-            if in_str and i + 1 < len(text) and text[i + 1] == "'":
-                i += 2
-                continue
-            in_str = not in_str
-        elif ch == ";" and not in_str:
-            return i
-        i += 1
-    return -1
+def split_statements(text: str) -> tuple[list[str], str]:
+    """The ``;``-terminated statements of ``text`` and the rest after
+    them, read with the engine's tokenizer: a ``;`` inside a literal, a
+    quoted name or a comment ends nothing.  A rest that ends inside an
+    unterminated literal or comment is kept whole for more lines (so is
+    one the tokenizer cannot read; it reaches the engine, which reports
+    the error, at the end of input); a rest of only whitespace and
+    comments is dropped."""
+    from facebook_presto_spark.sqlfront.tokens import scan
+
+    stmts, start, pending = [], 0, False
+    try:
+        for tok, at in scan(text):
+            if tok.text == "/" and text.startswith("*", at + 1):
+                return stmts, text[start:]  # an unterminated /* comment
+            if tok.text != ";":
+                pending = True
+            elif pending:
+                stmts.append(text[start:at].strip())
+                start, pending = at + 1, False
+            else:  # an empty statement
+                start = at + 1
+    except ValueError:
+        return stmts, text[start:]
+    return stmts, text[start:] if pending else ""
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -216,21 +219,12 @@ def main(argv: list[str] | None = None) -> int:
             break
         if not buf and line.strip().lower() in ("quit", "exit", "quit;", "exit;"):
             break
-        buf += line
-        while True:
-            cut = _find_terminator(buf)
-            if cut < 0:
-                break
-            stmt = buf[:cut].strip()
-            buf = buf[cut + 1:]
-            if not stmt:
-                continue
+        stmts, buf = split_statements(buf + line)
+        for stmt in stmts:
             try:
                 run_statement(engine, stmt, fmt, out, max_rows=args.max_rows)
             except Exception as e:
                 out.write(f"Query failed: {_first_line(e)}\n")
-        if not buf.strip():
-            buf = ""
     return 0
 
 

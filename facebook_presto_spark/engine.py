@@ -923,7 +923,8 @@ _HANDLERS = {
     "show_stats": {"hive": _E._show_stats_hive, None: _E._show_stats},
     "show_schemas": dict.fromkeys(("hive", "tpch"), _E._show_schemas),
     "show_tables": {**dict.fromkeys(("hive", "memory", "example"), _E._show_tables),
-                    **dict.fromkeys(("jmx", "tpch"), connectors.show_tables)},
+                    **dict.fromkeys(("jmx", "tpch"), connectors.show_tables),
+                    "information_schema": infoschema.show_tables},
     "create_schema": dict.fromkeys(_HIVE_MEMORY, _E._create_schema),
     "drop_schema": dict.fromkeys(_HIVE_MEMORY, _E._drop_schema),
     "rename_schema": {"memory": connectors.rename_schema, None: _E._rename_schema},

@@ -38,6 +38,8 @@ touched, never table size.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -635,14 +637,18 @@ class HiveCatalog:
         )
 
 
+# one catalog per application; created under a lock because
+# protocol-server request threads reach this concurrently
 _CATALOGS: dict[str, HiveCatalog] = {}
+_CATALOGS_LOCK = threading.Lock()
 
 
 def get_catalog(spark: SparkSession) -> HiveCatalog:
     key = spark.sparkContext.applicationId
-    if key not in _CATALOGS:
-        _CATALOGS[key] = HiveCatalog(spark)
-    return _CATALOGS[key]
+    with _CATALOGS_LOCK:
+        if key not in _CATALOGS:
+            _CATALOGS[key] = HiveCatalog(spark)
+        return _CATALOGS[key]
 
 
 # ---------------------------------------------------------------------------

@@ -6,25 +6,26 @@ Presto exposes a synthetic ``information_schema`` schema in every catalog
 populated from connector metadata at query time
 (InformationSchemaPageSourceProvider.java).
 
-Spark twin: a real ``information_schema`` database whose members are
-CREATE OR REPLACE VIEWs over literal VALUES rebuilt from the session
-catalog immediately before any query that references them runs — only
-the members the statement names, each costing a view definition.
-This keeps the semantics (always-current metadata, filterable with
-ordinary predicates) while staying metadata-only: the listing goes
-through ``catalog.list_*``, which launches no Spark job and scans no
-table data, so the cost is independent of data volume (the same
-property the reference gets from serving these tables out of the
-metastore).
+Spark twin: immediately before a query that references them runs, the
+members the statement names are built as local relations from the
+session catalog (``session.local_dataframe``) and registered as the
+global temp views ``global_temp.information_schema_<member>``, which
+the references resolve to.  The rows never pass through SQL text, and a
+query over them plans as a ``LocalTableScanExec``.  This keeps the
+semantics (always-current metadata, filterable with ordinary predicates)
+while staying metadata-only: the listing goes through ``catalog.list_*``,
+which launches no Spark job and scans no table data, so the cost is
+independent of data volume (the same property the reference gets from
+serving these tables out of the metastore).  Global temp views are not
+listed by the catalog, so no listing has to filter the members out.
 """
 
 from __future__ import annotations
 
 import re
-import threading
 from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from facebook_presto_spark.catalog import (
     Relation,
@@ -32,6 +33,7 @@ from facebook_presto_spark.catalog import (
     list_databases,
     list_tables,
 )
+from facebook_presto_spark.session import global_local_view, local_dataframe
 
 CATALOG_NAME = "spark"
 
@@ -59,18 +61,27 @@ TABLE_SCHEMAS = {
     ),
 }
 
+
 def resolve(engine, refs) -> list[str]:
-    """``[catalog.]information_schema.<member>`` →
-    ``information_schema.<member>`` for each reference
-    (``statements.Reference``), after rebuilding the members the
-    statement names from the live catalog — metadata-only, no Spark job,
-    the way the reference populates information_schema from connector
-    metadata at query time (InformationSchemaPageSourceProvider)."""
+    """``[catalog.]information_schema.<member>`` → the global temp view
+    holding the member's rows, for each reference
+    (``statements.Reference``), after building the members the statement
+    names from the live catalog — metadata-only, no Spark job, the way
+    the reference populates information_schema from connector metadata
+    at query time (InformationSchemaPageSourceProvider)."""
     members = [ref.parts[-1] for ref in refs]
-    refresh(engine.spark, privileges=engine.grants.rows(),
-            view_definitions=engine._views,
-            members=TABLE_SCHEMAS.keys() & set(members))
-    return [f"information_schema.{member}" for member in members]
+    for member in members:
+        if member not in TABLE_SCHEMAS:
+            raise ValueError(f"Table information_schema.{member} does not exist")
+    names = refresh(engine.spark, privileges=engine.grants.rows(),
+                    view_definitions=engine._views, members=members)
+    return [names[member] for member in members]
+
+
+def show_tables(engine, stmt) -> DataFrame:
+    """SHOW TABLES FROM information_schema: the members, by name."""
+    return local_dataframe(
+        engine.spark, [(m,) for m in sorted(TABLE_SCHEMAS)], "`Table` string")
 
 
 def presto_type_name(spark_type: str) -> str:
@@ -129,75 +140,19 @@ def presto_type_name(spark_type: str) -> str:
     return low  # bigint, double, boolean, date, decimal(p,s), …
 
 
-def _q(value) -> str:
-    """Render one Python value as a SQL literal for a VALUES row (the
-    view casts each column to its declared type once)."""
-    if value is None:
-        return "NULL"
-    if isinstance(value, bool):
-        return "TRUE" if value else "FALSE"
-    if isinstance(value, int):
-        return str(value)
-    return "'" + str(value).replace("'", "''") + "'"
-
-
-# member -> the rows its view was last defined over; a member whose
-# rows have not changed keeps its view (defining one costs 35-70 ms)
-_BUILT: dict[str, list[tuple]] = {}
-_BUILD_LOCK = threading.Lock()
-
-
-def _values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
-    with _BUILD_LOCK:
-        if _BUILT.get(name) == rows and spark.catalog.tableExists(
-            f"information_schema.{name}"
-        ):
-            return
-        spark.sql("CREATE DATABASE IF NOT EXISTS information_schema")
-        _define_view(spark, name, rows)
-        _BUILT[name] = rows
-
-
-def _define_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
-    schema = TABLE_SCHEMAS[name]
-    cols = [f.split()[0] for f in schema.split(", ")]
-    types = [f.split()[1] for f in schema.split(", ")]
-    if rows:
-        values = ", ".join(
-            "(" + ", ".join(_q(v) for v in row) + ")" for row in rows
-        )
-        # queries re-parse the view text, so literals stay bare and
-        # each column is cast once
-        casts = ", ".join(
-            f"CAST({c} AS {t}) AS {c}" for c, t in zip(cols, types)
-        )
-        body = (
-            f"SELECT {casts} FROM (VALUES {values}) AS t({', '.join(cols)})"
-        )
-    else:
-        nulls = ", ".join(
-            f"CAST(NULL AS {t}) AS {c}" for c, t in zip(cols, types)
-        )
-        body = f"SELECT {nulls} WHERE FALSE"
-    spark.sql(f"CREATE OR REPLACE VIEW information_schema.{name} AS {body}")
-
-
 def refresh(spark: SparkSession, catalog_name: str = CATALOG_NAME,
             privileges: list[tuple] | None = None,
             view_definitions: dict[str, str] | None = None,
-            members: Iterable[str] = tuple(TABLE_SCHEMAS)) -> None:
-    """(Re)build the information_schema ``members`` (default: all) from
-    the live session catalog.
+            members: Iterable[str] = tuple(TABLE_SCHEMAS)) -> dict[str, str]:
+    """Build the information_schema ``members`` (default: all) from the
+    live session catalog; returns member → global temp view name.
 
     Metadata-only and job-free (catalog.list_databases / list_tables /
-    list_columns); a member whose rows are unchanged keeps its view.
-    Temp views (how the engine registers parquet tables) surface under
-    the current database, mirroring how the reference resolves
-    unqualified names against the session schema.
+    list_columns).  Temp views (how the engine registers parquet tables)
+    surface under the current database, mirroring how the reference
+    resolves unqualified names against the session schema.
     """
     members = set(members)
-    if not members:
-        return
     current_db = spark.catalog.currentDatabase()
     view_defs = view_definitions or {}
 
@@ -217,58 +172,63 @@ def refresh(spark: SparkSession, catalog_name: str = CATALOG_NAME,
         _list_relations(spark, databases, current_db)
         if members & {"tables", "columns"} else []
     )
+    rows: dict[str, list[tuple]] = {}
     if "schemata" in members:
-        _values_view(spark, "schemata", [
-            presto_schema(d) for d in sorted(set(databases))
-        ])
+        # information_schema itself is a schema of the catalog
+        rows["schemata"] = [
+            presto_schema(d)
+            for d in sorted(set(databases) | {"information_schema"})
+        ]
     if "tables" in members:
-        _values_view(spark, "tables", [
+        rows["tables"] = [
             (*presto_schema(db), rel.name,
              "VIEW" if rel.name.lower() in view_defs else "BASE TABLE")
             for db, rel in listed
-        ])
+        ]
     if "columns" in members:
-        columns_rows: list[tuple] = []
+        rows["columns"] = []
         for db, rel in listed:
             try:
                 cols = list_columns(spark, rel)
             except Exception:
                 continue
             for pos, c in enumerate(cols, start=1):
-                columns_rows.append((
+                rows["columns"].append((
                     *presto_schema(db), rel.name, c.name, pos, None,
                     "YES" if c.nullable else "NO",
                     presto_type_name(c.data_type), None,
                     # HiveUtil.java:867 — partition keys surface their role
                     "partition key" if c.is_partition else None,
                 ))
-        _values_view(spark, "columns", columns_rows)
     if "views" in members:
         # fed from the engine's view-definition store (Presto-dialect
         # text, like MetadataManager.getViews serves ViewDefinition);
         # those names also flip to table_type='VIEW' in `tables` above
-        _values_view(spark, "views", [
+        rows["views"] = [
             (catalog_name, current_db, name, definition)
             for name, definition in sorted(view_defs.items())
-        ])
+        ]
     if "table_privileges" in members:
         # fed from the engine's GrantRegistry (access.py) — the reference
         # populates this from connector grant metadata
-        _values_view(spark, "table_privileges", privileges or [])
+        rows["table_privileges"] = privileges or []
+    return {
+        member: global_local_view(spark, f"information_schema_{member}",
+                                  member_rows, TABLE_SCHEMAS[member])
+        for member, member_rows in rows.items()
+    }
 
 
 def _list_relations(spark: SparkSession, databases: list[str],
                     current_db: str) -> list[tuple[str, Relation]]:
     """(database shown, relation) for every table and view: the current
     database's listing first, with the temp views under its name, then
-    the tables of every other database; information_schema's own members
-    never list."""
+    the tables of every other database."""
     out: dict[tuple[str, str], Relation] = {}
-    if current_db != "information_schema":
-        for rel in list_tables(spark):
-            out.setdefault((current_db, rel.name), rel)
+    for rel in list_tables(spark):
+        out.setdefault((current_db, rel.name), rel)
     for db in databases:
-        if db in ("information_schema", current_db):
+        if db == current_db:
             continue
         try:
             listed = list_tables(spark, db)

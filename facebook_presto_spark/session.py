@@ -103,6 +103,19 @@ def local_dataframe(spark: SparkSession, rows, ddl: str) -> DataFrame:
     return spark.createDataFrame(table, schema=struct)
 
 
+def global_local_view(spark: SparkSession, name: str, rows, ddl: str) -> str:
+    """Register ``rows`` (as ``local_dataframe``) as the global temp view
+    ``name`` and return its qualified name for statement text.
+
+    Global temp views are shared by every session of the application
+    and are never listed by ``SHOW TABLES`` / ``SHOW SCHEMAS`` or the
+    catalog listings, and a query over one still plans as a
+    ``LocalTableScanExec`` (no Spark job).
+    """
+    local_dataframe(spark, rows, ddl).createOrReplaceGlobalTempView(name)
+    return f"{spark.conf.get('spark.sql.globalTempDatabase')}.{name}"
+
+
 def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:

@@ -13,10 +13,14 @@ exposes the coordinator's live state (presto-main/.../connector/system/):
   (KillQueryProcedure.java:53-76) — administratively fails a running
   query.
 
-Spark twin: a ``system_runtime`` database whose members are rebuilt as
-literal-VALUES views immediately before any statement that references
-``system.runtime`` runs (the same always-current, metadata-only strategy
-information_schema uses — infoschema.py).  ``queries`` is fed from the
+Spark twin: immediately before any statement that references
+``system.<schema>`` runs, that schema's members are built as local
+relations from live state (``session.local_dataframe``) and registered
+as the global temp views ``global_temp.system_<schema>_<table>``, which
+the references resolve to — the same always-current,
+metadata-only strategy information_schema uses (infoschema.py).  The
+``system.metadata`` and ``system.jdbc`` schemas below are served the
+same way.  ``queries`` is fed from the
 engine's RuntimeQueryRegistry (every ``engine.sql`` call and every
 protocol-server statement registers here); ``nodes``/``tasks`` are fed
 from the live SparkContext (application info + status-tracker stage
@@ -37,39 +41,36 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-# Columns in reference declaration order.  ``end`` is a reserved word in
-# both engines — the views quote it.
+from facebook_presto_spark.session import global_local_view
+
+# Columns in reference declaration order, as DDL.  ``end`` is a reserved
+# word in both engines and is backquoted.
 TABLE_SCHEMAS = {
     "queries": (
-        ("query_id", "string"), ("state", "string"), ("user", "string"),
-        ("source", "string"), ("query", "string"),
-        ("resource_group_id", "array<string>"),
-        ("queued_time_ms", "bigint"), ("analysis_time_ms", "bigint"),
-        ("distributed_planning_time_ms", "bigint"),
-        ("created", "timestamp"), ("started", "timestamp"),
-        ("last_heartbeat", "timestamp"), ("end", "timestamp"),
+        "query_id string, state string, user string, source string, "
+        "query string, resource_group_id array<string>, "
+        "queued_time_ms bigint, analysis_time_ms bigint, "
+        "distributed_planning_time_ms bigint, created timestamp, "
+        "started timestamp, last_heartbeat timestamp, `end` timestamp"
     ),
     "nodes": (
-        ("node_id", "string"), ("http_uri", "string"),
-        ("node_version", "string"), ("coordinator", "boolean"),
-        ("state", "string"),
+        "node_id string, http_uri string, node_version string, "
+        "coordinator boolean, state string"
     ),
     "tasks": (
-        ("node_id", "string"), ("task_id", "string"), ("stage_id", "string"),
-        ("query_id", "string"), ("state", "string"),
-        ("splits", "bigint"), ("queued_splits", "bigint"),
-        ("running_splits", "bigint"), ("completed_splits", "bigint"),
-        ("created", "timestamp"), ("start", "timestamp"),
-        ("last_heartbeat", "timestamp"), ("end", "timestamp"),
+        "node_id string, task_id string, stage_id string, query_id string, "
+        "state string, splits bigint, queued_splits bigint, "
+        "running_splits bigint, completed_splits bigint, created timestamp, "
+        "start timestamp, last_heartbeat timestamp, `end` timestamp"
     ),
     # TransactionsSystemTable.java:61-68 — fed from the engine's
     # TransactionManager (transactions.py): one row per live explicit
     # transaction (START TRANSACTION … COMMIT/ROLLBACK)
     "transactions": (
-        ("transaction_id", "string"), ("isolation_level", "string"),
-        ("read_only", "boolean"), ("auto_commit_context", "boolean"),
-        ("create_time", "timestamp"), ("idle_time_secs", "bigint"),
-        ("written_catalog", "string"), ("catalogs", "array<string>"),
+        "transaction_id string, isolation_level string, read_only boolean, "
+        "auto_commit_context boolean, create_time timestamp, "
+        "idle_time_secs bigint, written_catalog string, "
+        "catalogs array<string>"
     ),
 }
 
@@ -172,51 +173,24 @@ class RuntimeQueryRegistry:
         return out
 
 
-# -- view construction -------------------------------------------------------
+# -- member construction -----------------------------------------------------
 
-def _sql_lit(v, t: str) -> str:
-    if v is None:
-        return f"CAST(NULL AS {t})"
-    if t == "boolean":
-        return "TRUE" if v else "FALSE"
-    if t in ("bigint", "int"):
-        return f"CAST({int(v)} AS {t.upper()})"
-    if t == "timestamp":
-        return "TIMESTAMP '%s'" % v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if t == "array<string>":
-        return "array(%s)" % ", ".join(_sql_lit(e, "string") for e in v)
-    return "'" + str(v).replace("'", "''") + "'"
-
-
-def _values_view(spark: SparkSession, db: str, name: str, rows: list[tuple],
-                 schema: tuple | None = None) -> None:
-    """(Re)define ``db.name`` as a literal-VALUES view over ``rows``
-    (columns and types from ``schema``, by default the system.runtime
-    member's)."""
-    schema = schema or TABLE_SCHEMAS[name]
-    cols = ", ".join(f"`{c}`" for c, _t in schema)
-    if rows:
-        values = ", ".join(
-            "(" + ", ".join(_sql_lit(v, t) for v, (_c, t) in zip(row, schema)) + ")"
-            for row in rows
-        )
-        body = f"SELECT * FROM (VALUES {values}) AS t({cols})"
-    else:
-        nulls = ", ".join(f"CAST(NULL AS {t}) AS `{c}`" for c, t in schema)
-        body = f"SELECT {nulls} WHERE FALSE"
-    spark.sql(f"CREATE OR REPLACE VIEW {db}.`{name}` AS {body}")
+def _register(spark: SparkSession, schema: str, schemas: dict[str, str],
+              rows: dict[str, list[tuple]]) -> dict[str, str]:
+    """Register each ``system.<schema>`` member's rows as its global temp
+    view; returns (schema, table) → view name."""
+    return {
+        (schema, table): global_local_view(
+            spark, f"system_{schema}_{table}", table_rows, schemas[table])
+        for table, table_rows in rows.items()
+    }
 
 
 def refresh(spark: SparkSession, registry: RuntimeQueryRegistry,
-            transactions: list[tuple] | None = None) -> None:
-    """(Re)build system_runtime.{queries,nodes,tasks,transactions} from
-    live state."""
-    spark.sql("CREATE DATABASE IF NOT EXISTS system_runtime")
+            transactions: list[tuple] | None = None) -> dict[tuple[str, str], str]:
+    """Build system.runtime.{queries,nodes,tasks,transactions} from live
+    state."""
     sc = spark.sparkContext
-    _values_view(spark, "system_runtime", "queries", registry.rows())
-    _values_view(spark, "system_runtime", "nodes", [(
-        sc.applicationId, sc.uiWebUrl, f"spark-{sc.version}", True, "active",
-    )])
     tasks = []
     now = dt.datetime.now()
     tracker = sc.statusTracker()
@@ -230,30 +204,27 @@ def refresh(spark: SparkSession, registry: RuntimeQueryRegistry,
             info.numActiveTasks, info.numCompletedTasks,
             now, now, now, None,
         ))
-    _values_view(spark, "system_runtime", "tasks", tasks)
-    _values_view(spark, "system_runtime", "transactions", transactions or [])
+    return _register(spark, "runtime", TABLE_SCHEMAS, {
+        "queries": registry.rows(),
+        "nodes": [(sc.applicationId, sc.uiWebUrl, f"spark-{sc.version}",
+                   True, "active")],
+        "tasks": tasks,
+        "transactions": transactions or [],
+    })
 
 
 # -- system.metadata (CatalogSystemTable.java:44-48,
 #    AbstractPropertiesSystemTable.java:50-55) -------------------------------
 
+_PROPERTIES_SCHEMA = (
+    "catalog_name string, property_name string, default_value string, "
+    "type string, description string"
+)
 _METADATA_SCHEMAS = {
-    "catalogs": (("catalog_name", "string"), ("connector_id", "string")),
-    "table_properties": (
-        ("catalog_name", "string"), ("property_name", "string"),
-        ("default_value", "string"), ("type", "string"),
-        ("description", "string"),
-    ),
-    "schema_properties": (
-        ("catalog_name", "string"), ("property_name", "string"),
-        ("default_value", "string"), ("type", "string"),
-        ("description", "string"),
-    ),
-    "column_properties": (
-        ("catalog_name", "string"), ("property_name", "string"),
-        ("default_value", "string"), ("type", "string"),
-        ("description", "string"),
-    ),
+    "catalogs": "catalog_name string, connector_id string",
+    "table_properties": _PROPERTIES_SCHEMA,
+    "schema_properties": _PROPERTIES_SCHEMA,
+    "column_properties": _PROPERTIES_SCHEMA,
 }
 
 # the WITH (…) table properties ddl/translate actually honor
@@ -264,13 +235,8 @@ _TABLE_PROPERTIES = [
     ("bucket_count", "0", "integer", "Number of buckets"),
 ]
 
-def refresh_metadata(spark: SparkSession, catalog_name: str = "spark") -> None:
-    spark.sql("CREATE DATABASE IF NOT EXISTS system_metadata")
-
-    def view(name: str, rows: list[tuple]) -> None:
-        _values_view(spark, "system_metadata", name, rows,
-                     _METADATA_SCHEMAS[name])
-
+def refresh_metadata(spark: SparkSession,
+                     catalog_name: str = "spark") -> dict[tuple[str, str], str]:
     # the primary Spark catalog plus every registered connector catalog
     # (CatalogSystemTable lists the connector registry; the connector_id
     # is the plugin's factory name)
@@ -280,14 +246,14 @@ def refresh_metadata(spark: SparkSession, catalog_name: str = "spark") -> None:
         ("example", "example-http"), ("tpch", "tpch"),
         ("hive", "hive-hadoop2"), ("system", "system"),
     ]
-    view("catalogs", sorted(
-        [(catalog_name, catalog_name)] + connector_catalogs
-    ))
-    view("table_properties", [
-        (catalog_name, n, d, t, desc) for n, d, t, desc in _TABLE_PROPERTIES
-    ])
-    view("schema_properties", [])
-    view("column_properties", [])
+    return _register(spark, "metadata", _METADATA_SCHEMAS, {
+        "catalogs": sorted([(catalog_name, catalog_name)] + connector_catalogs),
+        "table_properties": [
+            (catalog_name, n, d, t, desc) for n, d, t, desc in _TABLE_PROPERTIES
+        ],
+        "schema_properties": [],
+        "column_properties": [],
+    })
 
 
 # -- system.jdbc (connector/system/jdbc/*.java) ------------------------------
@@ -297,33 +263,29 @@ def refresh_metadata(spark: SparkSession, catalog_name: str = "spark") -> None:
 # (TableJdbcTable.java:50-59, SchemaJdbcTable.java:46-47,
 # CatalogJdbcTable.java:42, ColumnJdbcTable.java:73-96 with the
 # java.sql.Types mapping at :169).  Served here like information_schema:
-# literal views rebuilt from the live catalog before any referencing
-# statement, addressed as the system_jdbc database.
+# local relations built from the live catalog before any referencing
+# statement.
 
 _JDBC_SCHEMAS = {
-    "catalogs": (("table_cat", "string"),),
-    "schemas": (("table_schem", "string"), ("table_catalog", "string")),
-    "table_types": (("table_type", "string"),),
+    "catalogs": "table_cat string",
+    "schemas": "table_schem string, table_catalog string",
+    "table_types": "table_type string",
     "tables": (
-        ("table_cat", "string"), ("table_schem", "string"),
-        ("table_name", "string"), ("table_type", "string"),
-        ("remarks", "string"), ("type_cat", "string"),
-        ("type_schem", "string"), ("type_name", "string"),
-        ("self_referencing_col_name", "string"), ("ref_generation", "string"),
+        "table_cat string, table_schem string, table_name string, "
+        "table_type string, remarks string, type_cat string, "
+        "type_schem string, type_name string, "
+        "self_referencing_col_name string, ref_generation string"
     ),
     "columns": (
-        ("table_cat", "string"), ("table_schem", "string"),
-        ("table_name", "string"), ("column_name", "string"),
-        ("data_type", "bigint"), ("type_name", "string"),
-        ("column_size", "bigint"), ("buffer_length", "bigint"),
-        ("decimal_digits", "bigint"), ("num_prec_radix", "bigint"),
-        ("nullable", "bigint"), ("remarks", "string"),
-        ("column_def", "string"), ("sql_data_type", "bigint"),
-        ("sql_datetime_sub", "bigint"), ("char_octet_length", "bigint"),
-        ("ordinal_position", "bigint"), ("is_nullable", "string"),
-        ("scope_catalog", "string"), ("scope_schema", "string"),
-        ("scope_table", "string"), ("source_data_type", "bigint"),
-        ("is_autoincrement", "string"), ("is_generatedcolumn", "string"),
+        "table_cat string, table_schem string, table_name string, "
+        "column_name string, data_type bigint, type_name string, "
+        "column_size bigint, buffer_length bigint, decimal_digits bigint, "
+        "num_prec_radix bigint, nullable bigint, remarks string, "
+        "column_def string, sql_data_type bigint, sql_datetime_sub bigint, "
+        "char_octet_length bigint, ordinal_position bigint, "
+        "is_nullable string, scope_catalog string, scope_schema string, "
+        "scope_table string, source_data_type bigint, "
+        "is_autoincrement string, is_generatedcolumn string"
     ),
 }
 
@@ -359,13 +321,9 @@ def _jdbc_type_row(presto_name: str) -> tuple:
     return _JDBC_TYPE_INFO.get(low, (2000, None, None, None))  # JAVA_OBJECT
 
 
-def _jdbc_values_view(spark: SparkSession, name: str, rows: list[tuple]) -> None:
-    _values_view(spark, "system_jdbc", name, rows, _JDBC_SCHEMAS[name])
-
-
 def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
-                 view_names: set[str] | None = None) -> None:
-    """(Re)build system_jdbc.* from the live catalog — the JDBC
+                 view_names: set[str] | None = None) -> dict[tuple[str, str], str]:
+    """Build system.jdbc.* from the live catalog — the JDBC
     DatabaseMetaData surface, fed by the same job-free catalog listing
     information_schema uses (metadata-only, no data reads)."""
     from facebook_presto_spark.catalog import (
@@ -375,25 +333,14 @@ def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
     )
     from facebook_presto_spark.infoschema import presto_type_name
 
-    spark.sql("CREATE DATABASE IF NOT EXISTS system_jdbc")
     views = {v.lower() for v in (view_names or set())}
     current_db = spark.catalog.currentDatabase()
     databases = sorted(set(list_databases(spark)))
-
-    _jdbc_values_view(spark, "catalogs", [(catalog_name,)])
-    _jdbc_values_view(
-        spark, "schemas",
-        [(d, catalog_name) for d in databases if d not in
-         ("information_schema", "system_runtime", "system_jdbc")],
-    )
-    _jdbc_values_view(spark, "table_types", [("TABLE",), ("VIEW",)])
 
     tables_rows: list[tuple] = []
     columns_rows: list[tuple] = []
     for rel in list_tables(spark):
         db = rel.database or current_db
-        if db in ("information_schema", "system_runtime", "system_jdbc"):
-            continue
         kind = "VIEW" if rel.name.lower() in views else "TABLE"
         tables_rows.append((
             catalog_name, db, rel.name, kind,
@@ -413,24 +360,33 @@ def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
                 pos, "YES" if c.nullable else "NO",
                 None, None, None, None, "", "",
             ))
-    _jdbc_values_view(spark, "tables", tables_rows)
-    _jdbc_values_view(spark, "columns", columns_rows)
+    return _register(spark, "jdbc", _JDBC_SCHEMAS, {
+        "catalogs": [(catalog_name,)],
+        "schemas": [(d, catalog_name) for d in databases],
+        "table_types": [("TABLE",), ("VIEW",)],
+        "tables": tables_rows,
+        "columns": columns_rows,
+    })
 
 
 # -- statement name resolution ----------------------------------------------
 
 def resolve(engine, refs) -> list[str]:
-    """``system.<schema>.<table>`` → ``system_<schema>.<table>`` for each
-    reference (``statements.Reference``; Spark databases are
-    single-level, so the catalog prefix is a name prefix as in
-    catalog.py), after rebuilding each schema the statement names from
-    live state — once per statement."""
-    spark, schemas = engine.spark, {ref.parts[1] for ref in refs}
+    """``system.<schema>.<table>`` → the global temp view holding the
+    table's rows, for each reference (``statements.Reference``), after
+    building each schema the statement names from live state — once per
+    statement."""
+    spark, schemas, names = engine.spark, {ref.parts[1] for ref in refs}, {}
     if "runtime" in schemas:
-        refresh(spark, engine.runtime, transactions=engine.transactions.rows())
+        names.update(refresh(spark, engine.runtime,
+                             transactions=engine.transactions.rows()))
     if "jdbc" in schemas:
-        refresh_jdbc(spark, view_names=set(engine._views))
+        names.update(refresh_jdbc(spark, view_names=set(engine._views)))
     if "metadata" in schemas:
-        refresh_metadata(spark)
-    return [f"system_{schema}.{table}" for _system, schema, table in
-            (ref.parts for ref in refs)]
+        names.update(refresh_metadata(spark))
+    out = []
+    for _system, schema, table in (ref.parts for ref in refs):
+        if (schema, table) not in names:
+            raise ValueError(f"Table system.{schema}.{table} does not exist")
+        out.append(names[schema, table])
+    return out

@@ -17,6 +17,20 @@ def test_statement_splitter_respects_strings():
     ]
 
 
+def test_statement_splitter_skips_comments():
+    def split(*lines):
+        return list(cli.read_statements(iter(lines)))
+
+    assert split("SELECT 1; -- don't\nSELECT 2;\nSELECT 3;") == [
+        "SELECT 1", "-- don't\nSELECT 2", "SELECT 3",
+    ]
+    assert split("SELECT 1 /* a;b */ AS x;") == ["SELECT 1 /* a;b */ AS x"]
+    # a comment or literal left open at a line's end waits for the next
+    assert split("SELECT 1 /* a;\n", "b */ AS x; SELECT 'c;\n", "d';\n") == [
+        "SELECT 1 /* a;\nb */ AS x", "SELECT 'c;\nd'",
+    ]
+
+
 def test_aligned_printer_format():
     out = io.StringIO()
     n = cli.print_aligned(

@@ -218,7 +218,7 @@ def test_infoschema_members_rebuilt_on_demand(eng, spark):
         AS SELECT r_name, r_regionkey FROM region
     """)
     eng.sql("CREATE VIEW v_on_demand AS SELECT n_name FROM nation")
-    spark.sql("DROP VIEW IF EXISTS information_schema.schemata")
+    spark.sql("DROP VIEW IF EXISTS global_temp.information_schema_schemata")
     try:
         rows = eng.sql("""
             SELECT t.table_catalog, t.table_schema, t.table_name,
@@ -245,7 +245,7 @@ def test_infoschema_members_rebuilt_on_demand(eng, spark):
     assert got[("spark", current, "nation", "n_name")] == ("BASE TABLE", None)
     assert got[("spark", current, "v_on_demand", "n_name")] == ("VIEW", None)
     # schemata was not named, so it was not rebuilt
-    assert not spark.catalog.tableExists("information_schema.schemata")
+    assert not spark.catalog.tableExists("global_temp.information_schema_schemata")
 
 
 def test_show_create_table_renders_properties(eng):
@@ -701,3 +701,32 @@ def test_call_create_empty_partition_roundtrip(eng):
             """)
     finally:
         eng.sql("ROLLBACK")
+
+
+def test_catalog_is_shared_by_concurrent_first_use(spark, monkeypatch):
+    """Protocol-server request threads that reach the hive catalog
+    registry for the first time together all get the same catalog."""
+    import threading
+    import time as _time
+
+    class SlowCatalog:  # widens the check-then-insert window
+        def __init__(self, _spark):
+            _time.sleep(0.02)
+
+    monkeypatch.setattr(hive_catalog, "_CATALOGS", {})
+    monkeypatch.setattr(hive_catalog, "HiveCatalog", SlowCatalog)
+    start = threading.Barrier(8, timeout=30)
+    got = []
+
+    def touch():
+        start.wait()
+        got.append(hive_catalog.get_catalog(spark))
+
+    threads = [threading.Thread(target=touch) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 8
+    assert all(c is got[0] for c in got)

@@ -69,15 +69,18 @@ _AGGS = [
 _KEYS = ["o_orderstatus", "o_orderpriority"]
 
 
-@pytest.fixture(scope="module")
+@pytest.fixture
 def duck():
+    # one connection per test: a DuckDB internal error invalidates the
+    # connection it happens on, and must fail only that test
     con = duckdb.connect()
     for t in ("orders", "customer"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{os.path.join(SF_DIR, f'{t}.parquet')}')"
         )
-    return con
+    yield con
+    con.close()
 
 
 @pytest.fixture(scope="module")

@@ -136,6 +136,10 @@ def test_large_result_streams_pages(server):
     "SET SESSION hash_partition_count = 7",
     "EXPLAIN (TYPE VALIDATE) SELECT n_name FROM nation",
     "SHOW GRANTS",
+    "SELECT * FROM system.runtime.nodes",
+    "SELECT * FROM system.metadata.catalogs",
+    "SELECT table_name FROM information_schema.tables WHERE table_schema = 'default'",
+    "SHOW TABLES FROM information_schema",
 ])
 def test_metadata_statement_starts_no_spark_job(server, spark_jobs, sql):
     """Metadata answers from the driver, like the reference's

@@ -13,7 +13,9 @@ Usage::
         [--execute SQL] [--file F] [--output-format FMT]
 
 Interactive mode reads statements until ``;`` (continuation prompt
-``       ->`` like the reference's dash-prompt), runs them through
+``       ->`` like the reference's dash-prompt; ``split_statements`` reads
+them with the engine's tokenizer, waits only for an open literal or
+comment, and ends text it cannot read at the next ``;``), runs them through
 ``PrestoSparkEngine.sql`` (the full Presto-dialect translator), and
 prints aligned tables.  Errors print and the loop continues — same
 contract as Console.java's error handling.
@@ -145,27 +147,32 @@ def split_statements(text: str) -> tuple[list[str], str]:
     """The ``;``-terminated statements of ``text`` and the rest after
     them, read with the engine's tokenizer: a ``;`` inside a literal, a
     quoted name or a comment ends nothing.  A rest that ends inside an
-    unterminated literal or comment is kept whole for more lines (so is
-    one the tokenizer cannot read; it reaches the engine, which reports
-    the error, at the end of input); a rest of only whitespace and
-    comments is dropped."""
-    from facebook_presto_spark.sqlfront.tokens import scan
+    unterminated literal or comment is kept whole for more lines; a
+    character the tokenizer cannot read is part of its statement, which
+    the next ``;`` ends and the engine then reports; a rest of only
+    whitespace and comments is dropped."""
+    from facebook_presto_spark.sqlfront.tokens import TokenizeError, scan
 
-    stmts, start, pending = [], 0, False
-    try:
-        for tok, at in scan(text):
-            if tok.text == "/" and text.startswith("*", at + 1):
-                return stmts, text[start:]  # an unterminated /* comment
-            if tok.text != ";":
-                pending = True
-            elif pending:
-                stmts.append(text[start:at].strip())
-                start, pending = at + 1, False
-            else:  # an empty statement
-                start = at + 1
-    except ValueError:
-        return stmts, text[start:]
-    return stmts, text[start:] if pending else ""
+    stmts, start, pending, pos = [], 0, False, 0
+    while True:
+        try:
+            for tok, at in scan(text[pos:]):
+                at += pos
+                if tok.text == "/" and text.startswith("*", at + 1):
+                    return stmts, text[start:]  # an unterminated /* comment
+                if tok.text != ";":
+                    pending = True
+                elif pending:
+                    stmts.append(text[start:at].strip())
+                    start, pending = at + 1, False
+                else:  # an empty statement
+                    start = at + 1
+            return stmts, text[start:] if pending else ""
+        except TokenizeError as e:
+            pos += e.offset
+            if text[pos] in "'\"":
+                return stmts, text[start:]  # an unterminated literal
+            pending, pos = True, pos + 1
 
 
 def main(argv: list[str] | None = None) -> int:

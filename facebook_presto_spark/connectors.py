@@ -1043,7 +1043,7 @@ def show_catalogs(engine, stmt) -> DataFrame | None:
 
 def create_table_as(engine, stmt) -> DataFrame:
     query, no_data = split_with_data(stmt.body)
-    df = engine.sql(query)
+    df = engine._sql_inner(query)
     if no_data:
         df = df.limit(0)
     props = parse_props(stmt.props)
@@ -1080,7 +1080,7 @@ def insert(engine, stmt) -> DataFrame:
     spark = engine.spark
     cats = get_catalogs(spark)
     schema, table = stmt.schema, stmt.table
-    df = engine.sql(stmt.body)
+    df = engine._sql_inner(stmt.body)
     if stmt.columns is not None:
         # explicit column list (InsertInto grammar): name the query's
         # positional output, letting insert() align by position with

@@ -196,9 +196,7 @@ class PrestoSparkEngine:
         self.grants = GrantRegistry()
         # query tracking for system.runtime.queries / kill_query
         # (QueryManager parity — systemtables.py)
-        from facebook_presto_spark.systemtables import RuntimeQueryRegistry
-
-        self.runtime = RuntimeQueryRegistry()
+        self.runtime = systemtables.RuntimeQueryRegistry()
         # view definitions in Presto dialect, for
         # information_schema.views + SHOW CREATE VIEW (the reference
         # persists ViewDefinition JSON in the metastore —
@@ -334,7 +332,8 @@ class PrestoSparkEngine:
             self._ok = local_dataframe(self.spark, [], "ok boolean")
         return self._ok
 
-    def sql(self, presto_sql: str) -> DataFrame:
+    def sql(self, presto_sql: str,
+            entry: systemtables.QueryEntry | None = None) -> DataFrame:
         """Run Presto-dialect SQL; returns a lazy DataFrame.
 
         Session, transaction, DDL and metadata statements run their
@@ -344,24 +343,23 @@ class PrestoSparkEngine:
         reference's whole optimizer sequence (PlanOptimizers.java:221-502):
         pushdown, pruning, join selection — lazily, until an action runs.
 
-        Every statement registers in ``self.runtime`` (the QueryManager
-        surface behind ``system.runtime.queries`` / ``kill_query``);
-        nested calls (EXECUTE, the protocol server) reuse the thread's
-        active entry so one user statement is one row.
+        Every statement is one entry in ``self.runtime`` (the QueryManager
+        surface behind ``system.runtime.queries`` / ``kill_query``).
+        Without ``entry`` the call registers the statement and finishes or
+        fails it; the protocol server passes the entry it registered and
+        keeps it running while the result pages out.  Handlers that run a
+        nested statement call ``_sql_inner``, which registers nothing.
         """
-        entry, owner = self.runtime.enter(presto_sql)
+        if entry is not None:
+            return self._sql_inner(presto_sql)
+        entry = self.runtime.register(presto_sql)
         try:
             df = self._sql_inner(presto_sql)
-            if owner:
-                entry.finish()
-            return df
         except Exception as e:
-            if owner:
-                entry.fail(str(e).split("\n")[0][:500])
+            entry.fail(str(e))
             raise
-        finally:
-            if owner:
-                self.runtime.exit()
+        entry.finish()
+        return df
 
     def _sql_inner(self, presto_sql: str) -> DataFrame:
         # classify once from the statement's head (statements.py), the
@@ -532,7 +530,7 @@ class PrestoSparkEngine:
         # runtime metrics (ExplainAnalyzeOperator) — AQE final plan here
         from facebook_presto_spark.ddl import explain_analyze
 
-        text = explain_analyze(self.sql(stmt.body))
+        text = explain_analyze(self._sql_inner(stmt.body))
         return local_dataframe(
             self.spark, [(line,) for line in text.splitlines()],
             "query_plan string",
@@ -546,7 +544,7 @@ class PrestoSparkEngine:
         # serves all)
         opts, body = stmt.props.upper(), stmt.body
         if "VALIDATE" in opts:
-            self.sql(body).schema  # analysis errors propagate
+            self._sql_inner(body).schema  # analysis errors propagate
             return local_dataframe(self.spark, [(True,)], "valid boolean")
         if "IO" in opts.replace("FORMAT", ""):
             return self._explain_io(body)
@@ -577,7 +575,7 @@ class PrestoSparkEngine:
         if stmt.body is not None:
             # ShowStatsRewrite over a query: statistics of the RESULT
             # relation, computed live from the plan's output
-            return self._stats_of(self.sql(stmt.body))
+            return self._stats_of(self._sql_inner(stmt.body))
         return self._stats_of(self.spark.table(".".join(stmt.name)))
 
     def _show_create_view(self, stmt: Statement) -> DataFrame:
@@ -839,7 +837,7 @@ class PrestoSparkEngine:
         return self.ok()
 
     def _execute(self, stmt: Statement) -> DataFrame:
-        return self.sql(self._bind(stmt.name[0], stmt.body))
+        return self._sql_inner(self._bind(stmt.name[0], stmt.body))
 
     def _prepared_body(self, name: str) -> str:
         name = name.lower()

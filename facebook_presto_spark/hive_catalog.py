@@ -679,7 +679,7 @@ def delete(engine, stmt) -> DataFrame:
 def create_table_as(engine, stmt) -> DataFrame:
     spark = engine.spark
     query, no_data = split_with_data(stmt.body)
-    df = engine.sql(query)
+    df = engine._sql_inner(query)
     if no_data:
         df = df.limit(0)
     n = get_catalog(spark).create_as(
@@ -699,7 +699,7 @@ def create_table(engine, stmt) -> DataFrame:
 
 def insert(engine, stmt) -> DataFrame:
     spark = engine.spark
-    df = engine.sql(stmt.body)
+    df = engine._sql_inner(stmt.body)
     cols = column_names(stmt.columns) if stmt.columns is not None else None
     n = get_catalog(spark).insert(stmt.schema, stmt.table, df, cols)
     return spark.createDataFrame([(n,)], "rows bigint")

@@ -38,6 +38,7 @@ Scale notes
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -67,7 +68,11 @@ _SPLIT_MIN_BYTES = 2 * 1024 * 1024
 _SPLIT_TARGET_BYTES = 1536 * 1024
 _SPLIT_MAX_FILES = 16
 _SPLIT_DIR = "/root/repo/.scratch/split"
-_split_cache: dict[str, str] = {}
+_split_cache: dict[tuple[str, int], str] = {}
+# one stager at a time in this process: the cache check, the staging
+# write, its marker and the rename into place happen under this lock;
+# other processes are kept apart by a tmp dir unique to each attempt
+_SPLIT_LOCK = threading.Lock()
 
 
 def _split_staged(spark: SparkSession, path: str,
@@ -84,42 +89,46 @@ def _split_staged(spark: SparkSession, path: str,
         return path
     if st.st_size < (min_bytes if min_bytes is not None else _SPLIT_MIN_BYTES):
         return path
+    n = files or int(
+        min(_SPLIT_MAX_FILES, max(4, st.st_size // _SPLIT_TARGET_BYTES)))
+    with _SPLIT_LOCK:
+        if (path, n) not in _split_cache:
+            _split_cache[(path, n)] = _stage_split(spark, path, st, n)
+        return _split_cache[(path, n)]
+
+
+def _stage_split(spark: SparkSession, path: str, st: os.stat_result,
+                 n: int) -> str:
     import hashlib
     import json
     import shutil
+    import uuid
 
-    n = files or int(
-        min(_SPLIT_MAX_FILES, max(4, st.st_size // _SPLIT_TARGET_BYTES)))
-    cached = _split_cache.get((path, n))
-    if cached is not None:
-        return cached
     ident = {"src": path, "size": st.st_size, "mtime_ns": st.st_mtime_ns,
              "files": n}
     stem = os.path.basename(path).removesuffix(".parquet")
     key = hashlib.sha1(json.dumps(ident, sort_keys=True).encode()).hexdigest()[:12]
     dest = os.path.join(_SPLIT_DIR, f"{stem}_{key}")
     marker = os.path.join(dest, "_staged.json")
-    if not os.path.exists(marker):
-        src = spark.read.parquet(path)
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        src.repartition(n).write.mode("overwrite").parquet(tmp)
-        out = spark.read.parquet(tmp)
-        # layout change only: schema and row count must survive exactly
-        # (value identity is re-proven by the driver's oracle hash gate)
-        if out.schema != src.schema or out.count() != src.count():
-            shutil.rmtree(tmp, ignore_errors=True)
-            _split_cache[(path, n)] = path
+    if os.path.exists(marker):
+        return dest
+    src = spark.read.parquet(path)
+    tmp = f"{dest}.tmp.{uuid.uuid4().hex}"
+    src.repartition(n).write.mode("overwrite").parquet(tmp)
+    out = spark.read.parquet(tmp)
+    # layout change only: schema and row count must survive exactly
+    # (value identity is re-proven by the oracle's hash check of results)
+    if out.schema != src.schema or out.count() != src.count():
+        shutil.rmtree(tmp, ignore_errors=True)
+        return path
+    with open(os.path.join(tmp, "_staged.json"), "w") as f:
+        json.dump(ident, f)
+    try:
+        os.rename(tmp, dest)
+    except OSError:  # another process's stager won the rename
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(marker):
             return path
-        with open(os.path.join(tmp, "_staged.json"), "w") as f:
-            json.dump(ident, f)
-        try:
-            os.rename(tmp, dest)
-        except OSError:  # concurrent stager won the rename
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(marker):
-                _split_cache[(path, n)] = path
-                return path
-    _split_cache[(path, n)] = dest
     return dest
 
 

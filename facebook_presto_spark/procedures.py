@@ -164,7 +164,7 @@ def call(engine, stmt):
     # (CallTask evaluateConstantExpression)
     values = {}
     for name, expr in bound.items():
-        row = engine.sql(f"SELECT {expr} AS v").collect()
+        row = engine._sql_inner(f"SELECT {expr} AS v").collect()
         values[name] = row[0]["v"] if row else None
     body(engine, values)
     return engine.ok()

@@ -14,6 +14,19 @@ client loop expects: keep GETting ``nextUri`` until it disappears,
 DELETE cancels.  ``X-Presto-Session: k=v,...`` headers apply the same
 session-property surface ``SET SESSION`` uses (properties.py).
 
+Each statement is one ``systemtables.QueryEntry`` in the engine's
+runtime registry, like the reference's protocol ``Query``: the same
+object is the statement's row in ``system.runtime.queries`` and holds
+its paging state (columns, page source, buffered page).  The server
+reads and changes only that object.  ``kill_query`` and a DELETE fail
+it: a statement ended while it was still planning answers FAILED on its
+POST, and one ended while paging answers FAILED on its next GET.  The
+last page, a failure and a cancel drop the page source, and the
+registry's ``MAX_ENTRIES`` bound also bounds the paging state of
+clients that stop polling.  A write (CREATE TABLE AS, INSERT, DELETE)
+answers ``updateType`` and takes ``updateCount`` from its single
+``rows`` cell, as the reference's ``Query`` does.
+
 How rows leave Spark depends on the physical plan (``result_rows``): a
 plan whose root already holds its rows in the driver (a
 ``LocalTableScanExec`` — VALUES, small driver-built metadata results —
@@ -41,13 +54,17 @@ import decimal
 import json
 import math
 import threading
-import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from facebook_presto_spark.infoschema import presto_type_name
 from facebook_presto_spark.statements import classify
+from facebook_presto_spark.systemtables import QueryEntry
 
 PAGE_SIZE = 1000
+
+# statement kind → QueryResults.updateType of a write
+_UPDATE_TYPES = {"create_table_as": "CREATE TABLE", "insert": "INSERT",
+                 "delete": "DELETE"}
 
 # physical roots whose rows already sit in the driver: collect() serves
 # them without launching a Spark job
@@ -96,49 +113,6 @@ def _json_cell(v):
     return str(v)
 
 
-class _Query:
-    """Streaming paging state: rows are pulled lazily from
-    ``result_rows(df)`` one page at a time, like the reference's
-    root-stage page flow (StatementResource.java:84 streams pages from
-    the output buffer — it never materializes the result).  For plans
-    that stream, that is ``toLocalIterator``; driver-local plans hand
-    over their collected rows, which the driver held already.  Only the
-    most recently produced page is retained (for idempotent client
-    retries of the current nextUri); older pages are gone, matching the
-    reference's consume-once buffer."""
-
-    def __init__(self, qid: str, columns, row_iter):
-        self.id = qid
-        self.columns = columns
-        self._it = row_iter
-        self._lock = threading.Lock()
-        self._page_no = -1      # index of the buffered page
-        self._page: list = []
-        self._exhausted = False
-        self.killed = False     # set by CALL system.runtime.kill_query
-
-    def page(self, page_no: int):
-        """(chunk, has_next) for ``page_no``; None if the page is no
-        longer (or not yet) available."""
-        with self._lock:
-            while self._page_no < page_no and not (
-                self._exhausted and self._page_no >= 0
-            ):
-                chunk = []
-                try:
-                    while len(chunk) < PAGE_SIZE:
-                        row = next(self._it)
-                        chunk.append([_json_cell(c) for c in row])
-                except StopIteration:
-                    self._exhausted = True
-                self._page_no += 1
-                self._page = chunk
-            if page_no != self._page_no:
-                return None
-            has_next = not self._exhausted
-            return self._page, has_next
-
-
 class _Handler(BaseHTTPRequestHandler):
     server_version = "PrestoSpark/0"
 
@@ -162,67 +136,53 @@ class _Handler(BaseHTTPRequestHandler):
         host = self.headers.get("Host") or f"localhost:{self.server.server_port}"
         return f"http://{host}"
 
-    def _page_payload(self, q: _Query, page: int) -> dict | None:
-        if q.killed:
-            # administratively killed (KillQueryProcedure semantics):
-            # surface the failure on the client's next poll, then evict
-            self.server.queries.pop(q.id, None)
-            return {
-                "id": q.id,
-                "infoUri": f"{self._base()}/v1/query/{q.id}",
-                "columns": q.columns,
-                "stats": {"state": "FAILED"},
-                "error": {
-                    "message": "Query killed",
-                    "errorCode": 1,
-                    "errorName": "ADMINISTRATIVELY_KILLED",
-                    "errorType": "USER_ERROR",
-                },
-            }
-        try:
-            got = q.page(page)
-        except Exception as e:  # runtime failure while streaming a page
-            self.server.queries.pop(q.id, None)
-            entry = self.server.engine.runtime.get(q.id)
-            if entry is not None:
-                entry.fail(str(e).split("\n")[0][:500])
-            return {
-                "id": q.id,
-                "infoUri": f"{self._base()}/v1/query/{q.id}",
-                "columns": q.columns,
-                "stats": {"state": "FAILED"},
-                "error": {
-                    "message": str(e).split("\n")[0][:1000],
-                    "errorCode": 1,
-                    "errorName": "GENERIC_USER_ERROR",
-                    "errorType": "USER_ERROR",
-                },
-            }
-        if got is None:
-            return None
-        chunk, has_next = got
+    def _results(self, q: QueryEntry, page_no: int,
+                 update_type: str | None = None) -> dict | None:
+        """QueryResults for page ``page_no`` of ``q``, from the registry
+        entry's state; None if that page is no longer (or not yet)
+        available.  A failed entry (an error while planning or paging,
+        kill_query, cancel) answers FAILED with its own message and is
+        not paged again; the last page finishes the entry."""
+        if q.state != "FAILED":
+            try:
+                got = q.page(page_no, PAGE_SIZE)
+            except Exception as e:  # runtime failure while streaming a page
+                q.fail(str(e))
+            else:
+                if got is None:
+                    return None
         out = {
-            "id": q.id,
-            "infoUri": f"{self._base()}/v1/query/{q.id}",
+            "id": q.qid,
+            "infoUri": f"{self._base()}/v1/query/{q.qid}",
             "columns": q.columns,
-            "data": chunk or None,
+        }
+        if q.state == "FAILED":
+            q.drop()
+            out["stats"] = {"state": "FAILED"}
+            out["error"] = {
+                "message": q.error,
+                "errorCode": 1,
+                "errorName": q.error_name,
+                "errorType": "USER_ERROR",
+            }
+            return out
+        chunk, has_next = got
+        # Presto's Query takes the count of a write from its single
+        # bigint ``rows`` cell
+        count = (chunk[0][0] if update_type and len(chunk) == 1
+                 and q.columns == [{"name": "rows", "type": "bigint"}] else None)
+        out.update({
             "stats": {"state": "RUNNING" if has_next else "FINISHED"},
             "error": None,
-            "updateType": None,
-            "updateCount": None,
-        }
+            "updateType": update_type,
+            "updateCount": count,
+        })
+        if chunk:
+            out["data"] = chunk
         if has_next:
-            out["nextUri"] = f"{self._base()}/v1/statement/{q.id}/{page + 1}"
+            out["nextUri"] = f"{self._base()}/v1/statement/{q.qid}/{page_no + 1}"
         else:
-            # last page served — evict; the normal client loop (GET until
-            # nextUri disappears) never sends DELETE, so this is the
-            # only path that frees the paging state
-            self.server.queries.pop(q.id, None)
-            entry = self.server.engine.runtime.get(q.id)
-            if entry is not None:
-                entry.finish()
-        if not chunk:
-            out.pop("data")
+            q.finish()
         return out
 
     # -- protocol ----------------------------------------------------------
@@ -233,17 +193,16 @@ class _Handler(BaseHTTPRequestHandler):
             return
         length = int(self.headers.get("Content-Length") or 0)
         sql = self.rfile.read(length).decode()
-        qid = f"{dt.date.today():%Y%m%d}_{uuid.uuid4().hex[:12]}"
         engine = self.server.engine
-        # register with the runtime registry (system.runtime.queries /
-        # kill_query) as the OUTER frame: engine.sql's nested enter
-        # reuses this entry, and it stays RUNNING until paging completes
-        entry, _owner = engine.runtime.enter(
+        # the statement's one entry in the runtime registry
+        # (system.runtime.queries, kill_query): engine.sql runs the
+        # statement under it, and it holds the paging state
+        entry = engine.runtime.register(
             sql,
             user=self.headers.get("X-Presto-User") or "presto",
             source=self.headers.get("X-Presto-Source"),
-            qid=qid,
         )
+        stmt = classify(sql)
         snap = {}
         reply_headers: dict[str, str] = {}
         try:
@@ -261,7 +220,6 @@ class _Handler(BaseHTTPRequestHandler):
             # PRESTO_DEALLOCATED_PREPARE), the reference's contract for
             # client-side statement caches — from the same classification
             # the engine routes the statement by
-            stmt = classify(sql)
             if stmt.kind in ("prepare", "deallocate"):
                 name = _up.quote(stmt.name[0].lower(), safe="")
                 if stmt.kind == "prepare":
@@ -298,7 +256,7 @@ class _Handler(BaseHTTPRequestHandler):
                 snap = snapshot_confs(engine.spark, [n for n, _, _ in props])
                 for name, _, value in props:
                     set_session_property(engine.spark, name.strip(), value.strip())
-            df = engine.sql(sql)
+            df = engine.sql(sql, entry)
             ev = engine.txn_event
             if ev is not None:
                 # PrestoHeaders.java:36-37 — the client adopts/clears its
@@ -309,43 +267,25 @@ class _Handler(BaseHTTPRequestHandler):
                     reply_headers["X-Presto-Clear-Transaction-Id"] = "true"
             if engine.path_event is not None:
                 reply_headers["X-Presto-Set-Path"] = engine.path_event
-            schema = df.schema
-            rows = result_rows(df)
-            columns = [
-                {"name": f.name, "type": presto_type_name(f.dataType.simpleString())}
-                for f in schema.fields
-            ]
+            # kill_query or a DELETE may have ended it while planning
+            if entry.state == "RUNNING":
+                entry.open(
+                    [{"name": f.name,
+                      "type": presto_type_name(f.dataType.simpleString())}
+                     for f in df.schema.fields],
+                    ([_json_cell(c) for c in row] for row in result_rows(df)),
+                )
         except Exception as e:  # QueryError shape (QueryResults.error)
-            entry.fail(str(e).split("\n")[0][:500])
-            self._reply({
-                "id": qid,
-                "infoUri": f"{self._base()}/v1/query/{qid}",
-                "columns": None,
-                "stats": {"state": "FAILED"},
-                "error": {
-                    "message": str(e).split("\n")[0][:1000],
-                    "errorCode": 1,
-                    "errorName": "GENERIC_USER_ERROR",
-                    "errorType": "USER_ERROR",
-                },
-            })
-            return
+            entry.fail(str(e))
+            reply_headers = {}
         finally:
-            engine.runtime.exit()
             engine.set_current_transaction(None)
             if snap:
                 from facebook_presto_spark.properties import restore_confs
 
                 restore_confs(engine.spark, snap)
-        q = _Query(qid, columns, rows)
-        self.server.queries[qid] = q
-
-        def _kill(query=q):
-            query.killed = True
-
-        entry.kill_cb = _kill
-        payload = self._page_payload(q, 0)
-        self._reply(payload, headers=reply_headers)
+        self._reply(self._results(entry, 0, _UPDATE_TYPES.get(stmt.kind)),
+                    headers=reply_headers)
 
     def do_GET(self) -> None:
         parts = self.path.strip("/").split("/")
@@ -379,11 +319,11 @@ class _Handler(BaseHTTPRequestHandler):
             })
             return
         if len(parts) == 4 and parts[:2] == ["v1", "statement"]:
-            q = self.server.queries.get(parts[2])
-            if q is None:
+            q = self.server.engine.runtime.get(parts[2])
+            if q is None or not q.pageable:
                 self._reply({"error": {"message": "query not found"}}, 404)
                 return
-            payload = self._page_payload(q, int(parts[3]))
+            payload = self._results(q, int(parts[3]))
             if payload is None:
                 self._reply({"error": {"message": "page no longer available"}}, 410)
                 return
@@ -403,10 +343,10 @@ class _Handler(BaseHTTPRequestHandler):
             self.end_headers()
             return
         if len(parts) >= 3 and parts[:2] == ["v1", "statement"]:
-            self.server.queries.pop(parts[2], None)
             entry = self.server.engine.runtime.get(parts[2])
             if entry is not None:
-                entry.fail("Query was canceled")
+                entry.fail("Query was canceled", "USER_CANCELED")
+                entry.drop()
             self.send_response(204)
             self.end_headers()
             return
@@ -419,7 +359,6 @@ class PrestoHttpServer(ThreadingHTTPServer):
     def __init__(self, engine, host: str = "127.0.0.1", port: int = 0):
         super().__init__((host, port), _Handler)
         self.engine = engine
-        self.queries: dict[str, _Query] = {}
 
 
 def serve(engine, host: str = "127.0.0.1", port: int = 0) -> PrestoHttpServer:

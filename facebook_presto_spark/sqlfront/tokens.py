@@ -49,6 +49,15 @@ class Tok:
         return f"{self.kind}:{self.text}"
 
 
+class TokenizeError(ValueError):
+    """Text the tokenizer cannot read; ``offset`` is where it stops."""
+
+    def __init__(self, sql: str, offset: int):
+        super().__init__(
+            f"cannot tokenize SQL at offset {offset}: {sql[offset:offset+30]!r}")
+        self.offset = offset
+
+
 def scan(sql: str):
     """Lazily yield ``(token, start offset)`` pairs, skipping whitespace
     and comments — a reader that needs only the head of a statement
@@ -58,7 +67,7 @@ def scan(sql: str):
     while pos < n:
         m = _TOKEN_RE.match(sql, pos)
         if not m:
-            raise ValueError(f"cannot tokenize SQL at offset {pos}: {sql[pos:pos+30]!r}")
+            raise TokenizeError(sql, pos)
         pos = m.end()
         kind = m.lastgroup
         if kind in ("ws", "line_comment", "block_comment"):

@@ -22,22 +22,25 @@ metadata-only strategy information_schema uses (infoschema.py).  The
 ``system.metadata`` and ``system.jdbc`` schemas below are served the
 same way.  ``queries`` is fed from the
 engine's RuntimeQueryRegistry (every ``engine.sql`` call and every
-protocol-server statement registers here); ``nodes``/``tasks`` are fed
+protocol-server statement registers one ``QueryEntry`` here, which also
+holds a served statement's paging state); ``nodes``/``tasks`` are fed
 from the live SparkContext (application info + status-tracker stage
 state — in local mode that is one coordinator row and the currently
 active stages; on a real cluster the same calls surface every
-executor's stages).  ``kill_query`` fails the registry entry and fires
-its kill callback, which for server-paged queries poisons the paging
-iterator exactly like the reference's administrative kill surfaces on
-the client's next poll.
+executor's stages).  Only the members a statement names are built.
+``kill_query`` fails the registry entry; a server-paged query reports
+the kill on the client's next poll, as the reference's administrative
+kill does.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import re
 import threading
 import uuid
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -76,8 +79,20 @@ TABLE_SCHEMAS = {
 
 
 class QueryEntry:
+    """One statement: its row in ``system.runtime.queries`` and, for a
+    statement served over ``/v1/statement``, its paging state — the
+    reference's protocol ``Query``, tracked by one QueryTracker.
+
+    The page source yields the result's rows already encoded for the
+    wire and is pulled one page at a time; only the most recently
+    produced page is kept (for idempotent retries of the current
+    nextUri), like the reference's consume-once output buffer.  Kill
+    and cancel fail the entry; the server delivers the failure on the
+    client's next poll and then drops the page source."""
+
     __slots__ = ("qid", "query", "user", "source", "state", "created",
-                 "started", "end", "error", "kill_cb")
+                 "started", "end", "error", "error_name", "columns",
+                 "_rows", "_lock", "_page_lock", "_page_no", "_page")
 
     def __init__(self, qid: str, query: str, user: str, source: str | None):
         self.qid = qid
@@ -89,54 +104,85 @@ class QueryEntry:
         self.started = self.created
         self.end: dt.datetime | None = None
         self.error: str | None = None
-        self.kill_cb = None
+        self.error_name: str | None = None
+        self.columns: list[dict] | None = None
+        self._rows: Iterator[list] | None = None   # the page source
+        self._lock = threading.Lock()              # the final state
+        self._page_lock = threading.Lock()         # the buffered page
+        self._page_no = -1
+        self._page: list = []
 
     def finish(self) -> None:
-        if self.state == "RUNNING":
-            self.state = "FINISHED"
-            self.end = dt.datetime.now()
+        self._end("FINISHED")
 
-    def fail(self, message: str) -> None:
-        if self.state == "RUNNING":
-            self.state = "FAILED"
-            self.error = message
-            self.end = dt.datetime.now()
+    def fail(self, message: str, name: str = "GENERIC_USER_ERROR") -> None:
+        """Fail a running entry with the first line of ``message`` and
+        the reference's error name."""
+        self._end("FAILED", message.split("\n")[0][:1000], name)
+
+    def _end(self, state: str, error: str | None = None,
+             error_name: str | None = None) -> None:
+        # the first of finish / fail / kill / cancel wins, whole
+        with self._lock:
+            if self.state == "RUNNING":
+                self.state, self.error, self.error_name = state, error, error_name
+                self.end = dt.datetime.now()
+
+    # -- paging (the reference's Query.getNextResult) -----------------------
+
+    def open(self, columns: list[dict], rows: Iterator[list]) -> None:
+        """Attach the result's columns and its page source."""
+        self.columns, self._rows = columns, rows
+
+    @property
+    def pageable(self) -> bool:
+        return self._rows is not None
+
+    def drop(self) -> None:
+        """Drop the page source and the buffered page: nothing is paged
+        from this entry again."""
+        self._rows, self._page = None, []
+
+    def page(self, page_no: int, size: int):
+        """(rows, has_next) for ``page_no``; None if that page is no
+        longer (or not yet) available.  A short page is the last one,
+        and producing it drops the page source."""
+        with self._page_lock:
+            rows, page = self._rows, self._page
+            while rows is not None and self._page_no < page_no:
+                page = self._page = list(itertools.islice(rows, size))
+                self._page_no += 1
+                if len(page) < size:
+                    self.drop()
+                    rows = None
+            if page_no != self._page_no:
+                return None
+            return page, rows is not None
 
 
 class RuntimeQueryRegistry:
     """The engine-side QueryManager surface system.runtime reads
     (QueryManagers in the reference track BasicQueryInfo per query).
-    Nested ``engine.sql`` calls (EXECUTE → sql, server → sql) reuse the
-    thread's active entry so one statement is one row."""
+    The caller that registers an entry owns its final state; a handler
+    that runs a nested statement registers nothing, so one statement is
+    one row.  At most ``MAX_ENTRIES`` entries are kept, oldest evicted
+    first, and with them their paging state."""
 
     MAX_ENTRIES = 1000
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
         self._entries: dict[str, QueryEntry] = {}
-        self._tl = threading.local()
 
-    # -- statement lifecycle ------------------------------------------------
-
-    def enter(self, query: str, user: str = "presto",
-              source: str | None = None, qid: str | None = None):
-        """Register a statement; returns (entry, owner).  ``owner`` is
-        False for nested calls — only the outermost frame transitions
-        the entry's final state."""
-        current = getattr(self._tl, "current", None)
-        if current is not None:
-            return current, False
-        qid = qid or f"{dt.date.today():%Y%m%d}_{uuid.uuid4().hex[:12]}"
+    def register(self, query: str, user: str = "presto",
+                 source: str | None = None) -> QueryEntry:
+        qid = f"{dt.date.today():%Y%m%d}_{uuid.uuid4().hex[:12]}"
         entry = QueryEntry(qid, query, user, source)
         with self._lock:
             self._entries[qid] = entry
             while len(self._entries) > self.MAX_ENTRIES:
                 self._entries.pop(next(iter(self._entries)))
-        self._tl.current = entry
-        return entry, True
-
-    def exit(self) -> None:
-        self._tl.current = None
+        return entry
 
     def get(self, qid: str) -> QueryEntry | None:
         with self._lock:
@@ -151,10 +197,9 @@ class RuntimeQueryRegistry:
         if entry.state != "RUNNING":
             raise ValueError(f"Target query is not running: {qid}")
         entry.fail(
-            "Query killed. " + (f"Message: {message}" if message else "No message provided.")
+            "Query killed. " + (f"Message: {message}" if message else "No message provided."),
+            "ADMINISTRATIVELY_KILLED",
         )
-        if entry.kill_cb is not None:
-            entry.kill_cb()
 
     # -- view feed ----------------------------------------------------------
 
@@ -176,21 +221,18 @@ class RuntimeQueryRegistry:
 # -- member construction -----------------------------------------------------
 
 def _register(spark: SparkSession, schema: str, schemas: dict[str, str],
-              rows: dict[str, list[tuple]]) -> dict[str, str]:
-    """Register each ``system.<schema>`` member's rows as its global temp
-    view; returns (schema, table) → view name."""
+              tables, builders: dict) -> dict[tuple[str, str], str]:
+    """Build each named ``system.<schema>`` member (``builders`` maps a
+    member to the function giving its rows) and register it as its
+    global temp view; returns (schema, table) → view name."""
     return {
         (schema, table): global_local_view(
-            spark, f"system_{schema}_{table}", table_rows, schemas[table])
-        for table, table_rows in rows.items()
+            spark, f"system_{schema}_{table}", builders[table](), schemas[table])
+        for table in sorted(set(tables) & builders.keys())
     }
 
 
-def refresh(spark: SparkSession, registry: RuntimeQueryRegistry,
-            transactions: list[tuple] | None = None) -> dict[tuple[str, str], str]:
-    """Build system.runtime.{queries,nodes,tasks,transactions} from live
-    state."""
-    sc = spark.sparkContext
+def _task_rows(sc) -> list[tuple]:
     tasks = []
     now = dt.datetime.now()
     tracker = sc.statusTracker()
@@ -204,12 +246,21 @@ def refresh(spark: SparkSession, registry: RuntimeQueryRegistry,
             info.numActiveTasks, info.numCompletedTasks,
             now, now, now, None,
         ))
-    return _register(spark, "runtime", TABLE_SCHEMAS, {
-        "queries": registry.rows(),
-        "nodes": [(sc.applicationId, sc.uiWebUrl, f"spark-{sc.version}",
-                   True, "active")],
-        "tasks": tasks,
-        "transactions": transactions or [],
+    return tasks
+
+
+def refresh(spark: SparkSession, registry: RuntimeQueryRegistry,
+            transactions: list[tuple] | None = None,
+            tables=tuple(TABLE_SCHEMAS)) -> dict[tuple[str, str], str]:
+    """Build the system.runtime ``tables`` (default: all of
+    queries, nodes, tasks, transactions) from live state."""
+    sc = spark.sparkContext
+    return _register(spark, "runtime", TABLE_SCHEMAS, tables, {
+        "queries": registry.rows,
+        "nodes": lambda: [(sc.applicationId, sc.uiWebUrl, f"spark-{sc.version}",
+                           True, "active")],
+        "tasks": lambda: _task_rows(sc),
+        "transactions": lambda: transactions or [],
     })
 
 
@@ -235,8 +286,8 @@ _TABLE_PROPERTIES = [
     ("bucket_count", "0", "integer", "Number of buckets"),
 ]
 
-def refresh_metadata(spark: SparkSession,
-                     catalog_name: str = "spark") -> dict[tuple[str, str], str]:
+def refresh_metadata(spark: SparkSession, catalog_name: str = "spark",
+                     tables=tuple(_METADATA_SCHEMAS)) -> dict[tuple[str, str], str]:
     # the primary Spark catalog plus every registered connector catalog
     # (CatalogSystemTable lists the connector registry; the connector_id
     # is the plugin's factory name)
@@ -246,13 +297,13 @@ def refresh_metadata(spark: SparkSession,
         ("example", "example-http"), ("tpch", "tpch"),
         ("hive", "hive-hadoop2"), ("system", "system"),
     ]
-    return _register(spark, "metadata", _METADATA_SCHEMAS, {
-        "catalogs": sorted([(catalog_name, catalog_name)] + connector_catalogs),
-        "table_properties": [
+    return _register(spark, "metadata", _METADATA_SCHEMAS, tables, {
+        "catalogs": lambda: sorted([(catalog_name, catalog_name)] + connector_catalogs),
+        "table_properties": lambda: [
             (catalog_name, n, d, t, desc) for n, d, t, desc in _TABLE_PROPERTIES
         ],
-        "schema_properties": [],
-        "column_properties": [],
+        "schema_properties": list,
+        "column_properties": list,
     })
 
 
@@ -322,30 +373,40 @@ def _jdbc_type_row(presto_name: str) -> tuple:
 
 
 def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
-                 view_names: set[str] | None = None) -> dict[tuple[str, str], str]:
-    """Build system.jdbc.* from the live catalog — the JDBC
-    DatabaseMetaData surface, fed by the same job-free catalog listing
-    information_schema uses (metadata-only, no data reads)."""
-    from facebook_presto_spark.catalog import (
-        list_columns,
-        list_databases,
-        list_tables,
-    )
-    from facebook_presto_spark.infoschema import presto_type_name
+                 view_names: set[str] | None = None,
+                 tables=tuple(_JDBC_SCHEMAS)) -> dict[tuple[str, str], str]:
+    """Build the system.jdbc ``tables`` (default: all) from the live
+    catalog — the JDBC DatabaseMetaData surface, fed by the same job-free
+    catalog listing information_schema uses (metadata-only, no data
+    reads)."""
+    from facebook_presto_spark.catalog import list_databases, list_tables
 
     views = {v.lower() for v in (view_names or set())}
     current_db = spark.catalog.currentDatabase()
-    databases = sorted(set(list_databases(spark)))
+    relations = (
+        list_tables(spark) if {"tables", "columns"} & set(tables) else [])
+    return _register(spark, "jdbc", _JDBC_SCHEMAS, tables, {
+        "catalogs": lambda: [(catalog_name,)],
+        "schemas": lambda: [
+            (d, catalog_name) for d in sorted(set(list_databases(spark)))],
+        "table_types": lambda: [("TABLE",), ("VIEW",)],
+        "tables": lambda: [
+            (catalog_name, rel.database or current_db, rel.name,
+             "VIEW" if rel.name.lower() in views else "TABLE",
+             None, None, None, None, None, None)
+            for rel in relations
+        ],
+        "columns": lambda: _jdbc_columns(spark, catalog_name, relations, current_db),
+    })
 
-    tables_rows: list[tuple] = []
-    columns_rows: list[tuple] = []
-    for rel in list_tables(spark):
-        db = rel.database or current_db
-        kind = "VIEW" if rel.name.lower() in views else "TABLE"
-        tables_rows.append((
-            catalog_name, db, rel.name, kind,
-            None, None, None, None, None, None,
-        ))
+
+def _jdbc_columns(spark: SparkSession, catalog_name: str, relations,
+                  current_db: str) -> list[tuple]:
+    from facebook_presto_spark.catalog import list_columns
+    from facebook_presto_spark.infoschema import presto_type_name
+
+    rows = []
+    for rel in relations:
         try:
             cols = list_columns(spark, rel)
         except Exception:
@@ -353,20 +414,14 @@ def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
         for pos, c in enumerate(cols, start=1):
             pname = presto_type_name(c.data_type)
             code, size, digits, radix = _jdbc_type_row(pname)
-            columns_rows.append((
-                catalog_name, db, rel.name, c.name,
+            rows.append((
+                catalog_name, rel.database or current_db, rel.name, c.name,
                 code, pname, size, None, digits, radix,
                 1 if c.nullable else 0, None, None, None, None, None,
                 pos, "YES" if c.nullable else "NO",
                 None, None, None, None, "", "",
             ))
-    return _register(spark, "jdbc", _JDBC_SCHEMAS, {
-        "catalogs": [(catalog_name,)],
-        "schemas": [(d, catalog_name) for d in databases],
-        "table_types": [("TABLE",), ("VIEW",)],
-        "tables": tables_rows,
-        "columns": columns_rows,
-    })
+    return rows
 
 
 # -- statement name resolution ----------------------------------------------
@@ -374,16 +429,20 @@ def refresh_jdbc(spark: SparkSession, catalog_name: str = "spark",
 def resolve(engine, refs) -> list[str]:
     """``system.<schema>.<table>`` → the global temp view holding the
     table's rows, for each reference (``statements.Reference``), after
-    building each schema the statement names from live state — once per
+    building the tables the statement names from live state — once per
     statement."""
-    spark, schemas, names = engine.spark, {ref.parts[1] for ref in refs}, {}
-    if "runtime" in schemas:
+    spark, names, named = engine.spark, {}, {}
+    for _system, schema, table in (ref.parts for ref in refs):
+        named.setdefault(schema, set()).add(table)
+    if "runtime" in named:
         names.update(refresh(spark, engine.runtime,
-                             transactions=engine.transactions.rows()))
-    if "jdbc" in schemas:
-        names.update(refresh_jdbc(spark, view_names=set(engine._views)))
-    if "metadata" in schemas:
-        names.update(refresh_metadata(spark))
+                             transactions=engine.transactions.rows(),
+                             tables=named["runtime"]))
+    if "jdbc" in named:
+        names.update(refresh_jdbc(spark, view_names=set(engine._views),
+                                  tables=named["jdbc"]))
+    if "metadata" in named:
+        names.update(refresh_metadata(spark, tables=named["metadata"]))
     out = []
     for _system, schema, table in (ref.parts for ref in refs):
         if (schema, table) not in names:

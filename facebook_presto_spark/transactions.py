@@ -487,13 +487,13 @@ def _snapshot_hive_table(engine, schema: str, table: str,
 
     cat = get_catalog(spark)
     qualified = cat.qualified(schema, table)
-    create_sql = engine.sql(
+    create_sql = engine._sql_inner(
         f"SHOW CREATE TABLE hive.{schema}.{table}").collect()[0][0]
     restore = _retain(spark, qualified, info)
 
     def undo():
         get_catalog(spark).drop(schema, table, if_exists=True)
-        engine.sql(create_sql).collect()
+        engine._sql_inner(create_sql).collect()
         restore()
 
     info.undo.append(undo)

@@ -31,6 +31,22 @@ def test_statement_splitter_skips_comments():
     ]
 
 
+def test_statement_splitter_ends_unreadable_text():
+    """Text the tokenizer cannot read ends at the next ``;`` (the engine
+    reports its error); only an open literal or comment waits."""
+    assert cli.split_statements("SELECT é;\nSELECT 1;\n") == (
+        ["SELECT é", "SELECT 1"], "")
+    assert cli.split_statements("SELECT 'abc\n") == ([], "SELECT 'abc\n")
+    assert cli.split_statements('SELECT "ab\n') == ([], 'SELECT "ab\n')
+    # a literal after the unreadable character still hides its ';'
+    assert cli.split_statements("SELECT é, 'a;b';") == (["SELECT é, 'a;b'"], "")
+    # a file: every later statement stays its own
+    lines = ["SELECT é;\n", "SELECT 2;\n", "SELECT 3\n"]
+    assert list(cli.read_statements(iter(lines))) == [
+        "SELECT é", "SELECT 2", "SELECT 3",
+    ]
+
+
 def test_aligned_printer_format():
     out = io.StringIO()
     n = cli.print_aligned(

@@ -92,3 +92,21 @@ def _no_side_schemas_in_listings(eng, spark):
 ], ids=lambda case: case.__name__.strip("_"))
 def test_metadata_tables_are_local_relations(eng, spark, case):
     case(eng, spark)
+
+
+def test_system_reference_builds_only_named_tables(eng, spark):
+    """A ``system.<schema>.<table>`` reference builds that table only,
+    not every member of its schema (as information_schema does)."""
+    def registered():
+        return {t.name for t in spark.catalog.listTables("global_temp")
+                if t.name.startswith("system_")}
+
+    for name in registered():
+        spark.catalog.dropGlobalTempView(name)
+    eng.sql("SELECT * FROM system.runtime.nodes").collect()
+    assert registered() == {"system_runtime_nodes"}
+    eng.sql("SELECT * FROM system.jdbc.catalogs").collect()
+    assert registered() == {"system_runtime_nodes", "system_jdbc_catalogs"}
+    eng.sql("SELECT * FROM system.metadata.catalogs").collect()
+    assert registered() == {"system_runtime_nodes", "system_jdbc_catalogs",
+                            "system_metadata_catalogs"}

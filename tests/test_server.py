@@ -119,7 +119,7 @@ def test_large_result_streams_pages(server):
     retains only the current page, and draining still sees every row."""
     res = _post(server, "SELECT l_orderkey, l_partkey FROM lineitem")
     qid = res["id"]
-    q = server.queries[qid]
+    q = server.engine.runtime.get(qid)
     # after the POST only page 0 is buffered
     assert q._page_no == 0 and len(q._page) <= 1000
     rows = _drain(server, res)
@@ -171,10 +171,10 @@ def test_driver_local_result_pages(server, spark_jobs):
         res = _post(server, f"SELECT * FROM (VALUES {values}) AS t(i, s)")
         qid = res["id"]
         assert len(res["data"]) == 1000 and "nextUri" in res
-        assert qid in server.queries
+        assert server.engine.runtime.get(qid).pageable
         rows = _drain(server, res)
     assert rows == [[i, f"r{i}"] for i in range(2500)]
-    assert qid not in server.queries
+    assert not server.engine.runtime.get(qid).pageable
     assert jobs.count == 0
 
 
@@ -210,12 +210,12 @@ def test_finished_query_is_evicted(server):
     paging state without a DELETE."""
     res = _post(server, "SELECT o_orderkey FROM orders")
     qid = res["id"]
-    assert qid in server.queries  # multi-page: alive after page 0
+    assert server.engine.runtime.get(qid).pageable  # multi-page: alive after page 0
     _drain(server, res)
-    assert qid not in server.queries
+    assert not server.engine.runtime.get(qid).pageable
     # single-page results are evicted on the POST response itself
     res = _post(server, "SELECT 1 AS x")
-    assert "nextUri" not in res and res["id"] not in server.queries
+    assert "nextUri" not in res and not server.engine.runtime.get(res["id"]).pageable
 
 
 def test_session_property_scoped_to_statement(server):
@@ -574,3 +574,152 @@ def test_concurrent_sessions_soak(server):
         if r.state == "RUNNING" and "system.runtime.queries" not in r.query
     ]
     assert leftovers == []
+
+
+def _delete(url: str) -> None:
+    with urllib.request.urlopen(urllib.request.Request(url, method="DELETE")) as r:
+        assert r.status == 204
+
+
+@pytest.mark.parametrize("how", ["kill", "cancel"])
+def test_kill_or_cancel_while_planning(server, monkeypatch, how):
+    """A statement killed (kill_query) or canceled (DELETE) while
+    engine.sql is still planning it answers FAILED with no data: the POST
+    reads the state of the statement's one registry entry."""
+    eng = server.engine
+    sql = f"SELECT o_orderkey FROM orders -- {how} while planning"
+    plan = eng._sql_inner
+
+    def planned_then_ended(text):
+        df = plan(text)
+        qid = next(r[0] for r in eng.runtime.rows()
+                   if r[4] == sql and r[1] == "RUNNING")
+        if how == "kill":
+            eng.runtime.kill_query(qid, "while planning")
+        else:
+            _delete(f"http://127.0.0.1:{server.server_port}/v1/statement/{qid}/0")
+        return df
+
+    monkeypatch.setattr(eng, "_sql_inner", planned_then_ended)
+    res = _post(server, sql)
+    monkeypatch.undo()
+    assert res["stats"]["state"] == "FAILED"
+    assert "data" not in res and "nextUri" not in res
+    name = {"kill": "ADMINISTRATIVELY_KILLED", "cancel": "USER_CANCELED"}[how]
+    assert res["error"]["errorName"] == name
+    message = {"kill": "Query killed. Message: while planning",
+               "cancel": "Query was canceled"}[how]
+    assert res["error"]["message"] == message
+    states = {r.query_id: r.state for r in eng.sql(
+        "SELECT query_id, state FROM system.runtime.queries").collect()}
+    assert states[res["id"]] == "FAILED"
+    with urllib.request.urlopen(res["infoUri"]) as r:
+        assert json.load(r)["errorMessage"] == message
+
+
+def test_cancel_shows_in_runtime_queries(server):
+    res = _post(server, "SELECT o_orderkey FROM orders")
+    assert "nextUri" in res
+    _delete(res["nextUri"])
+    rows = server.engine.sql(
+        "SELECT query_id, state FROM system.runtime.queries").collect()
+    assert [r.state for r in rows if r.query_id == res["id"]] == ["FAILED"]
+    assert server.engine.runtime.get(res["id"]).error == "Query was canceled"
+
+
+def test_registry_bounds_paging_state(server, monkeypatch):
+    """Abandoned paged queries are bounded by the registry's
+    MAX_ENTRIES: the evicted entry takes its paging state with it."""
+    runtime = server.engine.runtime
+    monkeypatch.setattr(runtime, "MAX_ENTRIES", 2)
+    posted = [_post(server, "SELECT o_orderkey FROM orders") for _ in range(3)]
+    assert all("nextUri" in res for res in posted)
+    pageable = [e for e in list(runtime._entries.values()) if e.pageable]
+    assert len(pageable) <= 2
+    with pytest.raises(urllib.error.HTTPError) as err:
+        urllib.request.urlopen(posted[0]["nextUri"])
+    assert err.value.code == 404
+    assert len(_drain(server, posted[2])) == 1500
+
+
+def test_nested_statements_register_one_row(server):
+    """A handler that runs a nested statement (EXECUTE, EXPLAIN ANALYZE,
+    EXPLAIN VALIDATE, SHOW STATS over a query, a connector CTAS) adds no
+    second row to system.runtime.queries."""
+    eng = server.engine
+    eng.sql("PREPARE one_row FROM SELECT n_name FROM nation WHERE n_nationkey = ?")
+    for sql in ("EXECUTE one_row USING 1",
+                "EXPLAIN ANALYZE SELECT count(*) FROM nation",
+                "EXPLAIN (TYPE VALIDATE) SELECT n_name FROM nation",
+                "SHOW STATS FOR (SELECT n_nationkey FROM nation)",
+                "CREATE TABLE memory.default.one_row AS SELECT 1 AS x"):
+        before = len(eng.runtime.rows())
+        eng.sql(sql).collect()
+        after = eng.runtime.rows()
+        assert len(after) == before + 1 and after[-1][4] == sql
+    eng.sql("DROP TABLE memory.default.one_row")
+
+
+@pytest.mark.parametrize("catalog", ["hive", "memory"])
+def test_write_reports_update_type_and_count(server, catalog):
+    """A write answers Presto's updateType, and updateCount from its
+    single bigint ``rows`` cell; a query keeps both null."""
+    t = f"{catalog}.proto_w.t"
+    _post(server, f"CREATE SCHEMA IF NOT EXISTS {catalog}.proto_w")
+    try:
+        statements = [
+            (f"CREATE TABLE {t} AS SELECT n_nationkey, n_regionkey FROM nation",
+             "CREATE TABLE", 25),
+            (f"INSERT INTO {t} SELECT r_regionkey, r_regionkey FROM region",
+             "INSERT", 5),
+        ]
+        if catalog == "hive":  # the memory connector has no DELETE
+            statements.append((f"DELETE FROM {t}", "DELETE", 30))
+        for sql, update_type, count in statements:
+            res = _post(server, sql)
+            assert res["error"] is None, res["error"]
+            assert (res["updateType"], res["updateCount"]) == (update_type, count)
+            assert res["data"] == [[count]]
+        res = _post(server, f"SELECT count(*) AS n FROM {t}")
+        assert (res["updateType"], res["updateCount"]) == (None, None)
+    finally:
+        _post(server, f"DROP TABLE IF EXISTS {t}")
+        _post(server, f"DROP SCHEMA IF EXISTS {catalog}.proto_w")
+
+
+def test_query_entry_ends_once_under_contention():
+    """finish / fail / kill / cancel race on one entry from many threads:
+    the first wins whole, so a FAILED entry's message and error name come
+    from the same caller."""
+    import sys
+    import threading
+
+    from facebook_presto_spark.systemtables import QueryEntry
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(200):
+            entry = QueryEntry("q", "SELECT 1", "test", None)
+            start = threading.Barrier(8)
+
+            def end(i, entry=entry, start=start):
+                start.wait()
+                if i == 0:
+                    entry.finish()
+                else:
+                    entry.fail(f"message {i}", f"NAME_{i}")
+
+            threads = [threading.Thread(target=end, args=(i,)) for i in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=10)
+            assert not any(t.is_alive() for t in threads)
+            if entry.state == "FINISHED":
+                assert (entry.error, entry.error_name) == (None, None)
+            else:
+                i = int(entry.error.split()[1])
+                assert entry.state == "FAILED" and entry.error_name == f"NAME_{i}"
+    finally:
+        sys.setswitchinterval(switch)

@@ -23,9 +23,11 @@ contract as Console.java's error handling.
 Scale note: rows come from ``server.result_rows``, the protocol
 server's rule.  A plan whose rows already sit in the driver (VALUES,
 SHOW/DESCRIBE commands, driver-built metadata results) is collected
-without a Spark job; every other plan streams through
-``toLocalIterator``, so a large SELECT never materializes on the
-driver.  Interactive mode pages the first ``--max-rows`` (default 1000)
+without a Spark job; a result with a type Arrow cannot carry streams
+through ``toLocalIterator``; every other plan is read as Arrow record
+batches, one Spark job per wave of ``defaultParallelism`` partitions, so
+a large SELECT never holds more than one wave on the driver.
+Interactive mode pages the first ``--max-rows`` (default 1000)
 rows like the reference's pager.
 """
 

@@ -346,7 +346,8 @@ class PrestoSparkEngine:
         Every statement is one entry in ``self.runtime`` (the QueryManager
         surface behind ``system.runtime.queries`` / ``kill_query``).
         Without ``entry`` the call registers the statement and finishes or
-        fails it; the protocol server passes the entry it registered and
+        fails it, and raises the entry's message if ``kill_query`` ended
+        it while it planned; the protocol server passes the entry it registered and
         keeps it running while the result pages out.  Handlers that run a
         nested statement call ``_sql_inner``, which registers nothing.
         """
@@ -359,6 +360,9 @@ class PrestoSparkEngine:
             entry.fail(str(e))
             raise
         entry.finish()
+        # kill_query may have ended it while it planned
+        if entry.state == "FAILED":
+            raise RuntimeError(entry.error)
         return df
 
     def _sql_inner(self, presto_sql: str) -> DataFrame:

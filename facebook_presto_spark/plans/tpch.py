@@ -67,7 +67,11 @@ _SPLIT_MIN_BYTES = 2 * 1024 * 1024
 # scheduling jitter (§2.2: fewer, larger map tasks)
 _SPLIT_TARGET_BYTES = 1536 * 1024
 _SPLIT_MAX_FILES = 16
-_SPLIT_DIR = "/root/repo/.scratch/split"
+# under the checkout this module is imported from, so two checkouts
+# never share a staging cache
+_SPLIT_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch", "split")
 _split_cache: dict[tuple[str, int], str] = {}
 # one stager at a time in this process: the cache check, the staging
 # write, its marker and the rename into place happen under this lock;

@@ -27,16 +27,30 @@ clients that stop polling.  A write (CREATE TABLE AS, INSERT, DELETE)
 answers ``updateType`` and takes ``updateCount`` from its single
 ``rows`` cell, as the reference's ``Query`` does.
 
-How rows leave Spark depends on the physical plan (``result_rows``): a
-plan whose root already holds its rows in the driver (a
-``LocalTableScanExec`` — VALUES, small driver-built metadata results —
-or a ``CommandResultExec`` — SHOW TABLES, DESCRIBE and other commands)
-is answered by ``collect()``, which launches no Spark job, the way the
-reference answers metadata statements on the coordinator.  Every other
-plan streams through ``toLocalIterator``, so the driver holds at most
-one partition plus one page.  Non-finite doubles go on the wire as the
-strings ``"NaN"``, ``"Infinity"`` and ``"-Infinity"``, as the reference
-writes them, so every response is strict JSON.
+How rows leave Spark depends on the physical plan and the schema
+(``result_rows``), in three branches:
+
+- A plan whose root already holds its rows in the driver (a
+  ``LocalTableScanExec`` — VALUES, small driver-built metadata results —
+  or a ``CommandResultExec`` — SHOW TABLES, DESCRIBE and other commands)
+  is answered by ``collect()``, which launches no Spark job, the way the
+  reference answers metadata statements on the coordinator.
+- A result with no columns, or with a type Arrow cannot carry as the
+  values a ``Row`` holds (interval year to month, calendar intervals, a
+  row with duplicate field names, a variant), streams
+  through ``toLocalIterator``: one job per partition, pickled rows.
+- Every other plan is read as Arrow record batches in partition order:
+  one Spark job per wave of ``defaultParallelism`` partitions, run only
+  when paging reaches the wave, and each batch is turned into Python
+  values column by column.  The driver holds at most one wave plus one
+  page.  (``DataFrame.toArrow`` sends batches in the order partitions
+  finish and their order last, so no page could be served before the
+  whole result sat in the driver.)
+
+Both sources yield the same Python values, and ``_json_cell`` encodes
+them for the wire.  Non-finite doubles go on the wire as the strings
+``"NaN"``, ``"Infinity"`` and ``"-Infinity"``, as the reference writes
+them, so every response is strict JSON.
 
 Usage::
 
@@ -72,17 +86,103 @@ _DRIVER_LOCAL_ROOTS = frozenset({"LocalTableScanExec", "CommandResultExec"})
 
 
 def result_rows(df):
-    """Iterator over the rows of ``df`` for a client.
-
-    Driver-local plans (see ``_DRIVER_LOCAL_ROOTS``) are collected: the
-    rows are already in the driver, and ``collect()`` runs no job where
-    ``toLocalIterator`` runs one per partition.  Every other plan streams
-    partition by partition through ``toLocalIterator``.
-    """
+    """Iterator over the rows of ``df`` for a client, as tuples of the
+    Python values a ``Row`` holds (see the module docstring for the three
+    branches)."""
     root = df._jdf.queryExecution().executedPlan()
     if root.getClass().getSimpleName() in _DRIVER_LOCAL_ROOTS:
         return iter(df.collect())
-    return df.toLocalIterator()
+    schema = _arrow_schema(df)
+    if schema is None:
+        return df.toLocalIterator()
+    return _arrow_rows(df, schema)
+
+
+def _arrow_schema(df):
+    """The Arrow schema ``df``'s record batches are decoded with, or None
+    if the result has no columns or a type the batches cannot carry as
+    the values a ``Row`` holds."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not df.schema.fields or not _row_values(df.schema):
+        return None
+    try:
+        return to_arrow_schema(
+            df.schema, error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes())
+    except PySparkException:  # interval year to month, calendar interval
+        return None
+
+
+def _row_values(t) -> bool:
+    """Whether Arrow carries ``t`` as the values a ``Row`` holds; a
+    variant's Row value is its own class, whose text is its JSON."""
+    from pyspark.sql import types as T
+
+    if isinstance(t, T.VariantType):
+        return False
+    if isinstance(t, T.ArrayType):
+        return _row_values(t.elementType)
+    if isinstance(t, T.MapType):
+        return _row_values(t.keyType) and _row_values(t.valueType)
+    if isinstance(t, T.StructType):
+        return all(_row_values(f.dataType) for f in t.fields)
+    return True
+
+
+def _arrow_rows(df, schema):
+    """The rows of ``df`` from its Arrow record batches, in partition
+    order: one Spark job per wave of ``defaultParallelism`` partitions,
+    each run when paging first reaches its wave (PySpark's own
+    ``SparkContext.runJob`` call, over ``Dataset.toArrowBatchRdd``)."""
+    import pyarrow as pa
+    from pyspark.errors.exceptions.captured import unwrap_spark_exception
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.util import _load_from_socket
+
+    sc = df.sparkSession.sparkContext
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    # a failed task answers with Spark's own error, not py4j's wrapper
+    with unwrap_spark_exception():
+        jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+    n, width = jrdd.getNumPartitions(), sc.defaultParallelism
+    for lo in range(0, n, width):
+        with unwrap_spark_exception():
+            sock = sc._jvm.PythonRDD.runJob(
+                sc._jsc.sc(), jrdd, list(range(lo, min(lo + width, n))))
+        for message in _load_from_socket(sock, NoOpSerializer()):
+            batch = pa.ipc.read_record_batch(pa.py_buffer(message), schema)
+            yield from zip(*(_values(c, tz) for c in batch.columns))
+
+
+def _values(col, tz: str) -> list:
+    """The Python values of Arrow column ``col``, as a ``Row`` holds
+    them: a timestamp is naive wall-clock time in the session zone
+    ``tz``, a row a positional tuple, a map a dict, at any depth."""
+    import pyarrow as pa
+
+    t = col.type
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        return [None if v is None else v.replace(tzinfo=None)
+                for v in col.cast(pa.timestamp(t.unit, tz)).to_pylist()]
+    nested = (pa.types.is_struct(t) or pa.types.is_map(t)
+              or pa.types.is_list(t) or pa.types.is_large_list(t))
+    if not nested:
+        return col.to_pylist()
+    valid = col.is_valid().to_pylist()
+    if pa.types.is_struct(t):
+        fields = [_values(f, tz) for f in col.flatten()]
+        rows = zip(*fields) if fields else [()] * len(valid)
+        return [v if ok else None for v, ok in zip(rows, valid)]
+    # list or map: offsets index the child values of the whole column
+    at = col.offsets.to_pylist()
+    if pa.types.is_map(t):
+        keys, items = _values(col.keys, tz), _values(col.items, tz)
+        return [dict(zip(keys[a:b], items[a:b])) if ok else None
+                for a, b, ok in zip(at, at[1:], valid)]
+    values = _values(col.values, tz)
+    return [values[a:b] if ok else None for a, b, ok in zip(at, at[1:], valid)]
 
 
 def _json_cell(v):

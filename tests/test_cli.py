@@ -125,3 +125,26 @@ def test_batch_show_catalogs(spark, capsys):
     ])
     assert rc == 0
     assert capsys.readouterr().out == "Catalog\nmemory\n"
+
+
+def test_batch_kill_while_planning(spark, sf_dir, capsys, monkeypatch):
+    """A statement kill_query ends while it plans prints ``Query failed``
+    with the kill message, and none of its rows."""
+    from facebook_presto_spark.engine import PrestoSparkEngine
+
+    sql = "SELECT r_name FROM region"
+    plan = PrestoSparkEngine._sql_inner
+
+    def planned_then_killed(self, text):
+        df = plan(self, text)
+        qid = next(r[0] for r in self.runtime.rows()
+                   if r[4] == sql and r[1] == "RUNNING")
+        self.runtime.kill_query(qid, "from the CLI test")
+        return df
+
+    monkeypatch.setattr(PrestoSparkEngine, "_sql_inner", planned_then_killed)
+    rc = cli.main(["--sf-dir", sf_dir, "-e", sql])
+    assert rc == 1
+    out = capsys.readouterr()
+    assert out.out == ""
+    assert out.err == "Query failed: Query killed. Message: from the CLI test\n"

@@ -723,3 +723,203 @@ def test_query_entry_ends_once_under_contention():
                 assert entry.state == "FAILED" and entry.error_name == f"NAME_{i}"
     finally:
         sys.setswitchinterval(switch)
+
+
+def test_kill_while_planning_direct_path(server, monkeypatch):
+    """``engine.sql`` without a server entry (the CLI, in-process callers)
+    raises the entry's own message when kill_query ends the statement
+    while it plans, instead of returning its rows."""
+    eng = server.engine
+    sql = "SELECT n_name FROM nation -- killed on the direct path"
+    plan = eng._sql_inner
+
+    def planned_then_killed(text):
+        df = plan(text)
+        qid = next(r[0] for r in eng.runtime.rows()
+                   if r[4] == sql and r[1] == "RUNNING")
+        eng.runtime.kill_query(qid, "while planning")
+        return df
+
+    monkeypatch.setattr(eng, "_sql_inner", planned_then_killed)
+    with pytest.raises(Exception, match="^Query killed. Message: while planning$"):
+        eng.sql(sql)
+    monkeypatch.undo()
+    states = [r[1] for r in eng.runtime.rows() if r[4] == sql]
+    assert states == ["FAILED"]
+
+
+# -- how rows leave Spark (server.result_rows) --------------------------------
+
+def _arrow_spy(monkeypatch) -> list:
+    """Record each result the Arrow batch reader serves."""
+    from facebook_presto_spark import server as server_mod
+
+    served, read = [], server_mod._arrow_rows
+
+    def spy(df, schema):
+        served.append(df.schema.simpleString())
+        return read(df, schema)
+
+    monkeypatch.setattr(server_mod, "_arrow_rows", spy)
+    return served
+
+
+def _row_path(monkeypatch) -> None:
+    """Force every result through toLocalIterator (pickled Rows)."""
+    from facebook_presto_spark import server as server_mod
+
+    monkeypatch.setattr(server_mod, "_arrow_schema", lambda df: None)
+
+
+# every type the engine emits, each NULL on the n_nationkey = 0 row
+_WIRE_TYPES = {
+    "bigint": "CAST(n_nationkey AS BIGINT)",
+    "integer": "CAST(n_nationkey AS INTEGER)",
+    "smallint": "CAST(n_nationkey AS SMALLINT)",
+    "tinyint": "CAST(n_nationkey AS TINYINT)",
+    "boolean": "n_nationkey > 1",
+    "varchar": "n_name",
+    "varbinary": "to_utf8(n_name)",
+    "real": "CAST(n_nationkey / 3.0 AS REAL)",
+    "double": "n_nationkey / 3.0e0",
+    "nan": "nan()",
+    "inf": "infinity()",
+    "ninf": "-infinity()",
+    "real_nan": "CAST(nan() AS REAL)",
+    "decimal": "CAST(n_nationkey AS DECIMAL(12, 3)) / 7",
+    "date": "DATE '2020-01-02'",
+    "timestamp": "TIMESTAMP '2020-01-02 03:04:05.678'",
+    "time": "TIME '01:02:03.456'",
+    "interval": "INTERVAL '1 02:03:04.5' DAY TO SECOND",
+    "array": "ARRAY[n_nationkey, NULL, 3]",
+    "map": "MAP(ARRAY['b', 'a'], ARRAY[n_nationkey, NULL])",
+    "row": "CAST(ROW(n_nationkey, n_name) AS ROW(k BIGINT, name VARCHAR))",
+    "array_row": "ARRAY[ROW(n_nationkey, 'a'), NULL]",
+    "map_array": "MAP(ARRAY['k', 'z'], "
+                 "ARRAY[ARRAY[CAST(n_nationkey AS BIGINT), NULL], NULL])",
+}
+
+
+def test_arrow_reader_matches_row_path_on_the_wire(server, monkeypatch):
+    """The Arrow batch reader and the pickled-Row path put the same
+    ``data`` on the wire for every type the engine emits, NULLs included
+    (a map's keys compare as a JSON object, order aside)."""
+    sql = "SELECT n_nationkey, " + ", ".join(
+        f"IF(n_nationkey = 0, NULL, {e}) AS {name}"
+        for name, e in _WIRE_TYPES.items()
+    ) + " FROM nation WHERE n_nationkey < 3 ORDER BY n_nationkey"
+    served = _arrow_spy(monkeypatch)
+    arrow = _post(server, sql)
+    assert arrow["error"] is None, arrow["error"]
+    assert len(served) == 1
+    _row_path(monkeypatch)
+    rows = _post(server, sql)
+    assert len(served) == 1
+    assert arrow["columns"] == rows["columns"]
+    assert arrow["data"] == rows["data"] and len(arrow["data"]) == 3
+    by_name = dict(zip((c["name"] for c in arrow["columns"]), arrow["data"][1]))
+    assert by_name["timestamp"] == "2020-01-02 03:04:05.678"
+    assert by_name["row"] == [1, "NATION_1"]
+    assert by_name["map_array"] == {"k": [1, None], "z": None}
+    assert set(arrow["data"][0][1:]) == {None}
+
+
+@pytest.mark.parametrize("expr, data", [
+    # duplicate field names: a Row keeps both fields, Arrow would not
+    ("named_struct('a', n_nationkey, 'a', 2)", [[[1, 2]]]),
+    # a variant's Row value prints as its JSON text
+    ("parse_json('{\"a\":1}')", [['{"a":1}']]),
+    # no Arrow type: the Row path answers (it cannot yet convert the value)
+    ("INTERVAL '1-2' YEAR TO MONTH", None),
+])
+def test_schema_arrow_rejects_takes_row_path(server, monkeypatch, expr, data):
+    """A result type Arrow cannot carry streams through toLocalIterator
+    and answers as it did before the Arrow reader."""
+    from facebook_presto_spark import server as server_mod
+
+    sql = f"SELECT {expr} AS c FROM nation WHERE n_nationkey = 1"
+    assert server_mod._arrow_schema(server.engine.sql(sql)) is None
+    served = _arrow_spy(monkeypatch)
+    res = _post(server, sql)
+    assert served == []
+    if data is not None:
+        assert res["error"] is None and res["data"] == data
+    else:
+        assert "YearMonthIntervalType.fromInternal" in res["error"]["message"]
+
+
+@pytest.fixture
+def wave_table(server, tmp_path):
+    """``wave_t``: 37 parquet files of 100 rows, read as one partition
+    per file (2.3 waves of the test session's 16 cores)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spark = server.engine.spark
+    for i in range(37):
+        keys = list(range(i * 100, i * 100 + 100))
+        pq.write_table(pa.table({"k": keys, "s": [f"s{k}" for k in keys]}),
+                       str(tmp_path / f"part-{i:02d}.parquet"))
+    conf = ["spark.sql.files.maxPartitionBytes", "spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled"]
+    before = {k: spark.conf.get(k) for k in conf}
+    # a file's open cost alone fills a partition: one partition per file
+    spark.conf.set(conf[0], spark.conf.get("spark.sql.files.openCostInBytes"))
+    spark.read.parquet(str(tmp_path)).createOrReplaceTempView("wave_t")
+    try:
+        yield spark
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+        spark.catalog.dropTempView("wave_t")
+
+
+def test_arrow_reader_waves_keep_partition_order(server, wave_table, spark_jobs,
+                                                 monkeypatch):
+    """A result of more partitions than cores is read in partition order,
+    one Spark job per wave of ``defaultParallelism`` partitions, and the
+    POST runs only the first wave's job."""
+    import math
+
+    sql = "SELECT k, s FROM wave_t"
+    n = server.engine.sql(sql).rdd.getNumPartitions()
+    width = wave_table.sparkContext.defaultParallelism
+    assert n == 37 and n > width
+    served = _arrow_spy(monkeypatch)
+    with spark_jobs() as post:
+        res = _post(server, sql)
+    with spark_jobs() as rest:
+        arrow = _drain(server, res)
+    assert len(served) == 1
+    assert post.count == 1
+    assert post.count + rest.count == math.ceil(n / width)
+    _row_path(monkeypatch)
+    with spark_jobs() as row_jobs:
+        rows = _drain(server, _post(server, sql))
+    assert row_jobs.count == n  # toLocalIterator: one job per partition
+    assert arrow == rows and len(arrow) == 3700
+
+
+def test_arrow_reader_keeps_multi_partition_order_by(server, wave_table,
+                                                      monkeypatch):
+    """A sort spread over more range partitions than cores comes back in
+    the sort's order, as the Row path returns it."""
+    wave_table.conf.set("spark.sql.shuffle.partitions", "37")
+    wave_table.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    sql = "SELECT k, s FROM wave_t ORDER BY s DESC, k"
+    assert server.engine.sql(sql).rdd.getNumPartitions() > 16
+    served = _arrow_spy(monkeypatch)
+    arrow = _drain(server, _post(server, sql))
+    assert len(served) == 1
+    _row_path(monkeypatch)
+    rows = _drain(server, _post(server, sql))
+    assert arrow == rows
+    assert arrow == sorted(arrow, key=lambda r: (r[1], -r[0]), reverse=True)
+
+
+def test_runtime_failure_answers_with_spark_message(server):
+    """A task failure while the result is read answers FAILED with
+    Spark's own error message, not the py4j call that carried it."""
+    res = _post(server, "SELECT raise_error('boom') AS c FROM nation")
+    assert res["stats"]["state"] == "FAILED"
+    assert res["error"]["message"].startswith("[USER_RAISED_EXCEPTION] boom")

@@ -50,3 +50,12 @@ def test_concurrent_callers_stage_one_dir(spark, tmp_path, monkeypatch):
         marker = json.load(f)
     assert marker["src"] == src and marker["files"] == 2
     assert spark.read.parquet(staged[0]).count() == 2000
+
+
+def test_split_dir_lies_under_the_importing_checkout():
+    """The staging cache belongs to the checkout the module is imported
+    from, so runs from two checkouts never share it."""
+    import facebook_presto_spark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(facebook_presto_spark.__file__)))
+    assert tpch._SPLIT_DIR == os.path.join(root, ".scratch", "split")

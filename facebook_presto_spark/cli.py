@@ -25,8 +25,9 @@ server's rule.  A plan whose rows already sit in the driver (VALUES,
 SHOW/DESCRIBE commands, driver-built metadata results) is collected
 without a Spark job; a result with a type Arrow cannot carry streams
 through ``toLocalIterator``; every other plan is read as Arrow record
-batches, one Spark job per wave of ``defaultParallelism`` partitions, so
-a large SELECT never holds more than one wave on the driver.
+batches, one Spark job per wave of partitions, so a large SELECT holds
+at most one wave on the driver: up to ``defaultParallelism`` partitions,
+fewer once their bytes would pass half of ``spark.driver.maxResultSize``.
 Interactive mode pages the first ``--max-rows`` (default 1000)
 rows like the reference's pager.
 """

@@ -40,15 +40,21 @@ How rows leave Spark depends on the physical plan and the schema
   row with duplicate field names, a variant), streams
   through ``toLocalIterator``: one job per partition, pickled rows.
 - Every other plan is read as Arrow record batches in partition order:
-  one Spark job per wave of ``defaultParallelism`` partitions, run only
-  when paging reaches the wave, and each batch is turned into Python
-  values column by column.  The driver holds at most one wave plus one
+  one Spark job per wave of partitions, run only when paging reaches
+  the wave, and each batch is turned into Python values column by
+  column.  A job brings its whole wave to the driver, so a wave is at
+  most ``defaultParallelism`` partitions and, once the bytes per
+  partition are known, no more than fit half of
+  ``spark.driver.maxResultSize``; a wave that cap aborts is read again
+  one partition per job.  The driver holds at most one wave plus one
   page.  (``DataFrame.toArrow`` sends batches in the order partitions
   finish and their order last, so no page could be served before the
-  whole result sat in the driver.)
+  whole result sat in the driver, under that cap.)
 
-Both sources yield the same Python values, and ``_json_cell`` encodes
-them for the wire.  Non-finite doubles go on the wire as the strings
+Both sources yield the same Python values, up to a row being a tuple
+or a ``Row`` and varbinary ``bytes`` or ``bytearray``, and
+``_json_cell`` encodes them, map keys included, to the same wire
+form.  Non-finite doubles go on the wire as the strings
 ``"NaN"``, ``"Infinity"`` and ``"-Infinity"``, as the reference writes
 them, so every response is strict JSON.
 
@@ -63,6 +69,7 @@ Usage::
 from __future__ import annotations
 
 import base64
+import contextlib
 import datetime as dt
 import decimal
 import json
@@ -133,27 +140,68 @@ def _row_values(t) -> bool:
 
 def _arrow_rows(df, schema):
     """The rows of ``df`` from its Arrow record batches, in partition
-    order: one Spark job per wave of ``defaultParallelism`` partitions,
-    each run when paging first reaches its wave (PySpark's own
-    ``SparkContext.runJob`` call, over ``Dataset.toArrowBatchRdd``)."""
+    order, one Spark job per wave of partitions, each run when paging
+    first reaches its wave (PySpark's own ``SparkContext.runJob`` call,
+    over ``Dataset.toArrowBatchRdd``).
+
+    A wave is at most ``defaultParallelism`` partitions, and after the
+    first, as many as fit half of ``spark.driver.maxResultSize`` at the
+    bytes per partition read so far, since one job brings its whole
+    wave to the driver.  A wave the cap aborts is read again one
+    partition per job; a single partition over the cap fails, as it
+    does under ``toLocalIterator``."""
     import pyarrow as pa
-    from pyspark.errors.exceptions.captured import unwrap_spark_exception
     from pyspark.serializers import NoOpSerializer
     from pyspark.util import _load_from_socket
 
     sc = df.sparkSession.sparkContext
     tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    # a failed task answers with Spark's own error, not py4j's wrapper
-    with unwrap_spark_exception():
+    with _spark_errors():  # an adaptive plan runs its shuffle stages here
         jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
-    n, width = jrdd.getNumPartitions(), sc.defaultParallelism
-    for lo in range(0, n, width):
-        with unwrap_spark_exception():
-            sock = sc._jvm.PythonRDD.runJob(
-                sc._jsc.sc(), jrdd, list(range(lo, min(lo + width, n))))
+    budget = sc._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g") // 2  # 0: no cap
+    n = jrdd.getNumPartitions()
+    lo, width = 0, sc.defaultParallelism
+    while lo < n:
+        wave = list(range(lo, min(lo + width, n)))
+        try:
+            with _spark_errors():
+                sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, wave)
+        except Exception as e:
+            if len(wave) == 1 or "spark.driver.maxResultSize" not in str(e):
+                raise
+            width = 1
+            continue
+        size = 0
         for message in _load_from_socket(sock, NoOpSerializer()):
+            size += len(message)
             batch = pa.ipc.read_record_batch(pa.py_buffer(message), schema)
             yield from zip(*(_values(c, tz) for c in batch.columns))
+        lo += len(wave)
+        if budget:
+            width = max(1, min(sc.defaultParallelism,
+                               budget * len(wave) // max(size, 1)))
+
+
+@contextlib.contextmanager
+def _spark_errors():
+    """Raise a failed Spark job's own error, not py4j's wrapper: the
+    task's cause where PySpark has a class for it, else the job's error.
+    (``unwrap_spark_exception`` turns a job the driver aborted, which has
+    no cause, into a bare AssertionError.)"""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import (UnknownException,
+                                                    convert_exception)
+
+    try:
+        yield
+    except Py4JJavaError as e:
+        error = e.java_exception
+        cause = error.getCause()
+        converted = None if cause is None else convert_exception(cause)
+        if converted is None or isinstance(converted, UnknownException):
+            converted = convert_exception(error)
+        raise converted from None
 
 
 def _values(col, tz: str) -> list:
@@ -207,7 +255,9 @@ def _json_cell(v):
     if isinstance(v, (list, tuple)):
         return [_json_cell(x) for x in v]
     if isinstance(v, dict):
-        return {str(k): _json_cell(x) for k, x in v.items()}
+        # a key by its wire form, so a row key reads the same from a
+        # tuple (Arrow) or a Row, and varbinary from bytes or bytearray
+        return {str(_json_cell(k)): _json_cell(x) for k, x in v.items()}
     if hasattr(v, "asDict"):  # Row (struct): positional list like the client
         return [_json_cell(x) for x in v]
     return str(v)

@@ -797,6 +797,9 @@ _WIRE_TYPES = {
     "array_row": "ARRAY[ROW(n_nationkey, 'a'), NULL]",
     "map_array": "MAP(ARRAY['k', 'z'], "
                  "ARRAY[ARRAY[CAST(n_nationkey AS BIGINT), NULL], NULL])",
+    # keys a Row and a tuple, bytearray and bytes, would print apart
+    "map_row_key": "MAP(ARRAY[ROW(n_nationkey, 'a')], ARRAY[1])",
+    "map_varbinary_key": "MAP(ARRAY[to_utf8(n_name)], ARRAY[n_nationkey])",
 }
 
 
@@ -821,6 +824,8 @@ def test_arrow_reader_matches_row_path_on_the_wire(server, monkeypatch):
     assert by_name["timestamp"] == "2020-01-02 03:04:05.678"
     assert by_name["row"] == [1, "NATION_1"]
     assert by_name["map_array"] == {"k": [1, None], "z": None}
+    assert by_name["map_row_key"] == {"[1, 'a']": 1}
+    assert by_name["map_varbinary_key"] == {"TkFUSU9OXzE=": 1}
     assert set(arrow["data"][0][1:]) == {None}
 
 
@@ -829,7 +834,8 @@ def test_arrow_reader_matches_row_path_on_the_wire(server, monkeypatch):
     ("named_struct('a', n_nationkey, 'a', 2)", [[[1, 2]]]),
     # a variant's Row value prints as its JSON text
     ("parse_json('{\"a\":1}')", [['{"a":1}']]),
-    # no Arrow type: the Row path answers (it cannot yet convert the value)
+    # no Arrow type; only the branch is checked, since the Row path
+    # cannot yet convert the value either
     ("INTERVAL '1-2' YEAR TO MONTH", None),
 ])
 def test_schema_arrow_rejects_takes_row_path(server, monkeypatch, expr, data):
@@ -844,8 +850,6 @@ def test_schema_arrow_rejects_takes_row_path(server, monkeypatch, expr, data):
     assert served == []
     if data is not None:
         assert res["error"] is None and res["data"] == data
-    else:
-        assert "YearMonthIntervalType.fromInternal" in res["error"]["message"]
 
 
 @pytest.fixture
@@ -923,3 +927,64 @@ def test_runtime_failure_answers_with_spark_message(server):
     res = _post(server, "SELECT raise_error('boom') AS c FROM nation")
     assert res["stats"]["state"] == "FAILED"
     assert res["error"]["message"].startswith("[USER_RAISED_EXCEPTION] boom")
+
+
+# runs in its own Spark session: spark.driver.maxResultSize is fixed when
+# the session starts.  Each row holds ~110 bytes of Arrow data.
+_RESULT_CAP_SCRIPT = r"""
+import json, sys
+from pyspark.sql import SparkSession
+from facebook_presto_spark.server import result_rows
+
+spark = (SparkSession.builder.master("local[4]")
+         .config("spark.driver.memory", "512m")
+         .config("spark.driver.maxResultSize", "1m")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+tracker = spark.sparkContext.statusTracker()
+out = {}
+for name, rows, parts in [("big", 3000, 12), ("small", 1200, 12), ("over", 15000, 1)]:
+    df = spark.range(0, rows * parts, 1, parts).selectExpr("id", "repeat('x', 100) AS s")
+    before = set(tracker.getJobIdsForGroup(None))
+    try:
+        ids = [r[0] for r in result_rows(df)]
+        error = None
+    except Exception as e:
+        ids, error = None, str(e)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sorted(set(tracker.getJobIdsForGroup(None)) - before)
+    out[name] = {"in_order": ids == list(range(rows * parts)), "error": error,
+                 "jobs": [tracker.getJobInfo(j).status for j in jobs]}
+print(json.dumps(out))
+"""
+
+
+def test_arrow_reader_waves_fit_max_result_size():
+    """A wave is bounded by bytes as well as partitions: in a session
+    whose ``spark.driver.maxResultSize`` is 1 MiB (4 cores), waves after
+    the first hold as many partitions as fit half the cap, a first wave
+    over the cap is read again one partition per job, and only a single
+    partition over the cap fails, naming the cap."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", _RESULT_CAP_SCRIPT], capture_output=True,
+        text=True, timeout=600, cwd=root,
+        env={**os.environ, "PYTHONPATH": root})
+    assert done.returncode == 0, done.stderr[-3000:]
+    out = json.loads(done.stdout.strip().splitlines()[-1])
+    # 12 partitions of ~330 KB: 4 (~1.3 MB) abort, then one per job
+    assert out["big"]["in_order"], out["big"]["error"]
+    assert out["big"]["jobs"] == ["FAILED"] + ["SUCCEEDED"] * 12
+    # 12 partitions of ~130 KB: 4, then 3 per job (~400 KB <= 512 KB)
+    assert out["small"]["in_order"], out["small"]["error"]
+    assert out["small"]["jobs"] == ["SUCCEEDED"] * 4
+    # one partition of ~1.6 MB cannot be split
+    assert out["over"]["jobs"] == ["FAILED"]
+    assert out["over"]["error"].startswith(
+        "org.apache.spark.SparkException: Job aborted due to stage failure: "
+        "Total size of serialized results")
+    assert "spark.driver.maxResultSize" in out["over"]["error"]

@@ -863,7 +863,7 @@ class JmxCatalog:
     def read_current(self, table: str) -> DataFrame:
         cols, types, rows = self._snapshot(table)
         ddl = ", ".join(f"`{c}` {t}" for c, t in zip(cols, types))
-        return self.spark.createDataFrame(rows, ddl)
+        return local_dataframe(self.spark, rows, ddl)
 
     # -- history (JmxPeriodicSampler / JmxHistoricalData) --------------------
 
@@ -909,8 +909,10 @@ class JmxCatalog:
             rows: list = []
         else:
             _ts, cols, types, _r = entries[-1]
+            # aware instants: Arrow would read a naive datetime as UTC,
+            # not as the local wall-clock fromtimestamp(ts) names
             rows = [
-                [dt.datetime.fromtimestamp(ts)] + row
+                [dt.datetime.fromtimestamp(ts, dt.timezone.utc)] + row
                 for ts, _c, _t, dump_rows in entries
                 for row in dump_rows
             ]
@@ -918,7 +920,7 @@ class JmxCatalog:
             ["`timestamp` timestamp"]
             + [f"`{c}` {t}" for c, t in zip(cols, types)]
         )
-        return self.spark.createDataFrame(rows, ddl)
+        return local_dataframe(self.spark, rows, ddl)
 
 
 # ---------------------------------------------------------------------------
@@ -987,10 +989,6 @@ def parse_columns(text: str) -> list:
     return cols
 
 
-def _rows(spark: SparkSession, n: int) -> DataFrame:
-    return spark.createDataFrame([(n,)], "rows bigint")
-
-
 # -- statement handlers (engine._HANDLERS routes memory/blackhole/jmx/tpch
 # statements here) -----------------------------------------------------------
 
@@ -1056,7 +1054,7 @@ def create_table_as(engine, stmt) -> DataFrame:
     else:
         n = get_catalogs(engine.spark).blackhole.create_from_query(
             stmt.schema, stmt.table, df, props, if_not_exists)
-    return _rows(engine.spark, n)
+    return engine.row_count(n)
 
 
 def create_table(engine, stmt) -> DataFrame:
@@ -1070,7 +1068,7 @@ def create_table(engine, stmt) -> DataFrame:
         if props:
             raise ValueError("memory connector tables take no properties")
         ddl = ", ".join(f"`{n}` {st}" for n, _b, st, _l in columns)
-        empty = engine.spark.createDataFrame([], ddl)
+        empty = local_dataframe(engine.spark, [], ddl)
         get_catalogs(engine.spark).memory.create(
             stmt.schema, stmt.table, empty, if_not_exists)
     return engine.ok()
@@ -1099,7 +1097,7 @@ def insert(engine, stmt) -> DataFrame:
         n = cats.memory.insert(schema, table, df)
     else:
         n = cats.blackhole.write_rowcount(schema, table, df)
-    return _rows(spark, n)
+    return engine.row_count(n)
 
 
 def resolve(engine, refs) -> list[str]:

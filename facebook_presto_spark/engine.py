@@ -332,6 +332,13 @@ class PrestoSparkEngine:
             self._ok = local_dataframe(self.spark, [], "ok boolean")
         return self._ok
 
+    def row_count(self, n: int) -> DataFrame:
+        """The result of a write (CTAS, INSERT, DELETE): one ``rows
+        bigint`` cell holding ``n``, the shape ``server._results`` reads
+        ``updateCount`` from.  A local relation, so reading the count
+        launches no Spark job."""
+        return local_dataframe(self.spark, [(n,)], "rows bigint")
+
     def sql(self, presto_sql: str,
             entry: systemtables.QueryEntry | None = None) -> DataFrame:
         """Run Presto-dialect SQL; returns a lazy DataFrame.
@@ -923,7 +930,8 @@ _HANDLERS = {
     "create_view": _E._create_view,
     "drop_view": _E._drop_view,
     "show_stats": {"hive": _E._show_stats_hive, None: _E._show_stats},
-    "show_schemas": dict.fromkeys(("hive", "tpch"), _E._show_schemas),
+    "show_schemas": {**dict.fromkeys(("hive", "tpch"), _E._show_schemas),
+                     None: infoschema.show_schemas},
     "show_tables": {**dict.fromkeys(("hive", "memory", "example"), _E._show_tables),
                     **dict.fromkeys(("jmx", "tpch"), connectors.show_tables),
                     "information_schema": infoschema.show_tables},

@@ -34,11 +34,20 @@ star-schema case where the partition filter only exists on a joined
 dimension (dim filter → broadcast → fact directory skip).  Writes use
 dynamic partitioning, so INSERT cost is proportional to the partitions
 touched, never table size.
+
+``HiveCatalog`` owns the partition decision: it lists a table's partition
+columns (``partition_columns``) and partitions (``partitions``, the only
+``SHOW PARTITIONS`` reader), ``partition_values`` decodes a ``k=v/k2=v2``
+partition name and ``partition_spec`` renders the ``ADD/DROP PARTITION``
+spec of one partition.  DELETE, ``"t$partitions"``, SHOW STATS, the
+``create_empty_partition`` procedure and the transaction undo log all
+go through them.
 """
 
 from __future__ import annotations
 
 import threading
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +59,7 @@ from facebook_presto_spark.connectors import (
     parse_props,
 )
 from facebook_presto_spark.session import local_dataframe
+from facebook_presto_spark.sqlfront import translate
 from facebook_presto_spark.statements import column_names, split_with_data
 
 _FORMATS = {
@@ -66,6 +76,31 @@ HIDDEN_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 def _strip(name: str) -> str:
     return name.strip().strip('"').lower()
+
+
+def partition_values(name: str, columns: list[str]) -> tuple:
+    """The values of the partition named ``k=v/k2=v2``, in ``columns``
+    order.  Names carry Hive's directory escaping (%XX for quotes,
+    spaces, '/', ...), and ``__HIVE_DEFAULT_PARTITION__`` is NULL."""
+    values = {}
+    for piece in name.split("/"):
+        k, eq, v = piece.partition("=")
+        if eq:
+            values[k] = None if v == HIDDEN_NULL_PARTITION else unquote(v)
+    return tuple(values.get(c) for c in columns)
+
+
+def partition_spec(columns: list[str], values) -> str:
+    """The ``ALTER TABLE … ADD/DROP PARTITION (<spec>)`` spec of one
+    partition.  Spark's lexer reads backslash escapes inside string
+    literals, so each value is double-quoted with ``\\`` and ``"``
+    escaped; a quote or backslash cannot break or reshape the spec.
+    NULL is ``__HIVE_DEFAULT_PARTITION__``."""
+    def lit(value) -> str:
+        s = HIDDEN_NULL_PARTITION if value is None else str(value)
+        return '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+    return ", ".join(f"`{c}` = {lit(v)}" for c, v in zip(columns, values))
 
 
 class HiveCatalog:
@@ -245,7 +280,7 @@ class HiveCatalog:
             self.table_props[(schema, table)] = dict(props)
             return
         ddl = ", ".join(f"`{n}` {st}" for n, _b, st, _l in columns)
-        empty = self.spark.createDataFrame([], ddl)
+        empty = local_dataframe(self.spark, [], ddl)
         writer, _parts = self._writer(empty, props)
         self._clear_orphan_location(schema, table)
         writer.mode("overwrite").saveAsTable(self.qualified(schema, table))
@@ -303,13 +338,7 @@ class HiveCatalog:
             raise ValueError(
                 "Hive table rename across schemas is not supported here"
             )
-        part_cols = [
-            c.name
-            for c in spark_catalog.list_columns(
-                self.spark, self.qualified(schema, table)
-            )
-            if c.is_partition
-        ]
+        part_cols = self.partition_columns(schema, table)
         self.spark.sql(
             f"ALTER TABLE {self.qualified(schema, table)} "
             f"RENAME TO {self.qualified(new_schema, new_table)}"
@@ -334,6 +363,23 @@ class HiveCatalog:
         return spark_catalog.list_columns(
             self.spark, self.qualified(schema, table)
         )
+
+    def partition_columns(self, schema: str, table: str) -> list[str]:
+        """The table's partition columns, in partition order."""
+        return [c.name for c in self._columns(schema, table) if c.is_partition]
+
+    def partitions(self, schema: str, table: str) -> list[tuple]:
+        """Every partition's values (``partition_values``) in
+        ``partition_columns`` order; [] for an unpartitioned table."""
+        part_cols = self.partition_columns(schema, table)
+        if not part_cols:
+            return []
+        return [
+            partition_values(r["partition"], part_cols)
+            for r in self.spark.sql(
+                f"SHOW PARTITIONS {self.qualified(schema, table)}"
+            ).collect()
+        ]
 
     def add_column(self, schema: str, table: str, col: str,
                    presto_type: str) -> None:
@@ -395,9 +441,7 @@ class HiveCatalog:
         table_props is in-memory)."""
         props = dict(self.table_props.get((schema, table), {}))
         if "partitioned_by" not in props:
-            parts = [
-                c.name for c in self._columns(schema, table) if c.is_partition
-            ]
+            parts = self.partition_columns(schema, table)
             if parts:
                 props["partitioned_by"] = parts
         if "bucketed_by" not in props:
@@ -464,13 +508,9 @@ class HiveCatalog:
 
         import pyarrow.parquet as pq
 
-        from urllib.parse import unquote
-
         loc = self._describe_extended(schema, table).get("Location", "")
         loc = loc.removeprefix("file:")
-        part_cols = [
-            c.name for c in self._columns(schema, table) if c.is_partition
-        ]
+        part_cols = self.partition_columns(schema, table)
         per_part: dict[tuple, int] = {}
         total = 0
         for root, _dirs, files in os.walk(loc):
@@ -482,15 +522,7 @@ class HiveCatalog:
                     ).metadata.num_rows
             if not n:
                 continue
-            rel = os.path.relpath(root, loc)
-            values: dict[str, str | None] = {}
-            for piece in rel.split(os.sep):
-                k, eq, v = piece.partition("=")
-                if eq:
-                    values[k] = (
-                        None if v == HIDDEN_NULL_PARTITION else unquote(v)
-                    )
-            key = tuple(values.get(c) for c in part_cols)
+            key = partition_values(os.path.relpath(root, loc), part_cols)
             per_part[key] = per_part.get(key, 0) + n
             total += n
         dtypes = {
@@ -538,14 +570,12 @@ class HiveCatalog:
         data — and matching partitions are dropped as directories:
         at 100 TB the operation is proportional to the partition COUNT,
         not the data size (the returned row count is a partition-pruned
-        count over only the dropped directories)."""
-        if not self._exists(schema, table):
-            raise ValueError(f"Table hive.{schema}.{table} does not exist")
+        count over only the dropped directories).  ``pred`` is Presto
+        text: it is translated like any other statement and picks the
+        victims from the ``"t$partitions"`` local relation, with no Spark
+        job."""
         qualified = self.qualified(schema, table)
-        part_cols = [
-            c.name for c in spark_catalog.list_columns(self.spark, qualified)
-            if c.is_partition
-        ]
+        part_cols = self.partition_columns(schema, table)
         if pred is None:
             n = self.spark.table(qualified).count()
             self.spark.sql(f"TRUNCATE TABLE {qualified}")
@@ -568,7 +598,9 @@ class HiveCatalog:
                 "This connector only supports delete where one or more "
                 "partitions are deleted entirely"
             )
-        victims = self.partitions_table(schema, table).filter(pred).collect()
+        victims = self.spark.sql(translate(
+            f"SELECT * FROM {self.partitions_view(schema, table)} WHERE {pred}"
+        )).collect()
         if not victims:
             return 0
         # partition-pruned count of the rows being dropped (reads only
@@ -584,57 +616,37 @@ class HiveCatalog:
             cond = this if cond is None else (cond | this)
         n = self.spark.table(qualified).filter(cond).count()
         for v in victims:
-            # escape partition values: a value containing a quote or
-            # backslash must not break (or reshape) the DROP PARTITION
-            # spec.  Spark's lexer uses backslash escapes inside string
-            # literals, so double-quote the literal and escape \ and "
-            def _lit(value) -> str:
-                s = str(value) if value is not None else HIDDEN_NULL_PARTITION
-                return '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"'
-
-            spec = ", ".join(f"`{c}` = {_lit(v[c])}" for c in part_cols)
-            self.spark.sql(
-                f"ALTER TABLE {qualified} DROP PARTITION ({spec})"
-            )
+            spec = partition_spec(part_cols, [v[c] for c in part_cols])
+            self.spark.sql(f"ALTER TABLE {qualified} DROP PARTITION ({spec})")
         return n
 
     # -- $partitions (HiveMetadata.java:299-360) -------------------------
 
     def partitions_table(self, schema: str, table: str) -> DataFrame:
-        """One row per partition; columns = the typed partition keys."""
-        if not self._exists(schema, table):
-            raise ValueError(f"Table hive.{schema}.{table} does not exist")
-        qualified = self.qualified(schema, table)
-        part_cols = [
-            c.name for c in spark_catalog.list_columns(self.spark, qualified)
-            if c.is_partition
-        ]
-        if not part_cols:
+        """One row per partition; columns = the typed partition keys.
+
+        A local relation of the decoded values, cast to the keys' types:
+        the casts fold into it, so the plan roots at a
+        ``LocalTableScanExec`` and reading it runs no Spark job."""
+        keys = [c for c in self._columns(schema, table) if c.is_partition]
+        if not keys:
             raise ValueError(
                 f"Table hive.{schema}.{table} does not have partition columns"
             )
-        dtypes = {
-            f.name: f.dataType
-            for f in self.spark.table(qualified).schema.fields
-        }
-        from urllib.parse import unquote
+        strings = local_dataframe(
+            self.spark, self.partitions(schema, table),
+            ", ".join(f"`{c.name}` string" for c in keys),
+        )
+        return strings.select(
+            *[F.col(c.name).cast(c.data_type).alias(c.name) for c in keys]
+        )
 
-        rows = []
-        for r in self.spark.sql(f"SHOW PARTITIONS {qualified}").collect():
-            values = {}
-            for piece in r["partition"].split("/"):
-                k, _eq, v = piece.partition("=")
-                # SHOW PARTITIONS reports the Hive directory escaping
-                # (%XX for quotes, spaces, '/', ...); decode back to the
-                # real partition value
-                values[k] = None if v == HIDDEN_NULL_PARTITION else unquote(v)
-            rows.append(tuple(values.get(c) for c in part_cols))
-        str_df = self.spark.createDataFrame(
-            rows, ", ".join(f"`{c}` string" for c in part_cols)
-        )
-        return str_df.select(
-            *[F.col(c).cast(dtypes[c]).alias(c) for c in part_cols]
-        )
+    def partitions_view(self, schema: str, table: str) -> str:
+        """Register ``partitions_table`` as a global temp view, which no
+        table listing shows; returns its qualified name."""
+        view = f"hive_{schema}__{table}__partitions"
+        self.partitions_table(schema, table).createOrReplaceGlobalTempView(view)
+        return f"{self.spark.conf.get('spark.sql.globalTempDatabase')}.{view}"
 
 
 # one catalog per application; created under a lock because
@@ -671,22 +683,20 @@ def alter_column(engine, stmt) -> DataFrame:
 
 
 def delete(engine, stmt) -> DataFrame:
-    spark = engine.spark
-    n = get_catalog(spark).delete(stmt.schema, stmt.table, stmt.body)
-    return spark.createDataFrame([(n,)], "rows bigint")
+    n = get_catalog(engine.spark).delete(stmt.schema, stmt.table, stmt.body)
+    return engine.row_count(n)
 
 
 def create_table_as(engine, stmt) -> DataFrame:
-    spark = engine.spark
     query, no_data = split_with_data(stmt.body)
     df = engine._sql_inner(query)
     if no_data:
         df = df.limit(0)
-    n = get_catalog(spark).create_as(
+    n = get_catalog(engine.spark).create_as(
         stmt.schema, stmt.table, df, parse_props(stmt.props),
         "if_not_exists" in stmt.flags,
     )
-    return spark.createDataFrame([(n,)], "rows bigint")
+    return engine.row_count(n)
 
 
 def create_table(engine, stmt) -> DataFrame:
@@ -698,25 +708,21 @@ def create_table(engine, stmt) -> DataFrame:
 
 
 def insert(engine, stmt) -> DataFrame:
-    spark = engine.spark
     df = engine._sql_inner(stmt.body)
     cols = column_names(stmt.columns) if stmt.columns is not None else None
-    n = get_catalog(spark).insert(stmt.schema, stmt.table, df, cols)
-    return spark.createDataFrame([(n,)], "rows bigint")
+    n = get_catalog(engine.spark).insert(stmt.schema, stmt.table, df, cols)
+    return engine.row_count(n)
 
 
 def resolve(engine, refs) -> list[str]:
     """The session-catalog name of each ``hive.schema.table`` reference
     (``statements.Reference``); a ``"t$partitions"`` system table
-    registers as a temp view just-in-time."""
+    registers as a global temp view just-in-time."""
     cat = get_catalog(engine.spark)
     out = []
     for _hive, schema, table in (ref.parts for ref in refs):
         if table.endswith("$partitions"):
-            table = table[:-len("$partitions")]
-            view = f"hive_{schema}__{table}__partitions"
-            cat.partitions_table(schema, table).createOrReplaceTempView(view)
-            out.append(view)
+            out.append(cat.partitions_view(schema, table[:-len("$partitions")]))
         elif cat._exists(schema, table):
             out.append(cat.qualified(schema, table))
         else:

@@ -84,6 +84,34 @@ def show_tables(engine, stmt) -> DataFrame:
         engine.spark, [(m,) for m in sorted(TABLE_SCHEMAS)], "`Table` string")
 
 
+def show_schemas(engine, stmt) -> DataFrame | None:
+    """SHOW SCHEMAS with no catalog: the session catalog's schemas, as
+    ``schemata`` lists them."""
+    if stmt.name:
+        return None
+    rows = [(schema,) for catalog, schema in
+            _schemata(list_databases(engine.spark)) if catalog == CATALOG_NAME]
+    return local_dataframe(engine.spark, rows, "`Schema` string")
+
+
+def _presto_schema(db: str, catalog_name: str) -> tuple[str, str]:
+    """(catalog, schema) of a session-catalog database: hive-catalog
+    databases present under their Presto names, catalog 'hive' and the
+    schema without the implementation prefix (the reference serves a
+    per-catalog information_schema)."""
+    if db.startswith("hive_"):
+        return "hive", db[len("hive_"):]
+    return catalog_name, db
+
+
+def _schemata(databases: list[str],
+              catalog_name: str = CATALOG_NAME) -> list[tuple[str, str]]:
+    """The ``schemata`` rows; information_schema itself is a schema of
+    the catalog."""
+    return [_presto_schema(d, catalog_name)
+            for d in sorted(set(databases) | {"information_schema"})]
+
+
 def presto_type_name(spark_type: str) -> str:
     """Spark ``simpleString`` → the Presto type name the reference renders
     in information_schema.columns.data_type (StandardTypes.java:18-45)."""
@@ -155,15 +183,6 @@ def refresh(spark: SparkSession, catalog_name: str = CATALOG_NAME,
     members = set(members)
     current_db = spark.catalog.currentDatabase()
     view_defs = view_definitions or {}
-
-    def presto_schema(db: str) -> tuple[str, str]:
-        # hive-catalog databases present under their Presto names:
-        # catalog 'hive', schema without the implementation prefix
-        # (the reference serves a per-catalog information_schema)
-        if db.startswith("hive_"):
-            return "hive", db[len("hive_"):]
-        return catalog_name, db
-
     databases = (
         list_databases(spark) if members & {"schemata", "tables", "columns"}
         else []
@@ -174,14 +193,10 @@ def refresh(spark: SparkSession, catalog_name: str = CATALOG_NAME,
     )
     rows: dict[str, list[tuple]] = {}
     if "schemata" in members:
-        # information_schema itself is a schema of the catalog
-        rows["schemata"] = [
-            presto_schema(d)
-            for d in sorted(set(databases) | {"information_schema"})
-        ]
+        rows["schemata"] = _schemata(databases, catalog_name)
     if "tables" in members:
         rows["tables"] = [
-            (*presto_schema(db), rel.name,
+            (*_presto_schema(db, catalog_name), rel.name,
              "VIEW" if rel.name.lower() in view_defs else "BASE TABLE")
             for db, rel in listed
         ]
@@ -194,7 +209,8 @@ def refresh(spark: SparkSession, catalog_name: str = CATALOG_NAME,
                 continue
             for pos, c in enumerate(cols, start=1):
                 rows["columns"].append((
-                    *presto_schema(db), rel.name, c.name, pos, None,
+                    *_presto_schema(db, catalog_name), rel.name, c.name,
+                    pos, None,
                     "YES" if c.nullable else "NO",
                     presto_type_name(c.data_type), None,
                     # HiveUtil.java:867 — partition keys surface their role

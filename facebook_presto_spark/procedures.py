@@ -32,7 +32,6 @@ arithmetic) evaluates with Presto semantics.
 from __future__ import annotations
 
 import re
-from urllib.parse import unquote
 
 from facebook_presto_spark.sqlfront.tokens import split_text
 
@@ -52,11 +51,9 @@ _KNOWN_CATALOGS = {
 
 def _hive_create_empty_partition(engine, args: dict) -> None:
     """CreateEmptyPartitionProcedure.createEmptyPartition (:88-130)."""
-    from facebook_presto_spark.catalog import list_columns
-    from facebook_presto_spark.hive_catalog import get_catalog
+    from facebook_presto_spark.hive_catalog import get_catalog, partition_spec
 
-    spark = engine.spark
-    cat = get_catalog(spark)
+    cat = get_catalog(engine.spark)
     schema = args["schema_name"]
     table = args["table_name"]
     part_cols = args["partition_columns"]
@@ -68,31 +65,19 @@ def _hive_create_empty_partition(engine, args: dict) -> None:
     if not cat._exists(schema, table):
         # beginInsert → TableNotFoundException text shape
         raise ValueError(f"Table hive.{schema}.{table} does not exist")
-    qualified = cat.qualified(schema, table)
-    actual = [
-        c.name for c in list_columns(spark, qualified) if c.is_partition
-    ]
+    actual = cat.partition_columns(schema, table)
     if list(part_cols) != actual or len(part_vals) != len(actual):
         # CreateEmptyPartitionProcedure.java:98 (INVALID_PROCEDURE_ARGUMENT)
         raise ValueError(
             "input partition column names doesn't match actual partition "
             "column names"
         )
-    existing = set()
-    for r in spark.sql(f"SHOW PARTITIONS {qualified}").collect():
-        vals = []
-        for piece in r["partition"].split("/"):
-            _k, _eq, v = piece.partition("=")
-            vals.append(unquote(v))
-        existing.add(tuple(vals))
-    if tuple(str(v) for v in part_vals) in existing:
+    values = tuple(str(v) for v in part_vals)
+    if values in cat.partitions(schema, table):
         # CreateEmptyPartitionProcedure.java:106 (ALREADY_EXISTS)
         raise ValueError("Partition already exists")
-    spec = ", ".join(
-        "`%s`='%s'" % (c, str(v).replace("'", "\\'"))
-        for c, v in zip(actual, part_vals)
-    )
-    spark.sql(f"ALTER TABLE {qualified} ADD PARTITION ({spec})")
+    engine.spark.sql(f"ALTER TABLE {cat.qualified(schema, table)} "
+                     f"ADD PARTITION ({partition_spec(actual, values)})")
 
 
 # registry: (catalog, schema, procedure) → (ordered argument names, body)

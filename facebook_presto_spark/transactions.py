@@ -318,30 +318,8 @@ def _local_path(uri: str):
     return unquote(p.path)
 
 
-def _partition_specs(spark, qualified: str):
-    """Raw SHOW PARTITIONS strings, or None for unpartitioned tables."""
-    try:
-        return [r["partition"]
-                for r in spark.sql(f"SHOW PARTITIONS {qualified}").collect()]
-    except Exception:
-        return None
-
-
-def _spec_sql(spec: str) -> str:
-    """'k=v/k2=v2' (Hive directory escaping) → backtick-quoted partition
-    spec literal for ALTER TABLE ADD/DROP PARTITION."""
-    from urllib.parse import unquote
-
-    parts = []
-    for piece in spec.split("/"):
-        k, _eq, v = piece.partition("=")
-        val = unquote(v).replace("\\", "\\\\").replace('"', '\\"')
-        parts.append(f'`{k}` = "{val}"')
-    return ", ".join(parts)
-
-
-def _retain(spark, qualified: str, info: TransactionInfo):
-    """Hard-link every current data file of ``qualified`` into a
+def _retain(cat, schema: str, table: str, info: TransactionInfo):
+    """Hard-link every current data file of the hive table into a
     .txn_undo staging dir (recorded on ``info`` for cleanup) and return
     the function that restores those files and re-registers the current
     partitions.  Same-filesystem links are O(1) per file; cross-device
@@ -349,7 +327,11 @@ def _retain(spark, qualified: str, info: TransactionInfo):
     import os
     import uuid as _uuid
 
-    parts = _partition_specs(spark, qualified)
+    from facebook_presto_spark.hive_catalog import partition_spec
+
+    spark, qualified = cat.spark, cat.qualified(schema, table)
+    part_cols = cat.partition_columns(schema, table)
+    parts = cat.partitions(schema, table)
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     wh = _local_path(warehouse) or warehouse
     bdir = os.path.join(wh, ".txn_undo", _uuid.uuid4().hex)
@@ -368,11 +350,11 @@ def _retain(spark, qualified: str, info: TransactionInfo):
             if not os.path.exists(orig):
                 _link(bk, orig)
         if parts:
-            now = set(_partition_specs(spark, qualified) or [])
-            for spec in parts:
-                if spec not in now:
-                    spark.sql(f"ALTER TABLE {qualified} "
-                              f"ADD PARTITION ({_spec_sql(spec)})")
+            now = set(cat.partitions(schema, table))
+            for values in parts:
+                if values not in now:
+                    spark.sql(f"ALTER TABLE {qualified} ADD PARTITION "
+                              f"({partition_spec(part_cols, values)})")
         spark.catalog.refreshTable(qualified)
 
     return restore
@@ -417,7 +399,7 @@ def _stage_write(engine, stmt, info: TransactionInfo) -> None:
             info.undo.append(undo_mem_insert)
         return
 
-    from facebook_presto_spark.hive_catalog import get_catalog
+    from facebook_presto_spark.hive_catalog import get_catalog, partition_spec
 
     cat = get_catalog(spark)
     if op.startswith("create_table"):
@@ -429,9 +411,10 @@ def _stage_write(engine, stmt, info: TransactionInfo) -> None:
     qualified = cat.qualified(schema, table)
     if op == "delete":
         # retain the current files via hard links
-        info.undo.append(_retain(spark, qualified, info))
+        info.undo.append(_retain(cat, schema, table, info))
         return
-    parts_before = _partition_specs(spark, qualified)
+    part_cols = cat.partition_columns(schema, table)
+    parts_before = set(cat.partitions(schema, table))
     files_before = set(spark.table(qualified).inputFiles())
 
     def undo_insert():
@@ -442,15 +425,9 @@ def _stage_write(engine, stmt, info: TransactionInfo) -> None:
             path = _local_path(uri)
             if path and os.path.exists(path):
                 os.remove(path)
-        if parts_before is not None:
-            added = set(_partition_specs(spark, qualified) or []) - set(
-                parts_before
-            )
-            for spec in added:
-                spark.sql(
-                    f"ALTER TABLE {qualified} "
-                    f"DROP PARTITION ({_spec_sql(spec)})"
-                )
+        for values in set(cat.partitions(schema, table)) - parts_before:
+            spark.sql(f"ALTER TABLE {qualified} DROP PARTITION "
+                      f"({partition_spec(part_cols, values)})")
         spark.catalog.refreshTable(qualified)
 
     info.undo.append(undo_insert)
@@ -486,10 +463,9 @@ def _snapshot_hive_table(engine, schema: str, table: str,
     from facebook_presto_spark.hive_catalog import get_catalog
 
     cat = get_catalog(spark)
-    qualified = cat.qualified(schema, table)
     create_sql = engine._sql_inner(
         f"SHOW CREATE TABLE hive.{schema}.{table}").collect()[0][0]
-    restore = _retain(spark, qualified, info)
+    restore = _retain(cat, schema, table, info)
 
     def undo():
         get_catalog(spark).drop(schema, table, if_exists=True)

@@ -439,6 +439,24 @@ def test_partition_delete_quoted_value(eng, spark):
     assert [r["name"] for r in left] == ["plain"]
 
 
+def test_partition_delete_backslash_value(eng):
+    """A backslash in the DELETE predicate is a plain character, as in
+    every Presto string literal: the predicate is translated before it
+    picks the victim partitions."""
+    eng.sql("CREATE SCHEMA IF NOT EXISTS hive.web")
+    eng.sql("CREATE TABLE hive.web.bs_p (v bigint, k varchar) "
+            "WITH (partitioned_by = ARRAY['k'])")
+    eng.sql("INSERT INTO hive.web.bs_p VALUES (1, 'ab'), (2, 'a\\b')")
+    n = eng.sql(
+        "DELETE FROM hive.web.bs_p WHERE k = 'a\\b'").collect()[0]["rows"]
+    assert n == 1
+    left = eng.sql('SELECT k FROM hive.web."bs_p$partitions"').collect()
+    assert [r["k"] for r in left] == ["ab"]
+    # the victims' "t$partitions" relation is listed as no table
+    assert not [r for r in eng.sql("SHOW TABLES").collect()
+                if r[1].endswith("__partitions")]
+
+
 def test_bucketed_tables_colocated_join(eng):
     """bucketed_by/bucket_count through the hive SQL path: two tables
     bucketed on the join key with equal counts sort-merge-join with no
@@ -701,6 +719,22 @@ def test_call_create_empty_partition_roundtrip(eng):
             """)
     finally:
         eng.sql("ROLLBACK")
+
+
+def test_call_create_empty_partition_quotes_and_backslashes(eng):
+    """create_empty_partition registers each value as given: a quote, a
+    backslash inside the value and one at its end read back unchanged
+    from "t$partitions"."""
+    eng.sql("CREATE SCHEMA IF NOT EXISTS hive.web")
+    eng.sql("CREATE TABLE hive.web.esc_p (v bigint, k varchar) "
+            "WITH (partitioned_by = ARRAY['k'])")
+    values = ["it's", "back\\slash", "tail\\"]
+    for value in values:
+        literal = value.replace("'", "''")
+        eng.sql("CALL hive.system.create_empty_partition("
+                f"'web', 'esc_p', ARRAY['k'], ARRAY['{literal}'])")
+    rows = eng.sql('SELECT k FROM hive.web."esc_p$partitions"').collect()
+    assert sorted(r["k"] for r in rows) == sorted(values)
 
 
 def test_catalog_is_shared_by_concurrent_first_use(spark, monkeypatch):

@@ -78,8 +78,23 @@ def _no_side_schemas_in_listings(eng, spark):
     jdbc = {r.table_schem for r in eng.sql(
         "SELECT table_schem FROM system.jdbc.schemas").collect()}
     for names in (schemas, listed, jdbc):
-        assert not {n for n in names
-                    if n.startswith("system_") or n == "information_schema"}
+        assert not {n for n in names if n.startswith("system_")}
+    # information_schema is a schema SHOW SCHEMAS lists, as schemata and
+    # Presto's SHOW SCHEMAS do; it is no table schema or JDBC schema
+    assert "information_schema" not in listed | jdbc
+
+
+def _show_schemas_agrees_with_schemata(eng, spark):
+    eng.sql("CREATE SCHEMA IF NOT EXISTS hive.listed")
+    try:
+        shown = [r[0] for r in eng.sql("SHOW SCHEMAS").collect()]
+        schemata = [r.schema_name for r in eng.sql(
+            "SELECT schema_name FROM information_schema.schemata "
+            "WHERE catalog_name = 'spark' ORDER BY schema_name").collect()]
+    finally:
+        eng.sql("DROP SCHEMA hive.listed")
+    assert shown == schemata
+    assert "information_schema" in shown and "hive_listed" not in shown
 
 
 @pytest.mark.parametrize("case", [
@@ -89,6 +104,7 @@ def _no_side_schemas_in_listings(eng, spark):
     _view_definition_ending_in_backslash,
     _stable_schemata,
     _no_side_schemas_in_listings,
+    _show_schemas_agrees_with_schemata,
 ], ids=lambda case: case.__name__.strip("_"))
 def test_metadata_tables_are_local_relations(eng, spark, case):
     case(eng, spark)

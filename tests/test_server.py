@@ -140,6 +140,7 @@ def test_large_result_streams_pages(server):
     "SELECT * FROM system.metadata.catalogs",
     "SELECT table_name FROM information_schema.tables WHERE table_schema = 'default'",
     "SHOW TABLES FROM information_schema",
+    "SHOW SCHEMAS",
 ])
 def test_metadata_statement_starts_no_spark_job(server, spark_jobs, sql):
     """Metadata answers from the driver, like the reference's
@@ -685,6 +686,41 @@ def test_write_reports_update_type_and_count(server, catalog):
     finally:
         _post(server, f"DROP TABLE IF EXISTS {t}")
         _post(server, f"DROP SCHEMA IF EXISTS {catalog}.proto_w")
+
+
+def test_hive_write_results_start_no_spark_job(server, spark_jobs):
+    """A hive write's row count and "t$partitions" are local relations:
+    reading them starts no Spark job, and neither does a DELETE whose
+    victim pick over "t$partitions" finds nothing to drop."""
+    from facebook_presto_spark.server import result_rows
+
+    eng = server.engine
+    t = "hive.proto_j.t"
+    eng.sql("CREATE SCHEMA IF NOT EXISTS hive.proto_j")
+    try:
+        for sql, count in [
+            (f"CREATE TABLE {t} WITH (partitioned_by = ARRAY['k']) "
+             "AS SELECT n_nationkey AS v, n_regionkey AS k FROM nation", 25),
+            (f"INSERT INTO {t} SELECT r_regionkey, r_regionkey FROM region", 5),
+            (f"DELETE FROM {t} WHERE k = 4", 6),
+        ]:
+            df = eng.sql(sql)
+            with spark_jobs() as jobs:
+                rows = list(result_rows(df))
+            assert (rows, jobs.count) == ([(count,)], 0), sql
+        for sql, expected in [
+            (f"DELETE FROM {t} WHERE k = 99", [[0]]),
+            ('SELECT * FROM hive.proto_j."t$partitions"',
+             [[0], [1], [2], [3]]),
+        ]:
+            with spark_jobs() as jobs:
+                res = _post(server, sql)
+                rows = _drain(server, res)
+            assert res["error"] is None, res["error"]
+            assert (sorted(rows), jobs.count) == (expected, 0), sql
+    finally:
+        eng.sql(f"DROP TABLE IF EXISTS {t}")
+        eng.sql("DROP SCHEMA IF EXISTS hive.proto_j")
 
 
 def test_query_entry_ends_once_under_contention():

@@ -64,18 +64,7 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from facebook_presto_spark.plans.tpch import _split_staged
-
-    # batch reads go through the multi-file split staging (scan
-    # parallelism, guide §6); the dtype dispatch below keeps working on
-    # either layout because the re-staged copy stores whatever form this
-    # session reads (micro-truncated NTZ, or LONG nanos under the
-    # streaming mirror's nanosAsLong flag — converted identically).
-    # The readStream mirror keeps the ORIGINAL single file (fixed
-    # schema contract), as does the DuckDB oracle.
-    df = spark.read.parquet(
-        _split_staged(spark, os.path.join(sf_dir, "events.parquet"))
-    )
+    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

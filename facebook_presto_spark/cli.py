@@ -40,6 +40,8 @@ import decimal
 import sys
 from typing import Iterable, Iterator
 
+from facebook_presto_spark.server import result_rows, temporal_text
+
 
 def _fmt_value(v, fmt: str) -> str:
     if v is None:
@@ -55,8 +57,8 @@ def _fmt_value(v, fmt: str) -> str:
         return repr(v)
     if isinstance(v, decimal.Decimal):
         return str(v)
-    if isinstance(v, dt.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
+    if isinstance(v, (dt.date, dt.time, dt.timedelta)):
+        return temporal_text(v)
     if isinstance(v, (list, tuple)):
         return "[" + ", ".join(_fmt_value(x, fmt) for x in v) + "]"
     if isinstance(v, dict):
@@ -124,8 +126,6 @@ def run_statement(engine, sql: str, fmt: str, out, max_rows: int | None) -> None
         df.collect()
         out.write("OK\n")
         return
-    from facebook_presto_spark.server import result_rows
-
     rows = result_rows(df)
     if max_rows is not None:
         import itertools

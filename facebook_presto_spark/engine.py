@@ -39,6 +39,7 @@ Usage::
 
 from __future__ import annotations
 
+import copy
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -187,10 +188,11 @@ class PrestoSparkEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         # prepared-statement store (QueryPreparer.java:55-85 keeps these in
-        # the session; one engine instance = one session)
+        # the session): direct callers and the CLI keep theirs across
+        # calls, and a protocol request has its own (``for_request``)
         self._prepared: dict[str, str] = {}
         # table-privilege registry (GrantTask.java / SHOW GRANTS — see
-        # access.py); session-scoped like the prepared statements
+        # access.py), shared by every request's view like the rest below
         from facebook_presto_spark.access import GrantRegistry
 
         self.grants = GrantRegistry()
@@ -203,52 +205,27 @@ class PrestoSparkEngine:
         # MetadataManager.getViews; session-scoped here, like the views)
         self._views: dict[str, str] = {}
         # transaction contexts (StartTransactionTask/CommitTask/
-        # RollbackTask — transactions.py); the CURRENT transaction is
-        # thread-local: one protocol request = one thread = one
-        # header-rebuilt session, like the reference
+        # RollbackTask — transactions.py)
         from facebook_presto_spark.transactions import TransactionManager
 
         self.transactions = TransactionManager()
-        import threading as _threading
-
-        self._txn_tl = _threading.local()
-        # SQL path (SetPathTask / X-Presto-Path) — session state like
-        # the transaction id, thread-local for the protocol server
-        self._path_tl = _threading.local()
+        # the session's current transaction id and SQL path
+        # (SetPathTask / X-Presto-Path), kept like the prepared statements
+        self.transaction: str | None = None
+        self.path = ""
         self._ok: DataFrame | None = None
 
-    def current_path(self) -> str:
-        return getattr(self._path_tl, "value", "") or ""
-
-    def set_current_path(self, path: str) -> None:
-        self._path_tl.value = path
-
-    @property
-    def path_event(self) -> str | None:
-        """The path set by the last SET PATH on this thread — the server
-        reads it to emit X-Presto-Set-Path."""
-        return getattr(self._path_tl, "event", None)
-
-    @path_event.setter
-    def path_event(self, value: str | None) -> None:
-        self._path_tl.event = value
-
-    def current_transaction(self) -> str | None:
-        return getattr(self._txn_tl, "tid", None)
-
-    def set_current_transaction(self, tid: str | None) -> None:
-        self._txn_tl.tid = tid
-
-    @property
-    def txn_event(self) -> tuple | None:
-        """('started'|'cleared', tid) from the last transaction-control
-        statement on this thread — the server reads it to emit
-        X-Presto-Started-Transaction-Id / X-Presto-Clear-Transaction-Id."""
-        return getattr(self._txn_tl, "event", None)
-
-    @txn_event.setter
-    def txn_event(self, value: tuple | None) -> None:
-        self._txn_tl.event = value
+    def for_request(self, transaction: str | None, path: str,
+                    prepared: dict[str, str]) -> "PrestoSparkEngine":
+        """A view of this engine for one protocol request, like the
+        reference's Session rebuilt from the request's headers: its own
+        transaction id, path and prepared statements, and everything
+        else (Spark session, registries, views, the ``ok`` result)
+        shared with the engine."""
+        self.ok()  # built once, so every view shares it
+        view = copy.copy(self)
+        view.transaction, view.path, view._prepared = transaction, path, prepared
+        return view
 
     @classmethod
     def for_dir(cls, sf_dir: str = DEFAULT_SF_DIR, spark: SparkSession | None = None) -> "PrestoSparkEngine":
@@ -436,7 +413,7 @@ class PrestoSparkEngine:
     def _resolve_current_path(self, refs) -> list[str]:
         # current_path (FunctionRegistry session function): the
         # session's raw path string, fixed at translation time
-        return ["'" + self.current_path().replace("'", "''") + "'"] * len(refs)
+        return ["'" + self.path.replace("'", "''") + "'"] * len(refs)
 
     # -- session statements (SetSessionTask / ResetSessionTask / UseTask /
     # SetPathTask) ----------------------------------------------------------
@@ -458,9 +435,9 @@ class PrestoSparkEngine:
 
     def _set_path(self, stmt: Statement) -> DataFrame:
         # SET PATH (SqlBase.g4 setPath → SetPathTask.java): a comma list
-        # of [catalog.]schema elements, kept as session state
-        # (thread-local like the transaction id; the protocol server
-        # round-trips it via X-Presto-Path / X-Presto-Set-Path).
+        # of [catalog.]schema elements, kept as session state (the
+        # protocol server round-trips it via X-Presto-Path /
+        # X-Presto-Set-Path).
         # Function resolution here is a single flat registry, so the
         # path's only observable effect is current_path — same as a
         # reference deployment with no session functions installed.
@@ -468,8 +445,7 @@ class PrestoSparkEngine:
         elem = r'(?:"[^"]+"|\w+)(?:\s*\.\s*(?:"[^"]+"|\w+))?'
         if not re.fullmatch(rf"{elem}(?:\s*,\s*{elem})*", spec):
             raise ValueError(f"mismatched input '{spec}' expecting path")
-        self._path_tl.value = spec
-        self._path_tl.event = spec
+        self.path = spec
         return self.ok()
 
     # -- catalog DDL (the hive and connector catalog objects share these
@@ -934,7 +910,8 @@ _HANDLERS = {
                      None: infoschema.show_schemas},
     "show_tables": {**dict.fromkeys(("hive", "memory", "example"), _E._show_tables),
                     **dict.fromkeys(("jmx", "tpch"), connectors.show_tables),
-                    "information_schema": infoschema.show_tables},
+                    "information_schema": infoschema.show_tables,
+                    None: infoschema.show_session_tables},
     "create_schema": dict.fromkeys(_HIVE_MEMORY, _E._create_schema),
     "drop_schema": dict.fromkeys(_HIVE_MEMORY, _E._drop_schema),
     "rename_schema": {"memory": connectors.rename_schema, None: _E._rename_schema},

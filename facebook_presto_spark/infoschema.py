@@ -84,6 +84,15 @@ def show_tables(engine, stmt) -> DataFrame:
         engine.spark, [(m,) for m in sorted(TABLE_SCHEMAS)], "`Table` string")
 
 
+def show_session_tables(engine, stmt) -> DataFrame | None:
+    """SHOW TABLES with no catalog: the current database's tables and
+    the session's temp views, by name."""
+    if stmt.name:
+        return None
+    rows = [(r.name,) for r in list_tables(engine.spark)]
+    return local_dataframe(engine.spark, rows, "`Table` string")
+
+
 def show_schemas(engine, stmt) -> DataFrame | None:
     """SHOW SCHEMAS with no catalog: the session catalog's schemas, as
     ``schemata`` lists them."""

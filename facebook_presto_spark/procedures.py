@@ -103,7 +103,7 @@ def call(engine, stmt):
     if not (stmt.name and len(stmt.name) <= 3 and args.startswith("(")
             and args.endswith(")")):
         raise ValueError(f"Invalid CALL statement: {stmt.sql.strip()}")
-    if engine.current_transaction() is not None:
+    if engine.transaction is not None:
         # CallTask.java:73 (NOT_SUPPORTED)
         raise ValueError(
             "Procedures cannot be called within a transaction "

@@ -11,8 +11,19 @@ This module serves that protocol over the engine.  Execution is
 synchronous (local Spark session — no cluster scheduler to defer to);
 results page out 1000 rows per response exactly like the reference's
 client loop expects: keep GETting ``nextUri`` until it disappears,
-DELETE cancels.  ``X-Presto-Session: k=v,...`` headers apply the same
-session-property surface ``SET SESSION`` uses (properties.py).
+DELETE cancels.
+
+Each POST runs on a request view of the engine
+(``PrestoSparkEngine.for_request``), as the reference rebuilds a
+``Session`` from each request's headers: the transaction id, SQL path
+and prepared statements the client replays are the view's own, so
+nothing a statement does to them reaches another client.  The response
+headers (a started or cleared transaction, ``X-Presto-Set-Path``, an
+added or deallocated prepared statement) compare the view's state before
+and after the statement.  Session properties (``X-Presto-Session:
+k=v,...``, and the statement's own SET or RESET SESSION) apply to that
+statement only, and SET / RESET SESSION answer ``X-Presto-Set-Session:
+name=value`` / ``X-Presto-Clear-Session: name`` for the client to replay.
 
 Each statement is one ``systemtables.QueryEntry`` in the engine's
 runtime registry, like the reference's protocol ``Query``: the same
@@ -76,8 +87,12 @@ import json
 import math
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import quote, unquote
 
 from facebook_presto_spark.infoschema import presto_type_name
+from facebook_presto_spark.properties import (restore_confs,
+                                               set_session_property,
+                                               snapshot_confs)
 from facebook_presto_spark.statements import classify
 from facebook_presto_spark.systemtables import QueryEntry
 
@@ -233,6 +248,22 @@ def _values(col, tz: str) -> list:
     return [values[a:b] if ok else None for a, b, ok in zip(at, at[1:], valid)]
 
 
+def temporal_text(v) -> str:
+    """The text of a date, time, timestamp or day-time interval value,
+    the same on the wire and in the CLI: milliseconds, as the reference
+    prints them (``SqlTime``, ``SqlTimestamp``, and
+    ``SqlIntervalDayTime.formatMillis``'s ``[-]D HH:MM:SS.mmm``)."""
+    if isinstance(v, dt.timedelta):
+        days, rest = divmod(abs(v), dt.timedelta(days=1))
+        sign = "-" if v <= -dt.timedelta(milliseconds=1) else ""
+        return f"{sign}{days} {temporal_text((dt.datetime.min + rest).time())}"
+    if isinstance(v, dt.datetime):
+        return v.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
+    if isinstance(v, dt.time):
+        return v.isoformat(timespec="milliseconds")
+    return v.isoformat()
+
+
 def _json_cell(v):
     if v is None or isinstance(v, (bool, int, str)):
         return v
@@ -244,12 +275,8 @@ def _json_cell(v):
         return "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
     if isinstance(v, decimal.Decimal):
         return str(v)
-    if isinstance(v, dt.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if isinstance(v, dt.time):
-        return v.isoformat()
+    if isinstance(v, (dt.date, dt.time, dt.timedelta)):
+        return temporal_text(v)
     if isinstance(v, (bytes, bytearray)):
         return base64.b64encode(bytes(v)).decode()
     if isinstance(v, (list, tuple)):
@@ -261,6 +288,31 @@ def _json_cell(v):
     if hasattr(v, "asDict"):  # Row (struct): positional list like the client
         return [_json_cell(x) for x in v]
     return str(v)
+
+
+def _session_headers(stmt, transaction: str | None, view) -> dict[str, str]:
+    """The response headers from which the client updates the session
+    it replays (PrestoHeaders.java), after ``stmt`` ran on ``view``,
+    whose transaction was ``transaction`` before it ran."""
+    out = {}
+    if view.transaction != transaction:
+        if view.transaction is None:
+            out["X-Presto-Clear-Transaction-Id"] = "true"
+        else:
+            out["X-Presto-Started-Transaction-Id"] = view.transaction
+    name = ".".join(stmt.name).lower()
+    if stmt.kind == "set_path":
+        out["X-Presto-Set-Path"] = view.path
+    elif stmt.kind == "set_session":
+        out["X-Presto-Set-Session"] = name + "=" + stmt.body.strip().strip("'\"")
+    elif stmt.kind == "reset_session":
+        out["X-Presto-Clear-Session"] = name
+    elif stmt.kind == "prepare":
+        out["X-Presto-Added-Prepare"] = (
+            quote(name, safe="") + "=" + quote(stmt.body, safe=""))
+    elif stmt.kind == "deallocate":
+        out["X-Presto-Deallocated-Prepare"] = quote(name, safe="")
+    return out
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -335,6 +387,24 @@ class _Handler(BaseHTTPRequestHandler):
             q.finish()
         return out
 
+    def _session_view(self, engine):
+        """The engine's view for this request: the transaction id, SQL
+        path and prepared statements the client replays with every
+        statement (PrestoHeaders.java; StatementClientV1.java:103-110),
+        the way the reference rebuilds its Session from the headers."""
+        transaction = (self.headers.get("X-Presto-Transaction-Id") or "").strip()
+        if transaction.upper() in ("", "NONE"):
+            transaction = None
+        else:
+            engine.transactions.get(transaction)  # raises for unknown ids
+        prepared = {}
+        for pair in (self.headers.get("X-Presto-Prepared-Statement") or "").split(","):
+            name, eq, body = pair.strip().partition("=")
+            if eq:
+                prepared[unquote(name).lower()] = unquote(body)
+        return engine.for_request(
+            transaction, (self.headers.get("X-Presto-Path") or "").strip(), prepared)
+
     # -- protocol ----------------------------------------------------------
 
     def do_POST(self) -> None:
@@ -353,70 +423,25 @@ class _Handler(BaseHTTPRequestHandler):
             source=self.headers.get("X-Presto-Source"),
         )
         stmt = classify(sql)
-        snap = {}
-        reply_headers: dict[str, str] = {}
+        # X-Presto-Session, and the statement's own SET/RESET SESSION,
+        # apply to this statement only: the confs they touch are
+        # restored after it
+        props = [
+            prop.partition("=")
+            for prop in (self.headers.get("X-Presto-Session") or "").split(",")
+            if "=" in prop
+        ]
+        names = [n for n, _, _ in props]
+        if stmt.kind in ("set_session", "reset_session"):
+            names.append(".".join(stmt.name))
+        snap = snapshot_confs(engine.spark, names)
         try:
-            # X-Presto-Prepared-Statement: name=urlencoded-sql, … — the
-            # client replays its prepared statements per request
-            # (StatementClientV1.java:103-110; Session is rebuilt from
-            # headers), so EXECUTE works against a stateless server
-            import urllib.parse as _up
-
-            for pair in (self.headers.get("X-Presto-Prepared-Statement") or "").split(","):
-                name, eq, body64 = pair.strip().partition("=")
-                if eq:
-                    engine._prepared[_up.unquote(name).lower()] = _up.unquote(body64)
-            # echo a registration back (PRESTO_ADDED_PREPARE /
-            # PRESTO_DEALLOCATED_PREPARE), the reference's contract for
-            # client-side statement caches — from the same classification
-            # the engine routes the statement by
-            if stmt.kind in ("prepare", "deallocate"):
-                name = _up.quote(stmt.name[0].lower(), safe="")
-                if stmt.kind == "prepare":
-                    reply_headers["X-Presto-Added-Prepare"] = (
-                        name + "=" + _up.quote(stmt.body, safe=""))
-                else:
-                    reply_headers["X-Presto-Deallocated-Prepare"] = name
-            # X-Presto-Transaction-Id: the client replays its transaction
-            # id per request (PrestoHeaders.java:35; the Session is
-            # rebuilt from headers) — bind it to this request's thread
-            txn_id = (self.headers.get("X-Presto-Transaction-Id") or "").strip()
-            if txn_id and txn_id.upper() != "NONE":
-                engine.transactions.get(txn_id)  # raises for unknown ids
-                engine.set_current_transaction(txn_id)
-            engine.txn_event = None
-            # X-Presto-Path: the client replays its SQL path per request
-            # (PrestoHeaders.java:22); SET PATH answers X-Presto-Set-Path
-            engine.set_current_path(
-                (self.headers.get("X-Presto-Path") or "").strip()
-            )
-            engine.path_event = None
-            props = [
-                prop.partition("=")
-                for prop in (self.headers.get("X-Presto-Session") or "").split(",")
-                if "=" in prop
-            ]
-            if props:
-                from facebook_presto_spark.properties import (
-                    set_session_property, snapshot_confs,
-                )
-
-                # statement-scoped, like the reference (Session built from
-                # headers per request) — snapshot first, restore in finally
-                snap = snapshot_confs(engine.spark, [n for n, _, _ in props])
-                for name, _, value in props:
-                    set_session_property(engine.spark, name.strip(), value.strip())
-            df = engine.sql(sql, entry)
-            ev = engine.txn_event
-            if ev is not None:
-                # PrestoHeaders.java:36-37 — the client adopts/clears its
-                # transaction id from these response headers
-                if ev[0] == "started":
-                    reply_headers["X-Presto-Started-Transaction-Id"] = ev[1]
-                else:
-                    reply_headers["X-Presto-Clear-Transaction-Id"] = "true"
-            if engine.path_event is not None:
-                reply_headers["X-Presto-Set-Path"] = engine.path_event
+            view = self._session_view(engine)
+            for name, _, value in props:
+                set_session_property(engine.spark, name.strip(), value.strip())
+            transaction = view.transaction
+            df = view.sql(sql, entry)
+            reply_headers = _session_headers(stmt, transaction, view)
             # kill_query or a DELETE may have ended it while planning
             if entry.state == "RUNNING":
                 entry.open(
@@ -429,11 +454,7 @@ class _Handler(BaseHTTPRequestHandler):
             entry.fail(str(e))
             reply_headers = {}
         finally:
-            engine.set_current_transaction(None)
-            if snap:
-                from facebook_presto_spark.properties import restore_confs
-
-                restore_confs(engine.spark, snap)
+            restore_confs(engine.spark, snap)
         self._reply(self._results(entry, 0, _UPDATE_TYPES.get(stmt.kind)),
                     headers=reply_headers)
 

@@ -189,17 +189,12 @@ def _parse_modes(text: str) -> tuple[str, bool]:
 
 
 def start(engine, stmt):
-    """START TRANSACTION [modes].
-
-    The current transaction id is engine-session state but thread-local
-    (one protocol request = one thread = one session snapshot, like the
-    reference's header-rebuilt Session)."""
-    if engine.current_transaction() is not None:
+    """START TRANSACTION [modes]: the new id becomes the session's
+    ``engine.transaction``."""
+    if engine.transaction is not None:
         raise ValueError("Nested transactions not supported")
     isolation, read_only = _parse_modes(stmt.body)
-    tid = engine.transactions.begin(isolation, read_only)
-    engine.set_current_transaction(tid)
-    engine.txn_event = ("started", tid)
+    engine.transaction = engine.transactions.begin(isolation, read_only)
     return engine.ok()
 
 
@@ -212,7 +207,7 @@ def rollback(engine, stmt):
 
 
 def _finish(engine, rollback: bool):
-    tid = engine.current_transaction()
+    tid = engine.transaction
     if tid is None:
         # CommitTask.java / RollbackTask.java — NOT_IN_TRANSACTION
         raise ValueError("No transaction in progress")
@@ -250,8 +245,7 @@ def _finish(engine, rollback: bool):
         else:
             _discard_staging(info)
         engine.transactions.end(tid)
-        engine.set_current_transaction(None)
-        engine.txn_event = ("cleared", tid)
+        engine.transaction = None
     if failures:
         msgs = "; ".join(f"{type(e).__name__}: {e}" for e in failures)
         raise RuntimeError(
@@ -266,7 +260,7 @@ def guard(engine, stmt) -> None:
     (InMemoryTransactionManager.java:456) for a write in a READ ONLY
     transaction, activity/written-catalog stamps on the live
     transaction, and the statement's compensating action (``stage``)."""
-    tid = engine.current_transaction()
+    tid = engine.transaction
     if tid is None or stmt.kind in _CONTROL_KINDS:
         return
     info = engine.transactions.get(tid)

@@ -125,7 +125,7 @@ def test_set_path_and_current_path(engine):
         "spark.default, extra_schema"
     with pytest.raises(ValueError, match="expecting path"):
         engine.sql("SET PATH 'not an identifier'")
-    engine.set_current_path("")
+    engine.path = ""
 
 
 def test_call_fails_loudly(engine):

@@ -117,6 +117,20 @@ def test_batch_connector_catalog_session(spark, capsys):
     assert "n\n5\n" in capsys.readouterr().out
 
 
+def test_batch_time_and_interval_text(spark, capsys):
+    """TIME and day-time intervals print in milliseconds, as the
+    reference's SqlTime and SqlIntervalDayTime do, and as the protocol
+    server sends them."""
+    rc = cli.main([
+        "--sf-dir", "/root/testdata/sf0.001",
+        "-e", "SELECT TIME '01:02:03.456' AS t, INTERVAL '1' DAY AS d, "
+              "INTERVAL '-90' SECOND AS s",
+        "--output-format", "CSV",
+    ])
+    assert rc == 0
+    assert capsys.readouterr().out == "01:02:03.456,1 00:00:00.000,-0 00:01:30.000\n"
+
+
 def test_batch_show_catalogs(spark, capsys):
     rc = cli.main([
         "--sf-dir", "/root/testdata/sf0.001",

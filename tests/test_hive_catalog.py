@@ -454,7 +454,7 @@ def test_partition_delete_backslash_value(eng):
     assert [r["k"] for r in left] == ["ab"]
     # the victims' "t$partitions" relation is listed as no table
     assert not [r for r in eng.sql("SHOW TABLES").collect()
-                if r[1].endswith("__partitions")]
+                if r[0].endswith("__partitions")]
 
 
 def test_bucketed_tables_colocated_join(eng):

@@ -240,6 +240,33 @@ def test_session_property_scoped_to_statement(server):
     assert spark_conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_set_and_reset_session_apply_to_their_statement(server):
+    """SET SESSION and RESET SESSION over the protocol change only their
+    own statement's session: the shared conf is as before, and the
+    response tells the client what to replay (X-Presto-Set-Session /
+    X-Presto-Clear-Session)."""
+    spark_conf = server.engine.spark.conf
+    before = spark_conf.get("spark.sql.shuffle.partitions")
+    res, hdr = _post_headers(server, "SET SESSION hash_partition_count = 7", {})
+    assert res["error"] is None
+    assert hdr["X-Presto-Set-Session"] == "hash_partition_count=7"
+    assert spark_conf.get("spark.sql.shuffle.partitions") == before
+    res, hdr = _post_headers(
+        server, "RESET SESSION hash_partition_count",
+        {"X-Presto-Session": "hash_partition_count=7"})
+    assert res["error"] is None
+    assert hdr["X-Presto-Clear-Session"] == "hash_partition_count"
+    assert spark_conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_show_tables_answers_one_table_column(server):
+    """SHOW TABLES with no catalog answers Presto's one ``Table``
+    column, not Spark's namespace, tableName and isTemporary."""
+    res = _post(server, "SHOW TABLES")
+    assert res["columns"] == [{"name": "Table", "type": "varchar"}]
+    assert ["nation"] in _drain(server, res)
+
+
 def test_system_runtime_queries_and_kill(server):
     # a long (multi-page) query stays RUNNING in system.runtime.queries
     # while its pages are outstanding
@@ -372,6 +399,80 @@ def test_prepared_statement_headers(server):
     )
     with urllib.request.urlopen(req) as r:
         assert r.headers.get("X-Presto-Deallocated-Prepare") == "hdr_q"
+
+
+def test_header_prepared_statement_stays_in_its_request(server):
+    """A prepared statement a client replays in its request header
+    serves that request only: a later request without the header, from
+    this client or another, does not find it."""
+    import urllib.parse
+
+    body = urllib.parse.quote(
+        "SELECT n_name FROM nation WHERE n_nationkey = ?", safe="")
+    res, _h = _post_headers(server, "EXECUTE leak_q USING 2",
+                            {"X-Presto-Prepared-Statement": "leak_q=" + body})
+    assert _drain(server, res)[0][0].endswith("_2")
+    res, _h = _post_headers(server, "EXECUTE leak_q USING 2", {})
+    assert res["stats"]["state"] == "FAILED"
+    assert "Prepared statement not found" in res["error"]["message"]
+
+
+def test_prepare_without_header_replay_is_not_kept(server):
+    """PREPARE over the protocol registers the statement with the
+    client (X-Presto-Added-Prepare), not with the server: an EXECUTE
+    that does not replay it finds nothing."""
+    res, hdr = _post_headers(
+        server, "PREPARE noreplay_q FROM SELECT 1 AS x", {})
+    assert res["error"] is None and hdr["X-Presto-Added-Prepare"]
+    res, _h = _post_headers(server, "EXECUTE noreplay_q", {})
+    assert res["stats"]["state"] == "FAILED"
+    assert "Prepared statement not found" in res["error"]["message"]
+
+
+def test_concurrent_requests_see_their_own_session(server, monkeypatch):
+    """Requests in flight at once, each with its own X-Presto-Path and
+    X-Presto-Transaction-Id, each run with their own values."""
+    import sys
+    import threading
+
+    from facebook_presto_spark import engine as engine_mod
+
+    n = 6  # more clients than cores
+    tids = [_post_headers(server, "START TRANSACTION", {})[1]
+            ["X-Presto-Started-Transaction-Id"] for _ in range(n)]
+    resolve = engine_mod._RESOLVERS["current_path"]
+    all_in_flight = threading.Barrier(n, timeout=60)
+    seen = {}
+
+    def spy(eng, refs):
+        seen[eng.path] = eng.transaction
+        all_in_flight.wait()
+        return resolve(eng, refs)
+
+    monkeypatch.setitem(engine_mod._RESOLVERS, "current_path", spy)
+    answers = {}
+
+    def client(i):
+        res, _h = _post_headers(
+            server, "SELECT current_path AS p",
+            {"X-Presto-Path": f"memory.s{i}", "X-Presto-Transaction-Id": tids[i]})
+        answers[i] = _drain(server, res)
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+        for tid in tids:
+            _post_headers(server, "ROLLBACK", {"X-Presto-Transaction-Id": tid})
+    assert not any(t.is_alive() for t in threads)
+    assert answers == {i: [[f"memory.s{i}"]] for i in range(n)}
+    assert seen == {f"memory.s{i}": tids[i] for i in range(n)}
 
 
 def test_system_jdbc_metadata(server):
@@ -858,6 +959,8 @@ def test_arrow_reader_matches_row_path_on_the_wire(server, monkeypatch):
     assert arrow["data"] == rows["data"] and len(arrow["data"]) == 3
     by_name = dict(zip((c["name"] for c in arrow["columns"]), arrow["data"][1]))
     assert by_name["timestamp"] == "2020-01-02 03:04:05.678"
+    assert by_name["time"] == "01:02:03.456"
+    assert by_name["interval"] == "1 02:03:04.500"
     assert by_name["row"] == [1, "NATION_1"]
     assert by_name["map_array"] == {"k": [1, None], "z": None}
     assert by_name["map_row_key"] == {"[1, 'a']": 1}

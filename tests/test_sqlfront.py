@@ -376,7 +376,7 @@ def test_e2e_aggregates(engine, duck):
 
 def test_e2e_show_describe_passthrough(engine):
     # Presto metadata statements (ShowTablesTask etc.) share Spark's syntax
-    tables = {r[1] for r in engine.sql("SHOW TABLES").collect()}
+    tables = {r[0] for r in engine.sql("SHOW TABLES").collect()}
     assert "nation" in tables and "orders" in tables
     cols = {r[0] for r in engine.sql("SHOW COLUMNS FROM nation").collect()}
     assert "n_nationkey" in cols

@@ -13,7 +13,7 @@ import time
 
 import pytest
 
-from facebook_presto_spark import access, connectors, engine, hive_catalog
+from facebook_presto_spark import access, connectors, engine, hive_catalog, infoschema
 from facebook_presto_spark.sqlfront import translate
 from facebook_presto_spark.statements import (
     REFERENCE_CATALOGS,
@@ -139,6 +139,7 @@ E = engine.PrestoSparkEngine
     ("SHOW TABLES FROM hive.s", E._show_tables),
     ("SHOW TABLES FROM example", E._show_tables),
     ("SHOW TABLES FROM tpch.tiny", connectors.show_tables),
+    ("SHOW TABLES", infoschema.show_session_tables),
     ("SHOW SCHEMAS FROM tpch", E._show_schemas),
     ("ALTER TABLE hive.s.t RENAME TO hive.s.u", E._rename_table),
     ("ALTER TABLE blackhole.s.t RENAME TO u", E._alter_table),
@@ -154,7 +155,6 @@ def test_catalog_routing(sql, handler):
     ("(SELECT 1)", "query"),
     ("CREATE TABLE t AS SELECT 1", "create_table_as"),  # session catalog
     ("DROP TABLE tpch.tiny.nation", "drop_table"),
-    ("SHOW TABLES", "show_tables"),
     ("DESCRIBE nation", "other"),
     ("UPDATE t SET x = 1", "other"),
     ("SHOW SESSION LIKE 'x'", "other"),  # not the whole head

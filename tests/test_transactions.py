@@ -414,7 +414,7 @@ def test_failing_compensation_runs_remaining_undos_and_keeps_retention(
     eng.sql("INSERT INTO hive.txn.t_comp_a SELECT n_nationkey FROM nation")
     # DROP stages a hard-link snapshot → backup_dirs retention exists
     eng.sql("DROP TABLE hive.txn.t_comp_b")
-    tid = eng.current_transaction()
+    tid = eng.transaction
     info = eng.transactions.get(tid)
     assert len(info.undo) == 2 and info.backup_dirs
     retention = list(info.backup_dirs)
@@ -429,7 +429,7 @@ def test_failing_compensation_runs_remaining_undos_and_keeps_retention(
     with pytest.raises(RuntimeError, match="compensating action"):
         eng.sql("ROLLBACK")
     # terminal: the session is out of the transaction
-    assert eng.current_transaction() is None
+    assert eng.transaction is None
     # both undos around the failure still ran
     for t in ("t_comp_a", "t_comp_b"):
         assert eng.sql(
